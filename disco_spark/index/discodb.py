@@ -10,17 +10,16 @@ Spark design (SURVEY §4 "custom work" item 2):
   bucketed+sorted Parquet table (``save_index``) so equality lookups
   prune buckets and per-key scans are sorted runs.
 - ``Q`` parses the reference query language — ``&`` AND, ``|`` OR,
-  ``~`` NOT, parentheses, bare literals — into an AST compiled to
-  DataFrame set algebra over *value sets*: a literal selects the value
-  set of its key; AND=intersect, OR=union, NOT=complement against the
-  index's full value set (discodb query semantics: values whose key
-  sets satisfy the clause).
-- every operation is a semi-join/aggregate — no driver-side iteration,
-  so a 100 TB index queries the same way a 1 GB one does.
+  ``~`` NOT, parentheses, bare literals — into an AST that ``query``
+  compiles to one scan, one per-value aggregate and one filter
+  (discodb query semantics: values whose key sets satisfy the clause).
+- every operation is a scan/aggregate — no driver-side iteration, so a
+  100 TB index queries the same way a 1 GB one does.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,6 +126,17 @@ class Q:
         return Lit(toks[0]), toks[1:]
 
 
+def _fold(node, leaf, neg):
+    """Evaluate an AST over Spark Columns or Python bools: ``leaf(term)``
+    for literals, ``neg`` for NOT, ``&``/``|`` for AND/OR."""
+    if isinstance(node, Lit):
+        return leaf(node.term)
+    if isinstance(node, Not):
+        return neg(_fold(node.child, leaf, neg))
+    left, right = _fold(node.left, leaf, neg), _fold(node.right, leaf, neg)
+    return left & right if isinstance(node, And) else left | right
+
+
 # --------------------------------------------------------------------------
 # Index
 # --------------------------------------------------------------------------
@@ -144,7 +154,17 @@ class InvertedIndex:
 
     def __init__(self, df: DataFrame, unique_items: bool = True):
         self.df = df.select(F.col("key"), F.col("value"))
-        self.unique_items = unique_items
+        self._unique_items = unique_items
+
+    @property
+    def unique_items(self) -> bool:
+        """A loaded index reads the flag from its table on first use; CNF
+        queries never need it, so ``load`` does not."""
+        if self._unique_items is None:
+            rows = self.df.sparkSession.sql(f"SHOW TBLPROPERTIES {self._table}").collect()
+            props = {r["key"]: r["value"] for r in rows}
+            self._unique_items = props.get("disco.unique_items", "true") == "true"
+        return self._unique_items
 
     # -- construction -------------------------------------------------
     @staticmethod
@@ -192,12 +212,9 @@ class InvertedIndex:
 
     @staticmethod
     def load(spark: SparkSession, table: str) -> "InvertedIndex":
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        }
-        unique = props.get("disco.unique_items", "true") == "true"
-        return InvertedIndex(spark.table(table), unique_items=unique)
+        idx = InvertedIndex(spark.table(table))
+        idx._unique_items, idx._table = None, table  # see unique_items
+        return idx
 
     # -- enumeration ops (scheme_discodb.py:20-25 method dispatch) -------
     def keys(self) -> DataFrame:
@@ -227,25 +244,22 @@ class InvertedIndex:
 
     # -- boolean query ---------------------------------------------------
     def query(self, q: "Q | str") -> DataFrame:
-        """Values whose key sets satisfy the CNF clause."""
+        """Values whose key sets satisfy the CNF clause, as one plan: a
+        ``key IN (literals)`` scan, ``groupBy(value)`` to one flag per
+        distinct literal, and the formula as one filter over the flags.
+        A formula true with every literal false (``~a``, ``a | ~b``) also
+        matches values with none of its keys, so it scans the whole index."""
         if isinstance(q, str):
             q = Q.parse(q)
-        return self._eval(q.ast)
-
-    def _key_values(self, term: str) -> DataFrame:
-        # equality predicate pushes to the parquet scan / bucket pruning
-        return self.df.filter(F.col("key") == term).select("value").distinct()
-
-    def _eval(self, node) -> DataFrame:
-        if isinstance(node, Lit):
-            return self._key_values(node.term)
-        if isinstance(node, And):
-            return self._eval(node.left).intersect(self._eval(node.right))
-        if isinstance(node, Or):
-            return self._eval(node.left).union(self._eval(node.right)).distinct()
-        if isinstance(node, Not):
-            return self.unique_values().exceptAll(self._eval(node.child))
-        raise TypeError(f"bad AST node {node!r}")
+        flags: dict[str, str] = {}
+        cond = _fold(q.ast, lambda t: F.col(flags.setdefault(t, f"_t{len(flags)}")), operator.inv)
+        rows = self.df
+        if not _fold(q.ast, lambda t: False, operator.not_):
+            rows = rows.filter(F.col("key").isin(list(flags)))
+        has = [
+            F.coalesce(F.bool_or(F.col("key") == t), F.lit(False)).alias(c) for t, c in flags.items()
+        ]
+        return rows.groupBy("value").agg(*has).filter(cond).select("value")
 
     def metaquery(self, q: "Q | str", recursive: bool = False, max_hops: int = 8) -> DataFrame:
         """Query, then expand resulting values as keys (the reference's
@@ -261,28 +275,12 @@ class InvertedIndex:
         metadata cannot blow up the row count and the result equals a
         depth-bounded recursive CTE. On a metadata DAG shallower than
         max_hops this IS the transitive closure."""
-        hits = self.query(q)
-        if not recursive:
-            return (
-                self.df.join(hits.withColumnRenamed("value", "key"), on="key", how="left_semi")
-                .select("value")
-                .distinct()
-            )
-        frontier = hits
-        layers = [hits]
-        for _ in range(max_hops):
-            frontier = (
-                self.df.join(
-                    frontier.withColumnRenamed("value", "key"), on="key", how="left_semi"
-                )
-                .select("value")
-                .distinct()
-            )
-            layers.append(frontier)
-        out = layers[0]
-        for layer in layers[1:]:
-            out = out.union(layer)
-        return out.distinct()
+        frontier = out = self.query(q)
+        for _ in range(max_hops if recursive else 1):
+            keys = frontier.withColumnRenamed("value", "key")
+            frontier = self.df.join(keys, on="key", how="left_semi").select("value").distinct()
+            out = out.union(frontier)
+        return out.distinct() if recursive else frontier
 
 
 _URL_METHODS = ("query", "metaquery", "keys", "values", "items", "unique_values")

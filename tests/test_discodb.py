@@ -1,14 +1,19 @@
-"""DiscoDB-parity tests: Q parser, set-algebra evaluation, bucketed
-persistence, and oracle matches."""
+"""DiscoDB-parity tests: Q parser, CNF evaluation against a Python
+model, plan shape and bucketed persistence, and oracle matches."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 
 from disco_spark import registry
 from disco_spark.index.discodb import And, InvertedIndex, Lit, Not, Or, Q
 from disco_spark.testing import compare_query
 from tests.conftest import SF_SMOKE
+from tests.test_properties import _asts
+from tests.test_properties import _eval as _py_eval
 
 registry.load_all()
 
@@ -66,7 +71,33 @@ def test_enumeration_ops(tiny_index):
     assert tiny_index.items().count() == 6
 
 
-def test_save_load_bucketed_roundtrip(spark, tmp_path):
+def _run_with_plan(df) -> tuple[list, str, int]:
+    """Collect ``df``; return its sorted values, its final plan's file-scan
+    line and its number of shuffle exchanges (the adaptive plan's initial
+    plan is left out)."""
+    values = sorted(r.value for r in df.collect())
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    scan = next(line for line in plan.splitlines() if "FileScan" in line)
+    return values, scan, plan.count("Exchange hashpartitioning")
+
+
+# query -> the key predicate its scan must push down ("" = none: the
+# formula holds for values with none of its keys, so it reads everything)
+_SAVED_PLANS = {
+    "k3": "EqualTo(key,k3)",  # Spark rewrites a one-item IN to equality
+    "k1 & k3": "In(key, [k1,k3])",
+    "k1 | k3": "In(key, [k1,k3])",
+    "k1 & ~k3": "In(key, [k1,k3])",
+    "(k0 | k1) & (k2 | ~k3) & ~k4 & ~k1": "In(key, [k0,k1,k2,k3,k4])",
+    "~k3": "",
+    "k1 | ~k3": "",
+}
+
+
+def test_save_load_bucketed_roundtrip(spark):
+    """A saved index answers every formula shape with one scan and one
+    shuffle: the scan carries the formula's literals as ``key IN``, and
+    only the per-value aggregate exchanges rows."""
     rows = [(f"k{i % 5}", i) for i in range(100)]
     idx = InvertedIndex(spark.createDataFrame(rows, "key string, value bigint"))
     spark.sql("DROP TABLE IF EXISTS t_idx_roundtrip")
@@ -74,12 +105,50 @@ def test_save_load_bucketed_roundtrip(spark, tmp_path):
     try:
         loaded = InvertedIndex.load(spark, "t_idx_roundtrip")
         assert loaded.df.count() == 100
-        assert sorted(r.value for r in loaded.query("k3").collect()) == list(range(3, 100, 5))
-        # bucketed scan: equality lookup must not shuffle for the distinct
-        plan = loaded.query("k3")._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan.split("AdaptiveSparkPlan")[0] or True
+        for text, pushed in _SAVED_PLANS.items():
+            ast = Q.parse(text).ast
+            want = sorted(v for k, v in rows if _py_eval(ast, frozenset([k])))
+            values, scan, exchanges = _run_with_plan(loaded.query(text))
+            assert values == want, text
+            assert exchanges == 1, (text, exchanges)
+            if pushed:
+                assert pushed in scan, (text, scan)
+            else:
+                assert "PushedFilters: []" in scan, (text, scan)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_idx_roundtrip")
+
+
+# A small fixed index: a null key, a duplicated (key, value) row, and a
+# key ("unused") that no generated query names. Query terms include one
+# ("gone") that is absent from the index.
+_PROP_ROWS = [
+    ("a", 1), ("a", 1), ("b", 1), ("a", 2), ("c", 2), ("b", 3), ("b", 3),
+    ("c", 4), (None, 5), ("a", 6), (None, 6), ("unused", 7), ("c", 8),
+    ("unused", 8), ("a", 9), ("b", 9), ("c", 9),
+]
+_PROP_TERMS = st.sampled_from(["a", "b", "c", "gone"])
+
+
+@pytest.mark.parametrize("unique_items", [True, False])
+@settings(max_examples=30, deadline=None)
+@given(ast=_asts(3, _PROP_TERMS))
+@example(ast=And(Lit("a"), Not(Lit("a"))))
+@example(ast=Not(Lit("a")))
+@example(ast=Not(Lit("gone")))
+@example(ast=Or(Lit("gone"), Not(Lit("b"))))
+def test_query_matches_python_evaluation(spark, unique_items, ast):
+    """query() returns exactly the values whose key set satisfies the
+    formula, evaluated in Python over each value's keys."""
+    idx = InvertedIndex(
+        spark.createDataFrame(_PROP_ROWS, "key string, value bigint"), unique_items=unique_items
+    )
+    keys: dict[int, set] = {}
+    for k, v in _PROP_ROWS:
+        keys.setdefault(v, set()).add(k)
+    want = sorted(v for v, ks in keys.items() if _py_eval(ast, frozenset(ks)))
+    got = [r.value for r in idx.query(Q(ast)).collect()]
+    assert sorted(got) == want
 
 
 def test_url_fragment_dispatch(tiny_index, spark):
@@ -187,3 +256,27 @@ def test_multimap_semantics_survive_save_load(spark, tmp_path):
     after = sorted(r["value"] for r in loaded.get("cat").collect())
     assert after == [1, 1, 2]  # and across persistence
     spark.sql("DROP TABLE IF EXISTS t_multimap_roundtrip")
+
+
+def test_load_reads_unique_items_on_first_use(spark):
+    """load() only opens the table: the multimap flag is read when get()
+    or save() first needs it, so it reflects the table at that moment.
+    A list-valued index keeps its duplicates and its flag through
+    load() -> save() -> load(); a missing table still fails load()."""
+    rows = [("cat", 1), ("cat", 1), ("cat", 2), ("dog", 1)]
+    idx = InvertedIndex(spark.createDataFrame(rows, "key string, value bigint"))
+    try:
+        idx.save(spark, "t_lazy_src", buckets=2)
+        loaded = InvertedIndex.load(spark, "t_lazy_src")
+        spark.sql("ALTER TABLE t_lazy_src SET TBLPROPERTIES ('disco.unique_items' = 'false')")
+        assert sorted(r.value for r in loaded.get("cat").collect()) == [1, 1, 2]
+        assert sorted(r.value for r in loaded.query("cat & ~dog").collect()) == [2]
+        loaded.save(spark, "t_lazy_copy", buckets=2)
+        copy = InvertedIndex.load(spark, "t_lazy_copy")
+        assert copy.unique_items is False
+        assert sorted(r.value for r in copy.get("cat").collect()) == [1, 1, 2]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_lazy_src")
+        spark.sql("DROP TABLE IF EXISTS t_lazy_copy")
+    with pytest.raises(AnalysisException):
+        InvertedIndex.load(spark, "t_no_such_index")

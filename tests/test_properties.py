@@ -21,12 +21,12 @@ from disco_spark.index.discodb import And, Lit, Not, Or, Q
 _terms = st.text(alphabet="abcdefgh", min_size=1, max_size=4)
 
 
-def _asts(depth=3):
+def _asts(depth=3, terms=_terms):
     if depth == 0:
-        return _terms.map(Lit)
-    sub = _asts(depth - 1)
+        return terms.map(Lit)
+    sub = _asts(depth - 1, terms)
     return st.one_of(
-        _terms.map(Lit),
+        terms.map(Lit),
         sub.map(Not),
         st.tuples(sub, sub).map(lambda t: And(*t)),
         st.tuples(sub, sub).map(lambda t: Or(*t)),
