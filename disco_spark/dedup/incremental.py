@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +79,9 @@ def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> Non
     stored. The cap is computed over the corpus alone — the store is
     built before any batch exists, so the chain cannot depend on what
     arrives later (the oracle replays exactly this per-side cap)."""
+    # drop the manifest before the first overwrite: a build that dies
+    # midway must leave a store ensure_signature_store rebuilds
+    Path(path, "manifest.json").unlink(missing_ok=True)
     grouped = signature_groups(
         minhash_from_toks(with_toks(docs))
     ).persist()
@@ -101,7 +105,12 @@ def ensure_signature_store(
     want = _store_manifest(docs, subset)
     try:
         with open(mf) as fh:
-            if json.load(fh) == want:
+            # as in index_store.ensure_index: a matching manifest is
+            # only served with both data dirs present
+            if json.load(fh) == want and all(
+                os.path.isdir(os.path.join(path, d))
+                for d in ("bands", "groups")
+            ):
                 return False
     except (OSError, ValueError):
         pass

@@ -28,6 +28,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from pathlib import Path
 
 import numpy as np
 
@@ -91,6 +92,10 @@ def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
     centroid agg; codebook training is the bounded driver-side sample
     pass (pq_train docstring)."""
     spark = e.sparkSession
+    # drop the manifest before the first write: a rebuild that dies
+    # midway (codes/ new, centroids/ half overwritten) must not leave a
+    # matching manifest for ensure_index to serve
+    Path(path, "manifest.json").unlink(missing_ok=True)
     # a rebuild orphans any delta batches: their codes were assigned
     # under the OLD codebooks and would ADC-score as garbage against
     # the new LUTs — drop them with the old index. Tombstones likewise:

@@ -309,3 +309,87 @@ def test_missing_codes_dir_triggers_rebuild(spark, tmp_path):
     shutil.rmtree(os.path.join(path, "codes"))
     assert ensure_index(base, path, subset="even") is True
     assert os.path.isdir(os.path.join(path, "codes"))
+
+
+def _failing_write(frame):
+    """`frame` with its first column raising when a job evaluates it: a
+    write of it clears its target directory, then dies."""
+    from pyspark.sql import functions as F
+
+    c = frame.columns[0]
+    return frame.withColumn(
+        c, F.raise_error(F.lit("injected")).cast(frame.schema[c].dataType)
+    )
+
+
+def test_signature_store_missing_bands_triggers_rebuild(
+    spark, tmp_path, monkeypatch
+):
+    """A manifest-matching signature store whose bands/ is gone must not
+    be served: dedup_against_store would fail on the missing path."""
+    import os
+    import shutil
+
+    from disco_spark.dedup import incremental
+
+    monkeypatch.setattr(incremental, "SIG_ROOT", str(tmp_path))
+    compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)  # builds
+    path = str(tmp_path / "sf0.001_evencorpus")
+    docs = load_tables(spark, SF_SMOKE)["documents"]
+    corpus = docs.filter(docs.doc_id % 2 == 0)
+    shutil.rmtree(os.path.join(path, "bands"))
+    assert incremental.ensure_signature_store(corpus, path, "even") is True
+    compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)
+
+
+def test_interrupted_signature_store_build_is_rebuilt(
+    spark, tmp_path, monkeypatch
+):
+    """A rebuild that writes groups/ and dies while overwriting bands/
+    must not leave the old, still-matching manifest beside that data."""
+    import os
+
+    from disco_spark.dedup import incremental
+
+    monkeypatch.setattr(incremental, "SIG_ROOT", str(tmp_path))
+    compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)  # builds
+    path = str(tmp_path / "sf0.001_evencorpus")
+    docs = load_tables(spark, SF_SMOKE)["documents"]
+    corpus = docs.filter(docs.doc_id % 2 == 0)
+    bands = incremental.rep_band_keys
+    monkeypatch.setattr(
+        incremental, "rep_band_keys", lambda g: _failing_write(bands(g))
+    )
+    with pytest.raises(Exception, match="injected"):
+        incremental.signature_store_save(corpus, path, "even")
+    monkeypatch.setattr(incremental, "rep_band_keys", bands)
+    assert not os.path.exists(os.path.join(path, "manifest.json"))
+    assert incremental.ensure_signature_store(corpus, path, "even") is True
+    compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)
+
+
+def test_interrupted_index_rebuild_is_rebuilt(spark, tmp_path, monkeypatch):
+    """ensure_index's crash case, one step on: a compaction crash leaves
+    no codes/, the rebuild ensure_index starts writes codes/ and dies
+    while overwriting centroids/. The next ensure_index must rebuild
+    rather than serve codes/ beside the old, still-matching manifest."""
+    import os
+    import shutil
+
+    from disco_spark.similarity import index_store
+
+    monkeypatch.setattr(index_store, "INDEX_ROOT", str(tmp_path))
+    compare_query(spark, "ann_index_load_topk", SF_SMOKE)  # builds
+    path = str(tmp_path / "sf0.001")
+    e = load_tables(spark, SF_SMOKE)["embeddings"]
+    shutil.rmtree(os.path.join(path, "codes"))
+    cents = index_store.ivf_centroids
+    monkeypatch.setattr(
+        index_store, "ivf_centroids", lambda x: _failing_write(cents(x))
+    )
+    with pytest.raises(Exception, match="injected"):
+        ensure_index(e, path)
+    monkeypatch.setattr(index_store, "ivf_centroids", cents)
+    assert os.path.isdir(os.path.join(path, "codes"))
+    assert ensure_index(e, path) is True
+    compare_query(spark, "ann_index_load_topk", SF_SMOKE)

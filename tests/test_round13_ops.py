@@ -1,10 +1,10 @@
 """Round 13: planted-cluster recall audit (the structured-corpus
 complement of ann_recall_audit's near-uniform number), the
-spread_verify_pairs helper extraction, and the noise-robust bench
-protocol. Reference parity: the audit pattern extends the reference's
-result-verification discipline (reference test suites assert exact
-outputs per operator, e.g. tests/test_query.py) to measured
-recall-vs-ground-truth instruments."""
+spread_verify_pairs helper extraction, and the edit-distance candidate
+cap's oracle synchronisation. Reference parity: the audit pattern
+extends the reference's result-verification discipline (reference test
+suites assert exact outputs per operator, e.g. tests/test_query.py) to
+measured recall-vs-ground-truth instruments."""
 
 from __future__ import annotations
 
@@ -116,57 +116,3 @@ def test_edit_cand_cap_env_knob_is_oracle_synchronized():
     )
     assert out.returncode == 0, out.stderr[-500:]
     assert "ok" in out.stdout
-
-
-def test_bench_summarize_reps_math():
-    """The bench protocol's median/dispersion summary is load-bearing
-    (cross-round deltas are read against it) — pin the math on crafted
-    rep matrices: odd-count median, the noise-spike case the protocol
-    exists for, and the zero-median guard."""
-    import bench
-
-    times, disp = bench.summarize_reps(
-        {
-            "spiked": [1.0, 4.0, 1.2],  # one hypervisor-window outlier
-            "steady": [2.0, 2.0, 2.0],
-            "fast": [0.0, 0.0, 0.0],  # sub-ms: no divide-by-zero
-        }
-    )
-    assert times == {"spiked": 1.2, "steady": 2.0, "fast": 0.0}
-    assert disp["spiked"] == 2.5  # (4.0-1.0)/1.2
-    assert disp["steady"] == 0.0
-    assert disp["fast"] == 0.0
-
-
-def test_bench_delta_classifier():
-    """tools/bench_delta.py separates envelope-disjoint movement from
-    noise: overlapping envelopes -> silent; disjoint -> REGRESSED /
-    IMPROVED; single-rep artifacts only flag past the fallback ratio."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
-    )
-    import bench_delta
-
-    old = {
-        "queries": {"a": 1.0, "b": 1.0, "c": 1.0, "d": 0.1},
-        "rep_times": {"a": [0.9, 1.0, 1.3], "b": [0.9, 1.0, 1.1]},
-    }
-    new = {
-        "queries": {"a": 1.2, "b": 2.0, "c": 3.0, "d": 0.4},
-        "rep_times": {"a": [1.1, 1.2, 1.4], "b": [1.5, 2.0, 2.2]},
-    }
-    out = bench_delta.classify(old, new)
-    # a: envelopes overlap (1.1 <= 1.3) -> noise, silent
-    # b: new min 1.5 > old max 1.1 -> REGRESSED
-    # c: no reps either side, ratio 3.0 >= 2.5 at base >= 0.5 -> unsure
-    # d: ratio 4x but base 0.1/0.4 under MIN_BASE_SEC -> silent
-    assert [r["query"] for r in out["regressed"]] == ["b"]
-    assert [r["query"] for r in out["regressed_unsure"]] == ["c"]
-    assert out["improved"] == [] and out["improved_unsure"] == []
-    assert out["n_common"] == 4

@@ -1,72 +1,10 @@
-"""Round-15 optimization-round pins: bench artifact contract fields
-(cpus_effective / master / classes), the wall-classification map, the
-LPA self-loop contract, and the pagerank symmetric fast path."""
+"""Round-15 optimization-round pins: the LPA self-loop contract, the
+pagerank symmetric fast path and the per-query view-registration
+skip."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
-
 from tests.conftest import SF_SMOKE
-
-
-def test_bench_wall_class_map():
-    """The contract-wall map is the r14 verdict's item #7 deliverable:
-    pin its membership (the three adjudicated families) and the default
-    so the artifact's classes can't silently drift."""
-    import bench
-
-    walls = bench.CONTRACT_WALLS
-    # every classified name must be a real headline query
-    assert set(walls) <= set(bench.HEADLINE)
-    # the three adjudicated families, per OPTIMIZATION_r14/r15
-    assert walls["streaming_stateful_recovery"].startswith("contract-wall:")
-    assert walls["stats_corr_matrix"] == "contract-wall:decimal-exactness"
-    assert walls["dedup_cluster_canonical"] == "contract-wall:cluster-map-floor"
-    assert bench.query_class("q1_pricing_summary") == "optimizable"
-    assert bench.query_class("streaming_index_add").startswith("contract-wall")
-
-
-def test_bench_artifact_carries_effective_parallelism(tmp_path):
-    """r14 verdict item #2: the driver's scaling probe flagged
-    suspect_cpus_ignored on a harness that honors $SPARK_GRAFT_CPUS
-    because nothing in the JSON line proved which master ran. Run the
-    bench CLI restricted to two cheap queries at sf0.001 and pin
-    cpus_effective + master + classes in the emitted line."""
-    detail = tmp_path / "detail.json"
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="4",
-        SPARK_GRAFT_ONLY="q1_pricing_summary,topk_orders",
-        SPARK_GRAFT_BENCH_DETAIL=str(detail),
-        SPARK_GRAFT_NO_RECALL_ROW="1",
-    )
-    out = subprocess.run(
-        [sys.executable, "bench.py"],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        timeout=600,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    line = out.stdout.strip().splitlines()[-1]
-    payload = json.loads(line)
-    # ONLY-restricted runs are partial artifacts by metric name
-    assert payload["metric"] == "headline_queries_total_partial"
-    assert payload["cpus_effective"] == 4
-    assert payload["master"] == "local[4]"
-    assert payload["classes"] == {
-        "q1_pricing_summary": "optimizable",
-        "topk_orders": "optimizable",
-    }
-    # the detail artifact carries the same provenance
-    saved = json.loads(detail.read_text())
-    assert saved["cpus_effective"] == 4
-    assert saved["master"] == "local[4]"
 
 
 def test_lpa_input_self_loops_are_ignored(spark):

@@ -3,13 +3,15 @@ physical stages (guide §1/§7) using the Spark UI REST API.
 
 Usage:
     SPARK_GRAFT_UI=1 python tools/profile_query.py q1_pricing_summary [more...]
-        [--sf-dir /root/testdata/sf0.1] [--reps 2] [--explain-dir plans/r14]
+        [--sf-dir SF_DIR] [--reps 2] [--explain-dir PLAN_DIR]
 
 For each query: warm the tables, run the query through the noop sink
 `--reps` times (first run is reported separately — it pays any in-query
 store warmup), then print the stages that executed during the LAST run
 with task time, shuffle read/write bytes and input bytes, so the
-expensive exchange/scan is identifiable without the UI.
+expensive exchange/scan is identifiable without the UI. SF_DIR
+defaults to $SPARK_GRAFT_SF_DIR, else the sf0.1 test data; with
+`--explain-dir` each query's plan is written to PLAN_DIR/<name>.txt.
 
 Requires SPARK_GRAFT_UI=1 (the session factory leaves the UI off
 otherwise, and there is no REST endpoint to read).
