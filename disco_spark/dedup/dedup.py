@@ -23,7 +23,6 @@ a full value-hash oracle.
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
@@ -459,16 +458,12 @@ def band_candidates(
 # + n_members BY CONSTRUCTION — linear at any corpus size. The recall
 # price is measured per corpus by dedup_edit_cap_calibration (the
 # degree-cap analog of dedup_band_cap_calibration).
-# Per-corpus knob: SPARK_GRAFT_EDIT_CAND_CAP overrides the default 8.
-# Read ONCE at import so the Spark plan and the DuckDB oracle SQL
-# (which bakes the cap into its ranked-candidate cut) are generated
-# from the SAME value — a corpus owner reads the flat part of
-# dedup_edit_cap_calibration's curve and sets the cap from data
-# instead of editing a module constant. The default's measured price:
-# 1.0% of true pairs on the adversarial clique corpus, 0% at
-# sf0.01/0.001 (re-asserted per bench run in the artifact's
-# edit_cap_recall field).
-EDIT_CAND_CAP = int(os.environ.get("SPARK_GRAFT_EDIT_CAND_CAP", "8"))
+# One constant feeds both the Spark plan and the DuckDB oracle SQL
+# (which bakes the cap into its ranked-candidate cut). Its measured
+# price: 1.0% of true pairs on the adversarial clique corpus, 0% at
+# sf0.01/0.001; dedup_edit_cap_calibration's curve shows where the
+# cap starts to cost recall on another corpus.
+EDIT_CAND_CAP = 8
 
 
 def ranked_band_candidates(grouped: DataFrame) -> DataFrame:

@@ -19,9 +19,7 @@ co-located (here: plain parquet, same plan shape).
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,20 +35,16 @@ from disco_spark.dedup.dedup import (
     rep_band_keys,
     signature_groups,
 )
+from disco_spark import store
 from disco_spark.registry import query
-from disco_spark.session import lazy_persist, load_tables
+from disco_spark.session import file_fingerprints, lazy_persist, load_tables
 from disco_spark.textops.analysis import with_toks
-
-SIG_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), "benchdata", "sig_store")
 
 
 def _store_manifest(docs: DataFrame, subset: str) -> dict:
     # (path, size, mtime_ns) fingerprints + the filter convention, same
     # staleness contract as index_store._manifest: an in-place rewrite
     # or a changed corpus filter must invalidate the store
-    from disco_spark.session import file_fingerprints
-
     return {
         "input_files": file_fingerprints(docs.inputFiles()),
         "subset": subset,
@@ -69,19 +63,16 @@ def _store_manifest(docs: DataFrame, subset: str) -> dict:
     }
 
 
-def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> None:
-    """Persist the corpus's LSH state in the capped-rep shape
-    band_candidates() uses: `bands` = per-bucket-capped band keys of
-    the signature-group REPRESENTATIVES, and `groups` = the
-    (doc_id, rep) map that re-expands a rep collision to every member
-    of its exact-signature group. One shingle+minhash pass over the
-    corpus, then only these ~100-byte rows live on; text is not
-    stored. The cap is computed over the corpus alone — the store is
-    built before any batch exists, so the chain cannot depend on what
-    arrives later (the oracle replays exactly this per-side cap)."""
-    # drop the manifest before the first overwrite: a build that dies
-    # midway must leave a store ensure_signature_store rebuilds
-    Path(path, "manifest.json").unlink(missing_ok=True)
+def _write_signatures(docs: DataFrame, path: str) -> None:
+    """The corpus's LSH state in the capped-rep shape band_candidates()
+    uses: `bands` = per-bucket-capped band keys of the signature-group
+    REPRESENTATIVES, and `groups` = the (doc_id, rep) map that
+    re-expands a rep collision to every member of its exact-signature
+    group. One shingle+minhash pass over the corpus, then only these
+    ~100-byte rows live on; text is not stored. The cap is computed
+    over the corpus alone — the store is built before any batch
+    exists, so the chain cannot depend on what arrives later (the
+    oracle replays exactly this per-side cap)."""
     grouped = signature_groups(
         minhash_from_toks(with_toks(docs))
     ).persist()
@@ -92,30 +83,27 @@ def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> Non
         os.path.join(path, "bands")
     )
     grouped.unpersist()
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
-        json.dump(_store_manifest(docs, subset), fh)
+
+
+def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> None:
+    """Build the corpus's signature store and swap it in at ``path``
+    whole (store.build)."""
+    store.build(
+        path, _store_manifest(docs, subset), lambda d: _write_signatures(docs, d)
+    )
 
 
 def ensure_signature_store(
     docs: DataFrame, path: str, subset: str = "all"
 ) -> bool:
-    """Build the store unless a manifest-matching one exists. Returns
-    True when a build ran (test hook)."""
-    mf = os.path.join(path, "manifest.json")
-    want = _store_manifest(docs, subset)
-    try:
-        with open(mf) as fh:
-            # as in index_store.ensure_index: a matching manifest is
-            # only served with both data dirs present
-            if json.load(fh) == want and all(
-                os.path.isdir(os.path.join(path, d))
-                for d in ("bands", "groups")
-            ):
-                return False
-    except (OSError, ValueError):
-        pass
-    signature_store_save(docs, path, subset)
-    return True
+    """Build the store unless a manifest-matching one with both data
+    dirs exists. Returns True when a build ran (test hook)."""
+    return store.ensure(
+        path,
+        _store_manifest(docs, subset),
+        ("bands", "groups"),
+        lambda d: _write_signatures(docs, d),
+    )
 
 
 def dedup_against_store(
@@ -185,12 +173,9 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs that LSH-collide with a corpus doc. The oracle proves store
     round-tripping is lossless: a two-sided replay of the grouped+capped
     band chain, expanded through both rep maps, must match exactly."""
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"]
+    docs = load_tables(spark, sf_dir)["documents"]
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     incoming = docs.filter(F.col("doc_id") % 2 == 1)
-    path = os.path.join(
-        SIG_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_evencorpus"
-    )
+    path = store.store_path("sig_store", sf_dir, "_evencorpus")
     ensure_signature_store(corpus, path, subset="even")
     return dedup_against_store(incoming, spark, path)

@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from disco_spark import store
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -141,11 +143,7 @@ def scratch_dir(name: str, sf_dir: str) -> str:
     returned lazy DataFrame can be (re)computed whenever the caller
     runs its action — no cache-eviction-vs-deleted-source race. Writers
     use mode("overwrite"), which makes re-runs self-cleaning."""
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "benchdata", "scratch", name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    root = store.store_path(os.path.join("scratch", name), sf_dir)
     os.makedirs(root, exist_ok=True)
     return root
 

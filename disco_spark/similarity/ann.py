@@ -25,9 +25,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from disco_spark import store
 from disco_spark.dedup.dedup import COS_MIN, cosine, dot, norm
 from disco_spark.registry import query
-from disco_spark.session import default_parallelism, load_tables
+from disco_spark.session import (
+    default_parallelism,
+    file_fingerprints,
+    lazy_persist,
+    load_tables,
+)
 
 N_QUERIES = 5
 TOP_K = 5
@@ -478,127 +484,39 @@ def adaptive_cells(e: DataFrame, iters: int = 1) -> DataFrame:
 # substrate of THREE registered consumers (the graph itself, the
 # cosine dedup pairs, the SemDeDup prune) — a production pipeline
 # materializes it once and every consumer reads the materialization,
-# exactly like the ANN index and the LSH signature store (same
-# benchdata/ convention, same file_fingerprints manifest staleness,
-# same build-once-serve-warm contract). Doubles roundtrip parquet
+# exactly like the ANN index and the LSH signature store (one
+# store.ensure, same file_fingerprints manifest staleness, same
+# build-once-serve-warm contract). Doubles roundtrip parquet
 # bit-exactly, so a warm serve is indistinguishable from a fresh
 # compute (pytest-pinned).
-GRAPH_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "benchdata",
-    "knn_graph",
-)
-
-
 def _adaptive_knn(
     spark: SparkSession, sf_dir: str, k: int = TOP_K, nprobe: int = 4
 ) -> DataFrame:
-    import json
-
-    from disco_spark.session import file_fingerprints, lazy_persist
-
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
-    store = os.path.join(
-        GRAPH_ROOT,
-        f"{os.path.basename(os.path.normpath(sf_dir))}_k{k}_p{nprobe}",
-    )
-    mf = os.path.join(store, "manifest.json")
-    gdir = os.path.join(store, "graph")
+    e = load_tables(spark, sf_dir)["embeddings"]
+    path = store.store_path("knn_graph", sf_dir, f"_k{k}_p{nprobe}")
     want = {
         "input_files": file_fingerprints(e.inputFiles()),
         "k": k,
         "nprobe": nprobe,
         "algo": "adaptive-sqrt-cells-lloyd1-v1",
     }
-    try:
-        with open(mf) as fh:
-            # manifest match alone is not a serveable store (the
-            # ensure_index lesson): the graph dir must exist too
-            if json.load(fh) == want and os.path.isdir(gdir):
-                return spark.read.parquet(gdir)
-    except (OSError, ValueError):
-        pass
 
-    cells = adaptive_cells(e)
-    # persist the assignment: knn_graph references its input in three
-    # places (centroid agg, probe side, in-cell join side), and without
-    # this each reference re-evaluates — and re-CODEGENS — the k-center
-    # nearest-cell expression (k array literals; the compile alone is
-    # seconds once k hits sqrt(n)). One materialization serves all
-    # three; released at the next registered query like every deferred
-    # persist.
-    e2 = lazy_persist(
-        e.drop("label").join(cells, "vec_id").select("vec_id", "embedding", "label")
-    )
-    g = knn_graph(e2, k=k, nprobe=nprobe)
-    return _swap_into_store(spark, g, gdir, mf, want)
+    def write(d: str) -> None:
+        cells = adaptive_cells(e)
+        # persist the assignment: knn_graph references its input in
+        # three places (centroid agg, probe side, in-cell join side),
+        # and without this each reference re-evaluates — and
+        # re-CODEGENS — the k-center nearest-cell expression (k array
+        # literals; the compile alone is seconds once k hits sqrt(n)).
+        # One materialization serves all three; released at the next
+        # registered query like every deferred persist.
+        e2 = lazy_persist(
+            e.drop("label").join(cells, "vec_id").select("vec_id", "embedding", "label")
+        )
+        knn_graph(e2, k=k, nprobe=nprobe).write.parquet(os.path.join(d, "graph"))
 
-
-def _swap_into_store(
-    spark: SparkSession, df: DataFrame, data_dir: str, mf: str, want: dict
-) -> DataFrame:
-    """Persist ``df`` under ``data_dir`` and stamp ``want`` into the
-    manifest ``mf`` with the write-then-swap-then-manifest discipline
-    shared by the knn-graph and planted-cells stores (ensure_index in
-    index_store.py keeps its own multi-directory variant):
-
-    - a crash leaves either the old store (manifest + data both old)
-      or no manifest (rebuilt next call) — never a manifest pointing
-      at missing/partial data;
-    - scratch names are PID-suffixed so two concurrent builders (e.g.
-      bench + pytest) never write the same _building/_old paths; if a
-      concurrent builder wins the rename-into-place, ours is discarded
-      — stores here are deterministic from the same fingerprinted
-      inputs (warm==fresh bit-equality is pytest-pinned), so either
-      copy is THE store;
-    - scratch a CRASHED builder left behind is reclaimed (PID-suffixed
-      names are never reused, so leftovers accumulate otherwise); an
-      age guard keeps a concurrent LIVE builder's in-progress scratch
-      safe;
-    - the manifest is written ONLY when our data made it into place: a
-      losing builder stamping the winner's data with its own ``want``
-      would mislabel the store whenever the two builders fingerprinted
-      DIFFERENT inputs (dataset regenerated between their reads) — the
-      winner's own manifest write (or its absence, forcing a rebuild)
-      is the only truthful label for the data that actually survived.
-    """
-    import glob as _glob
-    import json
-    import shutil
-    import time as _time
-
-    for stale in _glob.glob(f"{data_dir}_building_*") + _glob.glob(
-        f"{data_dir}_old_*"
-    ):
-        try:
-            if _time.time() - os.path.getmtime(stale) > 3600:
-                shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            pass
-    tmp = f"{data_dir}_building_{os.getpid()}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{data_dir}_old_{os.getpid()}"
-    shutil.rmtree(old, ignore_errors=True)
-    try:
-        # the move-aside is itself racy against a concurrent builder's
-        # swap (isdir then rename = TOCTOU): losing THAT race is as
-        # harmless as losing the rename-into-place below, so tolerate
-        if os.path.isdir(data_dir):
-            os.rename(data_dir, old)
-    except OSError:
-        pass
-    renamed = True
-    try:
-        os.rename(tmp, data_dir)
-    except OSError:
-        renamed = False
-        shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    if renamed:
-        with open(mf, "w") as fh:
-            json.dump(want, fh)
-    return spark.read.parquet(data_dir)
+    store.ensure(path, want, ("graph",), write)
+    return spark.read.parquet(os.path.join(path, "graph"))
 
 
 @query(
@@ -902,10 +820,7 @@ def ann_nprobe_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame joins on cell_rank <= nprobe — never one search per sweep
     value. Scale shape: cell ranking is probes x sqrt(n) broadcast,
     ground truth is the audit's broadcast-probed scan."""
-    t = load_tables(spark, sf_dir)
-    from disco_spark.session import lazy_persist
-
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     cells = adaptive_cells(e)
     e2 = lazy_persist(
         e.drop("label").join(cells, "vec_id").select("vec_id", "embedding", "label")
@@ -988,42 +903,23 @@ _PLANTED_SQL = f"""planted AS (
 
 # persisted planted-corpus quantizer: the audit's trained cells
 # (vec_id, label) keyed by the embeddings files that derive the corpus
-# — the ann_index/knn_graph store convention (benchdata/ root,
-# file_fingerprints manifest, manifest written LAST). The planted
-# corpus is a pure function of the embeddings table's vec_ids, so the
-# input-file fingerprints ARE the corpus identity; adaptive_cells is
-# deterministic and integer labels roundtrip parquet exactly, so a
-# warm serve is bit-identical to a fresh train (pytest-pinned) and the
-# recall oracle is untouched. This moves the one-time sqrt(n)-center
-# training + k-argmin codegen out of every audit call — the serve path
-# (probe ranking + in-cell scoring) still runs in-query; the honest
-# cold-build instrument remains the ann_knn_graph row, which the
-# rehearsal protocol keeps cold by wiping benchdata/knn_graph.
-PLANTED_CELLS_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "benchdata",
-    "planted_cells",
-)
-
-
+# — the ann_index/knn_graph store convention (store.ensure,
+# file_fingerprints manifest). The planted corpus is a pure function
+# of the embeddings table's vec_ids, so the input-file fingerprints
+# ARE the corpus identity; adaptive_cells is deterministic and integer
+# labels roundtrip parquet exactly, so a warm serve is bit-identical
+# to a fresh train (pytest-pinned) and the recall oracle is untouched.
+# This moves the one-time sqrt(n)-center training + k-argmin codegen
+# out of every audit call — the serve path (probe ranking + in-cell
+# scoring) still runs in-query; ann_knn_graph, which builds its graph
+# in-query on every call, keeps the cold-build cost visible.
 def planted_cells_store(
     spark: SparkSession, sf_dir: str, planted: DataFrame, emb: DataFrame
 ) -> DataFrame:
     """(vec_id, label) adaptive cells for the planted corpus, served
     from the persisted store when the manifest matches; trained and
-    persisted otherwise via _swap_into_store (write-then-swap-then-
-    manifest: an interrupted rebuild can never leave a matching
-    manifest next to a partial cells dir, and concurrent builders
-    never clobber each other's write)."""
-    import json
-
-    from disco_spark.session import file_fingerprints
-
-    path = os.path.join(
-        PLANTED_CELLS_ROOT, os.path.basename(os.path.normpath(sf_dir))
-    )
-    cdir = os.path.join(path, "cells")
-    mf = os.path.join(path, "manifest.json")
+    built otherwise (store.ensure)."""
+    path = store.store_path("planted_cells", sf_dir)
     want = {
         "input_files": file_fingerprints(emb.inputFiles()),
         "clusters": PLANTED_CLUSTERS,
@@ -1031,13 +927,13 @@ def planted_cells_store(
         "jitter": PLANTED_JITTER,
         "algo": "adaptive-sqrt-cells-lloyd1-v1",
     }
-    try:
-        with open(mf) as fh:
-            if json.load(fh) == want and os.path.isdir(cdir):
-                return spark.read.parquet(cdir)
-    except (OSError, ValueError):
-        pass
-    return _swap_into_store(spark, adaptive_cells(planted), cdir, mf, want)
+    store.ensure(
+        path,
+        want,
+        ("cells",),
+        lambda d: adaptive_cells(planted).write.parquet(os.path.join(d, "cells")),
+    )
+    return spark.read.parquet(os.path.join(path, "cells"))
 
 
 def _planted_vectors(ids: DataFrame) -> DataFrame:
@@ -1107,8 +1003,6 @@ def ann_recall_audit_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives from — planted_cells_store docstring) so the audit
     measures the SERVE path like every other warm ANN query; the
     explicit cold-build instrument remains the ann_knn_graph row."""
-    from disco_spark.session import lazy_persist
-
     t = load_tables(spark, sf_dir)
     planted = lazy_persist(_planted_vectors(t["embeddings"].select("vec_id")))
     cells = planted_cells_store(spark, sf_dir, planted, t["embeddings"])

@@ -28,16 +28,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from pathlib import Path
+import tempfile
 
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from disco_spark import store
 from disco_spark.registry import query
 from disco_spark.session import file_fingerprints, load_tables
-from disco_spark.similarity.ann import N_QUERIES, TOP_K, ivf_centroids
+from disco_spark.similarity.ann import TOP_K, ivf_centroids
 from disco_spark.similarity.pq import (
     IVFPQ_ORACLE,
     K_SUB,
@@ -48,27 +49,21 @@ from disco_spark.similarity.pq import (
     ivfpq_search,
     pq_encode,
     pq_train,
+    probe_queries,
 )
 
-# default index root: inside the repo (gitignored via benchdata/); one
-# subdirectory per source dataset so sf0.001/sf0.01/sf0.1 never collide.
-INDEX_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), "benchdata", "ann_index")
 
-
-# staleness fingerprints are shared with every other persisted store
-# and training cache — see session.file_fingerprints (mtime_ns).
-_file_fingerprints = file_fingerprints
-
-
-def _manifest(e: DataFrame, m: int, ksub: int, subset: str = "all") -> dict:
+def _manifest(e: DataFrame, subset: str = "all") -> dict:
     return {
-        "input_files": _file_fingerprints(e.inputFiles()),
+        # staleness fingerprints are shared with every other persisted
+        # store and training cache — see session.file_fingerprints
+        "input_files": file_fingerprints(e.inputFiles()),
         # the filter convention of a partial-corpus index (inputFiles
         # alone can't distinguish a filtered view of the same files)
         "subset": subset,
-        "m": m,
-        "ksub": ksub,
+        # pq_train's codebook shape
+        "m": M_SUBSPACES,
+        "ksub": K_SUB,
         # the ACTUAL training algorithm parameters, not a hand-bumped
         # version: a changed iteration count / sample cap / init scheme
         # must invalidate the persisted index by itself (a manual bump
@@ -86,25 +81,13 @@ def _manifest(e: DataFrame, m: int, ksub: int, subset: str = "all") -> dict:
     }
 
 
-def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
-    """Build the full IVF-PQ index from (vec_id, embedding, label) rows
-    and persist it under ``path``. One distributed encode pass + one
-    centroid agg; codebook training is the bounded driver-side sample
-    pass (pq_train docstring)."""
+def _write_index(e: DataFrame, path: str) -> None:
+    """Write the three index tables under ``path``. One distributed
+    encode pass + one centroid agg; codebook training is the bounded
+    driver-side sample pass (pq_train docstring)."""
     spark = e.sparkSession
-    # drop the manifest before the first write: a rebuild that dies
-    # midway (codes/ new, centroids/ half overwritten) must not leave a
-    # matching manifest for ensure_index to serve
-    Path(path, "manifest.json").unlink(missing_ok=True)
-    # a rebuild orphans any delta batches: their codes were assigned
-    # under the OLD codebooks and would ADC-score as garbage against
-    # the new LUTs — drop them with the old index. Tombstones likewise:
-    # a rebuild compacts logical deletes (the rebuilt corpus IS the
-    # truth; stale tombstones would delete re-ingested vectors).
-    shutil.rmtree(os.path.join(path, "codes_delta"), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
     books = pq_train(e)
-    m, ksub, dsub = books.shape
+    m, ksub, _ = books.shape
     codes = pq_encode(e, books).join(e.select("vec_id", "label"), "vec_id")
     cents = ivf_centroids(e)
     # label-partitioned codes: at scale a probe prunes to nprobe
@@ -121,8 +104,16 @@ def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
     spark.createDataFrame(
         book_rows, "subspace int, code int, centroid array<double>"
     ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
-    with open(os.path.join(path, "manifest.json"), "w") as fh:
-        json.dump(_manifest(e, m, ksub, subset), fh)
+
+
+def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
+    """Build the full IVF-PQ index from (vec_id, embedding, label) rows
+    and swap it in at ``path`` whole (store.build). A rebuild drops any
+    delta batches — their codes were assigned under the OLD codebooks
+    and would ADC-score as garbage against the new LUTs — and any
+    tombstones: the rebuilt corpus IS the truth, and stale tombstones
+    would delete re-ingested vectors."""
+    store.build(path, _manifest(e, subset), lambda d: _write_index(e, d))
 
 
 def ann_index_load(
@@ -153,22 +144,9 @@ def ann_index_load(
 def ensure_index(e: DataFrame, path: str, subset: str = "all") -> bool:
     """Build the index at ``path`` unless a manifest-matching one exists.
     Returns True when a build ran (test hook)."""
-    mf = os.path.join(path, "manifest.json")
-    want = _manifest(e, M_SUBSPACES, K_SUB, subset)
-    try:
-        with open(mf) as fh:
-            # a matching manifest alone is not proof of a serveable
-            # store: a crash mid-compaction (or manual surgery) can
-            # leave the manifest intact with the codes dir missing —
-            # require both before skipping the rebuild
-            if json.load(fh) == want and os.path.isdir(
-                os.path.join(path, "codes")
-            ):
-                return False
-    except (OSError, ValueError):
-        pass
-    ann_index_save(e, path, subset)
-    return True
+    return store.ensure(
+        path, _manifest(e, subset), ("codes",), lambda d: _write_index(e, d)
+    )
 
 
 def ann_index_add(
@@ -248,6 +226,17 @@ def ann_index_serveable_codes(spark: SparkSession, path: str) -> DataFrame:
     return codes
 
 
+def _serve_topk(
+    e: DataFrame, codes: DataFrame, books: np.ndarray, cents: DataFrame
+) -> DataFrame:
+    """IVF-PQ top-k of the probe queries over ``codes``: the serve step
+    every persisted-index query ends with."""
+    return ivfpq_search(
+        e, codes, probe_queries(e), books, e.sparkSession, k=TOP_K,
+        nprobe=3, cents=cents,
+    )
+
+
 @query("ann_index_load_topk", oracle=IVFPQ_ORACLE)
 def ann_index_load_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve IVF-PQ top-k from the PERSISTED index: no training in the
@@ -257,20 +246,11 @@ def ann_index_load_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes this bit-identical to ann_ivfpq_topk, so IVFPQ_ORACLE gates
     both (similarity/pq.py) — a divergence between the fresh and loaded
     paths surfaces as a hash mismatch here."""
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
-    path = os.path.join(INDEX_ROOT, os.path.basename(os.path.normpath(sf_dir)))
+    e = load_tables(spark, sf_dir)["embeddings"]
+    path = store.store_path("ann_index", sf_dir)
     ensure_index(e, path)
     cents, codes, books = ann_index_load(spark, path)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(
-        e, codes, queries, books, spark, k=TOP_K, nprobe=3, cents=cents
-    )
+    return _serve_topk(e, codes, books, cents)
 
 
 @query(
@@ -295,21 +275,15 @@ def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawler appends embedding files, the stream encodes ONLY new
     arrivals (never re-reading the corpus), and a periodic rebuild
     re-centers the quantizer."""
-    import shutil as _shutil
-    import tempfile
-
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 2 == 0)
-    path = os.path.join(
-        INDEX_ROOT,
-        os.path.basename(os.path.normpath(sf_dir)) + "_evenbase_stream",
-    )
+    path = store.store_path("ann_index", sf_dir, "_evenbase_stream")
     ensure_index(base, path, subset="even")
     cents, _, books = ann_index_load(spark, path)
 
-    stage = tempfile.mkdtemp(prefix="ann_stream_src_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ann_stream_src_", ignore_cleanup_errors=True
+    ) as stage:
         e.filter(F.col("vec_id") % 2 == 1).repartition(3).write.mode(
             "overwrite"
         ).parquet(stage)
@@ -329,19 +303,9 @@ def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        _shutil.rmtree(stage, ignore_errors=True)
 
     codes = ann_index_load_all_codes(spark, path)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(
-        e, codes, queries, books, spark, k=TOP_K, nprobe=3, cents=cents
-    )
+    return _serve_topk(e, codes, books, cents)
 
 
 @query(
@@ -357,24 +321,15 @@ def ann_index_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     leak of a tombstoned neighbor OR an accidental retrain both surface
     as value mismatches. Tombstones live in their own subdirectory, so
     ann_index_load_topk's view of the same index is untouched."""
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
-    path = os.path.join(INDEX_ROOT, os.path.basename(os.path.normpath(sf_dir)))
+    e = load_tables(spark, sf_dir)["embeddings"]
+    path = store.store_path("ann_index", sf_dir)
     ensure_index(e, path)
     cents, _, books = ann_index_load(spark, path)
     ann_index_delete(
         e.filter(F.col("vec_id") % 5 == 3).select("vec_id"), path
     )
     codes = ann_index_serveable_codes(spark, path)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(
-        e, codes, queries, books, spark, k=TOP_K, nprobe=3, cents=cents
-    )
+    return _serve_topk(e, codes, books, cents)
 
 
 @query(
@@ -389,28 +344,17 @@ def ann_index_add_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rerank over every vector in the probed cells — so a bug in
     the add path (wrong codebooks, missed delta, re-trained centroids)
     shows up as a value mismatch."""
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 2 == 0)
     added = e.filter(F.col("vec_id") % 2 == 1)
-    path = os.path.join(
-        INDEX_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_evenbase"
-    )
+    path = store.store_path("ann_index", sf_dir, "_evenbase")
     ensure_index(base, path, subset="even")
     # one load serves the whole call: books feed the delta encode, cents
     # the probe ranking; only the code table is re-read (with the delta)
     cents, _, books = ann_index_load(spark, path)
     ann_index_add(added, path, books=books)
     codes = ann_index_load_all_codes(spark, path)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(
-        e, codes, queries, books, spark, k=TOP_K, nprobe=3, cents=cents
-    )
+    return _serve_topk(e, codes, books, cents)
 
 
 def ann_index_compact(spark: SparkSession, path: str) -> None:
@@ -430,18 +374,12 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
     invisible to ensure_index, exactly like add/delete); a marker file
     records that layers were folded."""
     codes = ann_index_serveable_codes(spark, path)
-    tmp = os.path.join(path, "codes_compacting")
-    codes.write.partitionBy("label").mode("overwrite").parquet(tmp)
-    # swap via rename-aside so a crash at any point leaves a codes dir
-    # either old or new on disk (rmtree-then-rename has a window with
-    # NO codes dir but an intact manifest — ensure_index would serve a
-    # broken store forever); leftover codes_old from a prior crash is
-    # cleared first so the rename-aside cannot fail
-    live, old = os.path.join(path, "codes"), os.path.join(path, "codes_old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old)
+    # written aside and swapped in: a crash leaves codes/ old, new or
+    # (between the two renames) missing, which ensure_index rebuilds
+    store.swap(
+        os.path.join(path, "codes"),
+        lambda d: codes.write.partitionBy("label").mode("overwrite").parquet(d),
+    )
     shutil.rmtree(os.path.join(path, "codes_delta"), ignore_errors=True)
     shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
     with open(os.path.join(path, "compacted.json"), "w") as fh:
@@ -469,15 +407,12 @@ def ann_index_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     present) the layers are already folded and the query serves
     directly; the pytest proves pre/post-compaction serve equality and
     that the layer directories are gone."""
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 2 == 0)
-    path = os.path.join(
-        INDEX_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_compact"
-    )
-    built = ensure_index(base, path, subset="even-compact")
-    marker = os.path.join(path, "compacted.json")
-    if built or not os.path.exists(marker):
+    path = store.store_path("ann_index", sf_dir, "_compact")
+    ensure_index(base, path, subset="even-compact")
+    # a (re)build swaps in a store without the marker
+    if not os.path.exists(os.path.join(path, "compacted.json")):
         cents, _, books = ann_index_load(spark, path)
         ann_index_add(e.filter(F.col("vec_id") % 2 == 1), path, books=books)
         ann_index_delete(
@@ -485,12 +420,4 @@ def ann_index_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ann_index_compact(spark, path)
     cents, codes, books = ann_index_load(spark, path)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(
-        e, codes, queries, books, spark, k=TOP_K, nprobe=3, cents=cents
-    )
+    return _serve_topk(e, codes, books, cents)

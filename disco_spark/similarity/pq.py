@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from disco_spark.registry import query
-from disco_spark.session import load_tables
+from disco_spark.session import file_fingerprints, load_tables
 from disco_spark.similarity.ann import N_QUERIES, TOP_K
 
 # m=16/ksub=64 + shortlist-100 rerank measured at recall@5 = 0.96-1.0 on
@@ -47,6 +47,17 @@ PQ_SAMPLE_CAP = 10_000
 
 
 _TRAIN_CACHE: dict[tuple, np.ndarray] = {}
+
+
+def probe_queries(e: DataFrame) -> list[tuple[int, np.ndarray]]:
+    """(vec_id, vector) for the N_QUERIES lowest vec_ids: the probe set
+    every top-k query and its oracle (``vec_id < N_QUERIES``) share."""
+    return [
+        (r.vec_id, np.array(r.embedding))
+        for r in e.filter(F.col("vec_id") < N_QUERIES)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
 
 
 def pq_train(
@@ -74,8 +85,6 @@ def pq_train(
     # rewrite of the input parquet mid-application must miss this cache,
     # exactly as the on-disk manifests already guarantee.
     try:
-        from disco_spark.session import file_fingerprints
-
         key = (
             e.sparkSession.sparkContext.applicationId,
             tuple(tuple(f) for f in file_fingerprints(e.inputFiles())),
@@ -379,17 +388,10 @@ IVFPQ_ORACLE = ivfpq_oracle_sql()
 
 @query("ann_ivfpq_topk", oracle=IVFPQ_ORACLE)
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     books = pq_train(e)
     codes = pq_encode(e, books).join(e.select("vec_id", "label"), "vec_id")
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return ivfpq_search(e, codes, queries, books, spark, k=TOP_K, nprobe=3)
+    return ivfpq_search(e, codes, probe_queries(e), books, spark, k=TOP_K, nprobe=3)
 
 
 @query(
@@ -415,14 +417,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir)
-    e = t["embeddings"]
+    e = load_tables(spark, sf_dir)["embeddings"]
     books = pq_train(e)
     codes = pq_encode(e, books)
-    queries = [
-        (r.vec_id, np.array(r.embedding))
-        for r in e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return pq_search_rerank(e, codes, queries, books, spark, k=TOP_K)
+    return pq_search_rerank(e, codes, probe_queries(e), books, spark, k=TOP_K)

@@ -311,6 +311,21 @@ def test_missing_codes_dir_triggers_rebuild(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "codes"))
 
 
+def _snapshot(path):
+    """(manifest bytes, every file under ``path``): equal snapshots mean
+    a store was left exactly as it was."""
+    import os
+
+    with open(os.path.join(path, "manifest.json"), "rb") as fh:
+        manifest = fh.read()
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+    return manifest, files
+
+
 def _failing_write(frame):
     """`frame` with its first column raising when a job evaluates it: a
     write of it clears its target directory, then dies."""
@@ -330,11 +345,12 @@ def test_signature_store_missing_bands_triggers_rebuild(
     import os
     import shutil
 
+    from disco_spark import store
     from disco_spark.dedup import incremental
 
-    monkeypatch.setattr(incremental, "SIG_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)  # builds
-    path = str(tmp_path / "sf0.001_evencorpus")
+    path = store.store_path("sig_store", SF_SMOKE, "_evencorpus")
     docs = load_tables(spark, SF_SMOKE)["documents"]
     corpus = docs.filter(docs.doc_id % 2 == 0)
     shutil.rmtree(os.path.join(path, "bands"))
@@ -345,51 +361,60 @@ def test_signature_store_missing_bands_triggers_rebuild(
 def test_interrupted_signature_store_build_is_rebuilt(
     spark, tmp_path, monkeypatch
 ):
-    """A rebuild that writes groups/ and dies while overwriting bands/
-    must not leave the old, still-matching manifest beside that data."""
+    """A rebuild that writes groups/ and dies while writing bands/ must
+    leave the previous complete store exactly as it was, and no scratch
+    beside it."""
     import os
 
+    from disco_spark import store
     from disco_spark.dedup import incremental
 
-    monkeypatch.setattr(incremental, "SIG_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)  # builds
-    path = str(tmp_path / "sf0.001_evencorpus")
+    path = store.store_path("sig_store", SF_SMOKE, "_evencorpus")
     docs = load_tables(spark, SF_SMOKE)["documents"]
     corpus = docs.filter(docs.doc_id % 2 == 0)
     bands = incremental.rep_band_keys
     monkeypatch.setattr(
         incremental, "rep_band_keys", lambda g: _failing_write(bands(g))
     )
+    before = _snapshot(path)
     with pytest.raises(Exception, match="injected"):
         incremental.signature_store_save(corpus, path, "even")
     monkeypatch.setattr(incremental, "rep_band_keys", bands)
-    assert not os.path.exists(os.path.join(path, "manifest.json"))
-    assert incremental.ensure_signature_store(corpus, path, "even") is True
+    assert _snapshot(path) == before
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
+    assert incremental.ensure_signature_store(corpus, path, "even") is False
     compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)
 
 
 def test_interrupted_index_rebuild_is_rebuilt(spark, tmp_path, monkeypatch):
     """ensure_index's crash case, one step on: a compaction crash leaves
     no codes/, the rebuild ensure_index starts writes codes/ and dies
-    while overwriting centroids/. The next ensure_index must rebuild
-    rather than serve codes/ beside the old, still-matching manifest."""
+    while writing centroids/. The store must stay exactly as the crash
+    left it — never codes/ beside the old, still-matching manifest —
+    and the next ensure_index rebuilds it."""
     import os
     import shutil
 
+    from disco_spark import store
     from disco_spark.similarity import index_store
 
-    monkeypatch.setattr(index_store, "INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     compare_query(spark, "ann_index_load_topk", SF_SMOKE)  # builds
-    path = str(tmp_path / "sf0.001")
+    path = store.store_path("ann_index", SF_SMOKE)
     e = load_tables(spark, SF_SMOKE)["embeddings"]
     shutil.rmtree(os.path.join(path, "codes"))
     cents = index_store.ivf_centroids
     monkeypatch.setattr(
         index_store, "ivf_centroids", lambda x: _failing_write(cents(x))
     )
+    before = _snapshot(path)
     with pytest.raises(Exception, match="injected"):
         ensure_index(e, path)
     monkeypatch.setattr(index_store, "ivf_centroids", cents)
-    assert os.path.isdir(os.path.join(path, "codes"))
+    assert _snapshot(path) == before
+    assert not os.path.isdir(os.path.join(path, "codes"))
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
     assert ensure_index(e, path) is True
     compare_query(spark, "ann_index_load_topk", SF_SMOKE)

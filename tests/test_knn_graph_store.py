@@ -11,13 +11,14 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from disco_spark.similarity.ann import GRAPH_ROOT, _adaptive_knn
+from disco_spark.similarity.ann import _adaptive_knn
+from disco_spark.store import store_path
 
 from tests.conftest import SF_SMOKE
 
 
 def _store(k=5, p=4) -> str:
-    return os.path.join(GRAPH_ROOT, f"{os.path.basename(SF_SMOKE)}_k{k}_p{p}")
+    return store_path("knn_graph", SF_SMOKE, f"_k{k}_p{p}")
 
 
 def test_warm_serve_equals_fresh_build(spark):

@@ -14,17 +14,17 @@ import shutil
 from disco_spark import registry
 from disco_spark.session import load_tables, lazy_persist
 from disco_spark.similarity.ann import (
-    PLANTED_CELLS_ROOT,
     _planted_vectors,
     adaptive_cells,
     planted_cells_store,
 )
+from disco_spark.store import store_path
 
 from tests.conftest import SF_SMOKE
 
 
 def _store() -> str:
-    return os.path.join(PLANTED_CELLS_ROOT, os.path.basename(SF_SMOKE))
+    return store_path("planted_cells", SF_SMOKE)
 
 
 def _planted(spark):
@@ -97,11 +97,12 @@ def test_audit_query_runs_warm_and_cold(spark):
 
 
 def test_interrupted_rebuild_never_stamps_manifest(spark):
-    """Crash-safety (r14 review finding): the rebuild goes through
-    _swap_into_store, so a build that dies mid-parquet-write leaves NO
-    manifest update — the old 'write into cells/ under a possibly
-    matching manifest' path could leave a matching manifest next to a
-    partial cells dir and silently serve it."""
+    """Crash-safety (r14 review finding): the rebuild is written beside
+    the store and swapped in whole (store.ensure), so a build that dies
+    mid-parquet-write leaves NO manifest update — the old 'write into
+    cells/ under a possibly matching manifest' path could leave a
+    matching manifest next to a partial cells dir and silently serve
+    it."""
     emb = load_tables(spark, SF_SMOKE)["embeddings"]
     p = _planted(spark)
     planted_cells_store(spark, SF_SMOKE, p, emb).count()
@@ -116,7 +117,7 @@ def test_interrupted_rebuild_never_stamps_manifest(spark):
     # the build side only touches the cells via DataFrame.write; abort
     # there and the store must keep the (stale) manifest untouched so
     # the next call retrains instead of serving whatever half-state
-    # the dead writer left in its PID-suffixed scratch dir
+    # the dead writer left in its scratch dir
     import pyspark.sql.readwriter as rw
 
     orig = rw.DataFrameWriter.parquet

@@ -253,16 +253,11 @@ def test_streaming_index_add_multiple_delta_batches(spark):
     their union covers every odd vec_id exactly once."""
     import os
 
-    from disco_spark.similarity.index_store import (
-        INDEX_ROOT,
-        ann_index_load_all_codes,
-    )
+    from disco_spark.similarity.index_store import ann_index_load_all_codes
+    from disco_spark.store import store_path
 
     registry.QUERIES["streaming_index_add"](spark, SF_SMOKE).collect()
-    path = os.path.join(
-        INDEX_ROOT,
-        os.path.basename(os.path.normpath(SF_SMOKE)) + "_evenbase_stream",
-    )
+    path = store_path("ann_index", SF_SMOKE, "_evenbase_stream")
     batches = sorted(os.listdir(os.path.join(path, "codes_delta")))
     assert len([b for b in batches if b.startswith("batch=")]) >= 2
     e = load_tables(spark, SF_SMOKE)["embeddings"]
