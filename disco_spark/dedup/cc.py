@@ -340,7 +340,11 @@ def dedup_cluster_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-find path."""
     from pyspark.sql.window import Window
 
-    from disco_spark.dedup.dedup import simhash_frame, simhash_pigeonhole_pairs
+    from disco_spark.dedup.dedup import (
+        _star_edges,
+        simhash_frame,
+        simhash_pigeonhole_pairs,
+    )
     from disco_spark.session import lazy_persist
     from disco_spark.textops.analysis import with_toks
 
@@ -349,14 +353,11 @@ def dedup_cluster_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped = sigs.withColumn(
             "rep", F.min("doc_id").over(Window.partitionBy("simhash"))
         )
-        star = grouped.filter(F.col("doc_id") != F.col("rep")).select(
-            F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-        )
         reps = grouped.filter(F.col("doc_id") == F.col("rep")).select(
             "doc_id", "simhash"
         )
         rep_pairs = simhash_pigeonhole_pairs(reps).select("doc_a", "doc_b")
-        return star.unionByName(rep_pairs)
+        return _star_edges(grouped).unionByName(rep_pairs)
 
     t = load_tables(spark, sf_dir)
     return cluster_map(t["documents"], pair_fn=grouped_edges)
@@ -368,8 +369,8 @@ def cluster_map(docs: DataFrame, pair_fn=None) -> DataFrame:
     shared by the curation pipeline. `pair_fn` picks the near-dup pair
     generator; the default is the LSH-prefiltered verified Jaccard
     (band-capped — never the posting-list-quadratic exact join, whose
-    pair space is O(df²) per shingle; pass ngram_jaccard_pairs
-    explicitly for small-SF oracle work)."""
+    pair space is O(df²) per shingle; pass prefix_jaccard_pairs for
+    the exact thresholded edge set)."""
     from disco_spark.dedup.dedup import lsh_jaccard_pairs
 
     pairs = (pair_fn or lsh_jaccard_pairs)(docs).select(

@@ -2,17 +2,27 @@
 surface; driver north star): exact, MinHash+LSH, SimHash, n-gram
 Jaccard, embedding-cosine near-dup.
 
+Every near-duplicate method is the same two steps: a candidate step
+(block by a key, self-join within each block, keep doc_a < doc_b) and
+a verify step (score each candidate exactly). The shared pieces:
+_band_pairs (the one band self-join), _star_edges (identical-signature
+groups as rep -> member edges), _set_overlaps + _jaccard (the one
+in-row shingle-set verify), _cap_sweep (the one recall-vs-cap tail)
+and _edit_payload (the one edit-distance verify payload).
+
 Scale design notes (the point of each algorithm at 100 TB):
 - exact: one hash-shuffle on a 32-byte key; the groupBy carries only
   (hash, doc_id), never the text.
-- minhash_lsh: per-doc signatures are a single groupBy over exploded
-  shingles (map-side partial min); candidate generation joins on
-  (band_idx, band_key) so the self-join is band-bucketed, never all-pairs.
+- minhash_lsh: per-doc signatures are computed in-row from the doc's
+  own shingle array (minhash_from_toks / shingle_sets, no shuffle);
+  candidate generation joins on (band_idx, band_key) so the self-join
+  is band-bucketed, never all-pairs.
 - ngram_jaccard: pairs only materialize for docs sharing >= 1 shingle
   (inverted-shingle join), not the n^2 cross product.
-- simhash: signature is computed in one Arrow-batched pandas UDF
-  (numpy bit ops), output is 8 bytes/doc; banding the top bits gives
-  the same join-bucketed candidate pattern as minhash.
+- simhash: the signature is an in-row fold of JVM higher-order
+  functions (8 bytes/doc); pigeonhole bands over 10-bit blocks give
+  the same join-bucketed candidate pattern as minhash, losslessly for
+  hamming <= 3.
 - embedding cosine: blocked on the `label` column (IVF-style coarse
   quantizer) so the pair space is per-block, not global.
 
@@ -21,11 +31,6 @@ a full value-hash oracle.
 """
 
 from __future__ import annotations
-
-import hashlib
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,22 +174,17 @@ N_HASHES = 6
 BAND_SIZE = 2  # 3 bands of 2 -> candidates need one identical band
 
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, mh0..mhN): each mh_i = min over shingles of
-    md5('s<i> ' || shingle) — md5 under distinct salts is the classic
-    k-independent-ish hash family, and is reproducible in any engine."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"s{i} "), F.col("shingle")))).alias(f"mh{i}")
-        for i in range(n_hashes)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
+# the signature columns of minhash_from_toks / shingle_sets
+MH_COLS = [f"mh{i}" for i in range(N_HASHES)]
 
 
 def minhash_from_toks(
     docs: DataFrame, k: int = SHINGLE_K, n_hashes: int = N_HASHES
 ) -> DataFrame:
-    """MAP-ONLY minhash signatures: identical output to
-    ``minhash_signatures(shingle_df(docs))`` with ZERO shuffles.
+    """MAP-ONLY minhash signatures (doc_id, mh0..mhN): each mh_i = min
+    over the doc's shingles of md5('s<i> ' || shingle) — md5 under
+    distinct salts is the classic k-independent-ish hash family, and is
+    reproducible in any engine. ZERO shuffles:
 
     min(md5(salt || shingle)) over a doc's shingle SET equals the min
     over its shingle array (min over a multiset ignores repeats), so
@@ -382,6 +382,21 @@ def signature_groups(sig: DataFrame) -> DataFrame:
     return sig.withColumn("rep", F.min("doc_id").over(w))
 
 
+def _ranked_rep_bands(grouped: DataFrame, cap: int) -> DataFrame:
+    """(doc_id, band_idx, band_key, rn) over the signature-group
+    REPRESENTATIVES of a signature_groups() frame, rn = the rep's
+    doc_id rank within its bucket, cut at rn <= cap."""
+    from pyspark.sql.window import Window
+
+    reps = grouped.filter(F.col("doc_id") == F.col("rep")).drop("rep")
+    wc = Window.partitionBy("band_idx", "band_key").orderBy("doc_id")
+    return (
+        band_keys_df(reps)
+        .withColumn("rn", F.row_number().over(wc))
+        .filter(F.col("rn") <= cap)
+    )
+
+
 def rep_band_keys(grouped: DataFrame) -> DataFrame:
     """Per-bucket-capped (doc_id, band_idx, band_key) rows over the
     signature-group REPRESENTATIVES of a signature_groups() frame: at
@@ -389,16 +404,44 @@ def rep_band_keys(grouped: DataFrame) -> DataFrame:
     downstream self-join is bounded per bucket no matter how hot a
     boilerplate band gets. The row_number window partitions on exactly
     the self-join key, so AQE reuses one Exchange for both."""
-    from pyspark.sql.window import Window
+    return _ranked_rep_bands(grouped, BAND_CAP).drop("rn")
 
-    reps = grouped.filter(F.col("doc_id") == F.col("rep")).drop("rep")
-    bands = band_keys_df(reps)
-    wc = Window.partitionBy("band_idx", "band_key").orderBy("doc_id")
-    return (
-        bands.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= BAND_CAP)
-        .drop("rn")
+
+def _band_pairs(bands: DataFrame, *carry: str) -> DataFrame:
+    """The one band self-join: (doc_id, band_idx, band_key, *carry)
+    rows that share a (band_idx, band_key) bucket, as doc_a < doc_b
+    pairs with each carried column suffixed ``_a``/``_b``. One row per
+    colliding band — a pair proposed by several bands repeats, and the
+    caller dedups or counts."""
+
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            "band_idx",
+            "band_key",
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return side("a").join(side("b"), ["band_idx", "band_key"]).filter(
+        F.col("doc_a") < F.col("doc_b")
     )
+
+
+def _star_edges(grouped: DataFrame, *extra: Column) -> DataFrame:
+    """(doc_a = rep, doc_b = member, *extra) edges of a
+    signature_groups() frame: an identical-signature group as linear
+    rep -> member edges. doc_b is never a rep, so these never overlap
+    the rep pairs of the band self-join."""
+    return grouped.filter(F.col("doc_id") != F.col("rep")).select(
+        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"), *extra
+    )
+
+
+def _grouped(sig: DataFrame | None, grouped: DataFrame | None) -> DataFrame:
+    """The caller's signature_groups() frame, or one built from ``sig``."""
+    if grouped is None and sig is None:
+        raise ValueError("band candidates need sig or grouped")
+    return grouped if grouped is not None else lazy_persist(signature_groups(sig))
 
 
 def band_candidates(
@@ -420,25 +463,11 @@ def band_candidates(
     (the recall-curve audit) pass its own persisted frame in, so the
     grouping window runs once; ``sig`` is ignored (and may be None)
     when ``grouped`` is provided."""
-    if grouped is None and sig is None:
-        raise ValueError("band_candidates needs sig or grouped")
-    if grouped is None:
-        grouped = lazy_persist(signature_groups(sig))
-    star = grouped.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    bands = rep_band_keys(grouped)
-    a = bands.toDF("doc_a", "band_idx", "band_key")
-    b = bands.toDF("doc_b", "band_idx", "band_key")
-    rep_pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    # star doc_b is never a rep, so the arms are disjoint; distinct()
-    # only dedups rep pairs proposed by multiple bands (set semantics,
-    # matching the oracle's UNION)
-    return rep_pairs.union(star).distinct()
+    grouped = _grouped(sig, grouped)
+    rep_pairs = _band_pairs(rep_band_keys(grouped)).select("doc_a", "doc_b")
+    # the arms are disjoint; distinct() only dedups rep pairs proposed
+    # by multiple bands (set semantics, matching the oracle's UNION)
+    return rep_pairs.union(_star_edges(grouped)).distinct()
 
 
 # Per-doc candidate-degree cap: BAND_CAP bounds what one HOT BUCKET can
@@ -475,12 +504,8 @@ def ranked_band_candidates(grouped: DataFrame) -> DataFrame:
     Callers cut at cr <= cap; the calibration sweep reads cr itself."""
     from pyspark.sql.window import Window
 
-    bands = rep_band_keys(grouped)
-    a = bands.toDF("doc_a", "band_idx", "band_key")
-    b = bands.toDF("doc_b", "band_idx", "band_key")
     pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _band_pairs(rep_band_keys(grouped))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )
@@ -498,20 +523,14 @@ def capped_band_candidates(
     cap-exempt star edges. ``sig`` is ignored (and may be None) when
     ``grouped`` is provided. See EDIT_CAND_CAP for the scale
     rationale."""
-    if grouped is None and sig is None:
-        raise ValueError("capped_band_candidates needs sig or grouped")
-    if grouped is None:
-        grouped = lazy_persist(signature_groups(sig))
-    star = grouped.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
+    grouped = _grouped(sig, grouped)
     capped = (
         ranked_band_candidates(grouped)
         .filter(F.col("cr") <= cap)
         .select("doc_a", "doc_b")
     )
-    # arms disjoint (star doc_b is never a rep); groupBy already deduped
-    return capped.union(star)
+    # arms disjoint; groupBy already deduped
+    return capped.union(_star_edges(grouped))
 
 
 def spread_verify_pairs(pairs: DataFrame) -> DataFrame:
@@ -654,25 +673,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_ngram_jaccard_pairs(with_toks(t["documents"]))
 
 
-def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) pairs >= JACCARD_MIN over any documents
-    DataFrame (tokenized or not) — the composable core of
-    dedup_ngram_jaccard, shared by the clustering and curation plans."""
-    # the plan reads shingles 3x (both join sides + sizes); persisting the
-    # tokenize+shingle scan computes it once (measured 5.9s -> 3.6s at
-    # sf0.1). Blocks are LRU-evictable, so a long session self-cleans.
-    return _jaccard_from_shingles(
-        lazy_persist(shingle_df(docs)), universe=_EXACT_BASELINE_OPTOUT
-    )
-
-
 # The universes pair_overlaps accepts: each names the discipline that
 # bounds the posting lists BEFORE the O(df²) self-join. The opt-out
-# string is deliberately loud — it appears in exactly one production
-# call site (ngram_jaccard_pairs, the small-SF exact oracle baseline),
-# and a source-scan test pins that count so no future caller quietly
-# re-promotes the unbounded join into a default (the round-8 cluster_map
-# regression, and the measured sf1 OOM that followed).
+# string is deliberately loud — no production call site passes it (the
+# exact small-SF references in the tests do), and a source-scan test
+# pins that count at zero so no future caller quietly re-promotes the
+# unbounded join into a default (the round-8 cluster_map regression,
+# and the measured sf1 OOM that followed).
 _BOUNDED_UNIVERSES = frozenset({"df_pruned", "lsh_candidates"})
 _EXACT_BASELINE_OPTOUT = "UNBOUNDED_EXACT_BASELINE"
 
@@ -727,18 +734,53 @@ def _jaccard_from_shingles(sh: DataFrame, *, universe: str) -> DataFrame:
     return _jaccard_select(common, sizes)
 
 
+def _jaccard(na: str = "na", nb: str = "nb", digits: int | None = 6) -> Column:
+    """|A∩B| / |A∪B| from the intersection count `c` and the two set
+    sizes, rounded to ``digits`` (the oracles' ROUND(.., 6))."""
+    c = F.col("c")
+    jac = c.cast("double") / (F.col(na) + F.col(nb) - c)
+    return jac if digits is None else F.round(jac, digits)
+
+
 def _jaccard_select(
     common: DataFrame, sizes: DataFrame, min_jac: float = JACCARD_MIN
 ) -> DataFrame:
     """(doc_a, doc_b, c=|A∩B|) + per-doc set sizes -> Jaccard >= min."""
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("c")), 6
-    )
     return (
         common.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .select("doc_a", "doc_b", _jaccard("sa.n", "sb.n").alias("jaccard"))
         .filter(F.col("jaccard") >= min_jac)
+    )
+
+
+def _set_overlaps(cands: DataFrame, sets: DataFrame, *extra: str) -> DataFrame:
+    """The one in-row set verify: ``cands`` (doc_a, doc_b, ...) joined
+    to a shingle_sets() frame on both docs, returned with c = |A∩B|
+    (size of array_intersect), the set sizes na/nb and each ``extra``
+    column of ``sets`` suffixed ``_a``/``_b``. Two doc_id-keyed joins
+    and an in-row intersection: only |docs| array rows reach an
+    exchange, never exploded shingle rows, and no per-pair
+    re-aggregation runs. A zero-overlap candidate keeps c = 0."""
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sh_set").alias(f"set_{s}"),
+            F.col("n").alias(f"n{s}"),
+            *[F.col(x).alias(f"{x}_{s}") for x in extra],
+        )
+
+    return (
+        cands.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            *cands.columns,
+            F.size(F.array_intersect("set_a", "set_b")).alias("c"),
+            "na",
+            "nb",
+            *[f"{x}_{s}" for s in "ab" for x in extra],
+        )
     )
 
 
@@ -786,42 +828,15 @@ def lsh_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Composable core of dedup_lsh_jaccard: candidates from minhash
     bands, exact Jaccard verify only on candidates. ONE persisted
     map-only shingle_sets frame (per-doc distinct array + size +
-    signature, all in-row) serves everything: signatures project off
-    it, and the verify is two doc_id-keyed joins with the intersection
-    counted in-row by array_intersect — no exploded shingle frame, no
-    per-doc-distinct shuffle, no (doc_id, shingle)-wide verify
-    exchanges, no per-pair re-aggregation, no separate sizes joins.
-    A zero-overlap candidate pair survives to the filter with
-    jaccard = 0 (< JACCARD_MIN) — same output as the old inner
-    shingle-equijoin, which dropped it before the filter."""
+    signature, all in-row) serves both: signatures project off it, and
+    _set_overlaps verifies in-row — no exploded shingle frame, no
+    per-doc-distinct shuffle. A zero-overlap candidate pair scores
+    jaccard = 0 (< JACCARD_MIN) and is filtered out."""
     st = lazy_persist(shingle_sets(docs))
-    cands = band_candidates(
-        st.select("doc_id", *[f"mh{i}" for i in range(N_HASHES)])
-    )
-    a = st.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh_set").alias("set_a"),
-        F.col("n").alias("na"),
-    )
-    b = st.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh_set").alias("set_b"),
-        F.col("n").alias("nb"),
-    )
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 6
-    )
+    cands = band_candidates(st.select("doc_id", *MH_COLS))
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("set_a", "set_b")).alias("c"),
-            "na",
-            "nb",
-        )
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        _set_overlaps(cands, st)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_MIN)
     )
 
@@ -882,30 +897,25 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def prefix_jaccard_pairs(
-    docs: DataFrame, t: float = PREFIX_JACCARD_T, sh: DataFrame | None = None
+    docs: DataFrame, t: float = PREFIX_JACCARD_T, sets: DataFrame | None = None
 ) -> DataFrame:
     """Composable core: (doc_a, doc_b, jaccard) with EXACT jaccard >= t
-    via AllPairs prefix filtering + the PPJoin positional filter.
-    Callers that also consume the shingle projection (the recall-curve
-    audit joins it against the LSH chain) pass their persisted frame
-    via ``sh`` so the tokenize scan happens once; they keep the
-    exploded-frame plan below. Standalone callers (sh=None) ride ONE
-    persisted MAP-ONLY shingle-set frame instead (per-doc distinct
-    array + size, computed in-row — shingle_sets with no minhash
-    columns): df counts come from an explode that feeds PARTIAL
-    aggregation directly (vocab-bounded partials cross, never the
-    exploded rows), per-doc sizes are array_size (no window count),
-    and the verify is two doc_id-keyed joins with the intersection
-    counted in-row by array_intersect — no global per-doc-distinct
-    shuffle, no exploded verify exchanges, no per-pair re-aggregation.
-    (Measured at sf0.1: the old persisted exploded frame was rebuilt
-    by every broadcast-subquery future that referenced it — three
-    ~10-core-second scan+explode+distinct subtrees per run.)
+    via AllPairs prefix filtering + the PPJoin positional filter, over
+    ONE persisted MAP-ONLY shingle-set frame (per-doc distinct array +
+    size, computed in-row — shingle_sets with no minhash columns).
+    Callers that already hold a persisted shingle_sets frame of
+    ``docs`` (the recall-curve audit, which also bands its signatures)
+    pass it as ``sets`` so the tokenize scan happens once. df counts
+    come from an explode that feeds PARTIAL aggregation directly
+    (vocab-bounded partials cross, never the exploded rows), per-doc
+    sizes are array_size (no window count), and the verify is
+    _set_overlaps — no global per-doc-distinct shuffle, no exploded
+    verify exchanges, no per-pair re-aggregation.
 
-    Plan (either path): the shingle frame feeds (1) global shingle df
-    counts, (2) a per-doc window ranking shingles by ascending
-    (df, shingle) that keeps each doc's prefix WITH its rank, (3) the
-    verify join. Three lossless prunes stack before verification:
+    Plan: the set frame feeds (1) global shingle df counts, (2) a
+    per-doc window ranking shingles by ascending (df, shingle) that
+    keeps each doc's prefix WITH its rank, (3) the verify join. Three
+    lossless prunes stack before verification:
 
     - prefix posting join: qualifying pairs must collide on a prefix
       (rarest-first) shingle, so posting lists in the join are short by
@@ -931,45 +941,22 @@ def prefix_jaccard_pairs(
     from pyspark.sql.window import Window
 
     t_eff = t - 1e-4
-    st = None
-    wd = Window.partitionBy("doc_id")
-    if sh is None:
-        # map-only set frame: same (doc_id, shingle) universe as
-        # shingle_df (distinct per doc; < k tokens => no row), with the
-        # per-doc size attached in-row instead of a window count
-        st = lazy_persist(shingle_sets(docs, n_hashes=0))
-        dfc = (
-            st.select(F.explode("sh_set").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        prefix = (
-            st.select("doc_id", "n", F.explode("sh_set").alias("shingle"))
-            .join(dfc, "shingle")
-            .withColumn(
-                "rn", F.row_number().over(wd.orderBy("df", "shingle"))
-            )
-            .filter(
-                F.col("rn")
-                <= F.col("n") - F.ceil(F.lit(t_eff) * F.col("n")) + 1
-            )
-            .select("doc_id", "shingle", "n", "rn")
-        )
-    else:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-        dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        prefix = (
-            sh.join(dfc, "shingle")
-            .withColumn(
-                "rn", F.row_number().over(wd.orderBy("df", "shingle"))
-            )
-            .withColumn("n", F.count(F.lit(1)).over(wd))
-            .filter(
-                F.col("rn")
-                <= F.col("n") - F.ceil(F.lit(t_eff) * F.col("n")) + 1
-            )
-            .select("doc_id", "shingle", "n", "rn")
-        )
+    # same (doc_id, shingle) universe as shingle_df (distinct per doc;
+    # < k tokens => no row), with the per-doc size attached in-row
+    st = sets if sets is not None else lazy_persist(shingle_sets(docs, n_hashes=0))
+    dfc = (
+        st.select(F.explode("sh_set").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    wd = Window.partitionBy("doc_id").orderBy("df", "shingle")
+    prefix = (
+        st.select("doc_id", "n", F.explode("sh_set").alias("shingle"))
+        .join(dfc, "shingle")
+        .withColumn("rn", F.row_number().over(wd))
+        .filter(F.col("rn") <= F.col("n") - F.ceil(F.lit(t_eff) * F.col("n")) + 1)
+        .select("doc_id", "shingle", "n", "rn")
+    )
     a = prefix.select(
         F.col("doc_id").alias("doc_a"),
         "shingle",
@@ -1013,47 +1000,12 @@ def prefix_jaccard_pairs(
     # verify aggregation follows immediately, so AQE's coalesced
     # candidate shuffle feeds a wide groupBy anyway (53.7s vs 57.8s at
     # the 10x artifact, 2.7x WORSE at sf0.1 where the extra shuffle
-    # dominates).
-    if st is not None:
-        # in-row verify: every candidate shares >= 1 prefix shingle, so
-        # c >= 1 always — identical output to the inner shingle-equijoin
-        a_st = st.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("sh_set").alias("set_a"),
-            F.col("n").alias("na2"),
-        )
-        b_st = st.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("sh_set").alias("set_b"),
-            F.col("n").alias("nb2"),
-        )
-        jac = F.round(
-            F.col("c").cast("double")
-            / (F.col("na2") + F.col("nb2") - F.col("c")),
-            6,
-        )
-        return (
-            cands.join(a_st, "doc_a")
-            .join(b_st, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("set_a", "set_b")).alias("c"),
-                "na2",
-                "nb2",
-            )
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= t)
-        )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cands.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
+    # dominates). Every candidate shares >= 1 prefix shingle, so c >= 1.
+    return (
+        _set_overlaps(cands, st)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= t)
     )
-    return _jaccard_select(common, sizes, min_jac=t)
 
 
 # --------------------------------------------------------------------------
@@ -1114,7 +1066,8 @@ def dedup_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped to 9 (identical docs land in bucket 9 and arrive via star
     edges, so their recall is structurally 1.0).
 
-    Scale shape: one shared persisted shingle scan feeds both arms;
+    Scale shape: one persisted shingle_sets frame (sets, sizes and
+    signatures, all in-row) feeds both arms;
     the truth side is the prefix plan (rare-shingle collisions only),
     the candidate side is the capped band self-join; the final left
     join starts FROM the true-pair list — at 100 TB this is the audit
@@ -1139,9 +1092,9 @@ def dedup_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_recall_curve_frame(docs: DataFrame) -> DataFrame:
     """Composable core of dedup_lsh_recall_curve over any (doc_id,
     text[, toks]) frame — the per-bucket banding-recall curve."""
-    sh = lazy_persist(shingle_df(docs))
-    truth = prefix_jaccard_pairs(docs, t=RECALL_CURVE_T, sh=sh)
-    grouped = lazy_persist(signature_groups(minhash_signatures(sh)))
+    st = lazy_persist(shingle_sets(docs))
+    truth = prefix_jaccard_pairs(docs, t=RECALL_CURVE_T, sets=st)
+    grouped = lazy_persist(signature_groups(st.select("doc_id", *MH_COLS)))
     cands = band_candidates(None, grouped=grouped).withColumn(
         "hit", F.lit(1)
     )
@@ -1164,6 +1117,70 @@ def lsh_recall_curve_frame(docs: DataFrame) -> DataFrame:
                 F.sum(caught).cast("double") / F.count(F.lit(1)), 6
             ).alias("recall"),
         )
+    )
+
+
+def _cap_sweep_sql(caps: list[int]) -> str:
+    """DuckDB tail mirroring _cap_sweep over a `scored` (min_cap, ok)
+    CTE: one row per cap in ``caps``."""
+    return f"""caps AS (SELECT unnest({caps}) AS cap),
+    per_cap AS (
+      SELECT caps.cap, COUNT(s.min_cap) AS n_candidates,
+             COALESCE(SUM(s.ok), 0) AS n_verified
+      FROM caps LEFT JOIN scored s ON s.min_cap <= caps.cap
+      GROUP BY caps.cap
+    ),
+    total AS (SELECT COALESCE(SUM(ok), 0) AS tot FROM scored)
+    SELECT CAST(cap AS BIGINT) AS cap,
+           CAST(n_candidates AS BIGINT) AS n_candidates,
+           CAST(n_verified AS BIGINT) AS n_verified,
+           CASE WHEN tot > 0
+                THEN ROUND(CAST(n_verified AS DOUBLE) / tot, 6)
+           END AS recall_vs_max
+    FROM per_cap CROSS JOIN total"""
+
+
+def _cap_sweep(scored: DataFrame, caps: list[int]) -> DataFrame:
+    """The one recall-vs-cap tail of both calibrations: (min_cap, ok)
+    scored candidates -> one row per cap with the candidates a cap
+    admits (min_cap <= cap), how many of them verify, and recall
+    normalized to the largest cap. The pairs pre-aggregate by min_cap
+    FIRST, so the <= join runs between two kernel-sized frames
+    (<= max(caps) rows vs |caps| rows). Hinting broadcast on the
+    PRESERVED side of a left-outer non-equi join can't be honored —
+    Spark's BroadcastNestedLoopJoin would have to broadcast the full
+    candidate-pair set instead, an executor-OOM risk at scale."""
+    scored = lazy_persist(scored)
+    by_mincap = scored.groupBy("min_cap").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.coalesce(F.sum("ok"), F.lit(0)).alias("n_ok"),
+    )
+    cap_df = scored.sparkSession.createDataFrame([(c,) for c in caps], "cap int")
+    per_cap = (
+        cap_df.join(
+            F.broadcast(by_mincap), F.col("min_cap") <= F.col("cap"), "left"
+        )
+        .groupBy("cap")
+        .agg(
+            F.coalesce(F.sum("n_pairs"), F.lit(0))
+            .cast("bigint")
+            .alias("n_candidates"),
+            F.coalesce(F.sum("n_ok"), F.lit(0))
+            .cast("bigint")
+            .alias("n_verified"),
+        )
+    )
+    total = F.broadcast(
+        scored.agg(F.coalesce(F.sum("ok"), F.lit(0)).alias("_tot"))
+    )
+    return per_cap.crossJoin(total).select(
+        F.col("cap").cast("bigint").alias("cap"),
+        "n_candidates",
+        "n_verified",
+        F.when(
+            F.col("_tot") > 0,
+            F.round(F.col("n_verified").cast("double") / F.col("_tot"), 6),
+        ).alias("recall_vs_max"),
     )
 
 
@@ -1213,21 +1230,7 @@ CAP_SWEEP = [5, 10, 20, 40]
         LEFT JOIN sizes sa ON sa.doc_id = p.doc_a
         LEFT JOIN sizes sb ON sb.doc_id = p.doc_b
     ),
-    caps AS (SELECT unnest({CAP_SWEEP}) AS cap),
-    per_cap AS (
-      SELECT caps.cap, COUNT(s.min_cap) AS n_candidates,
-             COALESCE(SUM(s.ok), 0) AS n_verified
-      FROM caps LEFT JOIN scored s ON s.min_cap <= caps.cap
-      GROUP BY caps.cap
-    ),
-    total AS (SELECT COALESCE(SUM(ok), 0) AS tot FROM scored)
-    SELECT CAST(cap AS BIGINT) AS cap,
-           CAST(n_candidates AS BIGINT) AS n_candidates,
-           CAST(n_verified AS BIGINT) AS n_verified,
-           CASE WHEN tot > 0
-                THEN ROUND(CAST(n_verified AS DOUBLE) / tot, 6)
-           END AS recall_vs_max
-    FROM per_cap CROSS JOIN total
+    {_cap_sweep_sql(CAP_SWEEP)}
     """,
 )
 def dedup_band_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1242,135 +1245,35 @@ def dedup_band_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pair is annotated with the MINIMUM cap at which it
     appears (min over colliding bands of max(rn_a, rn_b); star edges
     from identical-signature groups are cap-independent, min_cap = 1),
-    then the pairs PRE-AGGREGATE to (min_cap, n_pairs, n_ok) — at most
-    max(CAP_SWEEP) rows — before the 4-row caps frame joins on
-    min_cap <= cap, so the broadcast nested loop really does carry a
-    kernel-sized build side (broadcasting the caps frame itself on the
-    preserved side of the left join is a hint Spark cannot honor).
-    Never one pipeline per cap value. The pair space is bounded by the
+    and _cap_sweep counts every cap from that one scored frame. Never
+    one pipeline per cap value. The pair space is bounded by the
     sweep max (rn <= {max(CAP_SWEEP)} before the self-join), so the
     sweep itself carries the cap discipline it calibrates. Output is
     exactly |CAP_SWEEP| rows."""
-    from pyspark.sql.window import Window
-
     t = load_tables(spark, sf_dir)
     st = lazy_persist(shingle_sets(with_toks(t["documents"])))
-    grouped = lazy_persist(
-        signature_groups(
-            st.select("doc_id", *[f"mh{i}" for i in range(N_HASHES)])
-        )
-    )
-    star = grouped.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.lit(1).alias("min_cap"),
-    )
-    reps = grouped.filter(F.col("doc_id") == F.col("rep")).drop("rep")
-    wc = Window.partitionBy("band_idx", "band_key").orderBy("doc_id")
-    rb = (
-        band_keys_df(reps)
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= max(CAP_SWEEP))
-    )
-    a = rb.select(
-        F.col("doc_id").alias("doc_a"),
-        "band_idx",
-        "band_key",
-        F.col("rn").alias("rn_a"),
-    )
-    b = rb.select(
-        F.col("doc_id").alias("doc_b"),
-        "band_idx",
-        "band_key",
-        F.col("rn").alias("rn_b"),
-    )
+    grouped = lazy_persist(signature_groups(st.select("doc_id", *MH_COLS)))
     rep_pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _band_pairs(_ranked_rep_bands(grouped, max(CAP_SWEEP)), "rn")
         .groupBy("doc_a", "doc_b")
         .agg(F.min(F.greatest("rn_a", "rn_b")).alias("min_cap"))
     )
-    cands = lazy_persist(rep_pairs.unionByName(star))
-    # verify in-row off the persisted map-only sets frame: two
-    # doc_id-keyed joins + array_intersect replace the old exploded
-    # common join, sizes joins and per-pair re-aggregation. A
-    # zero-overlap pair scores jac = 0 here where the old left join
-    # yielded c = NULL — both fall to ok = 0 (NULL >= t is NULL).
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 6
+    cands = lazy_persist(
+        rep_pairs.unionByName(_star_edges(grouped, F.lit(1).alias("min_cap")))
     )
-    scored = (
-        cands.join(
-            st.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("sh_set").alias("set_a"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            st.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("sh_set").alias("set_b"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "min_cap",
-            F.size(F.array_intersect("set_a", "set_b")).alias("c"),
-            "na",
-            "nb",
-        )
-        .select(
-            "min_cap",
-            F.when(jac >= JACCARD_MIN, F.lit(1)).otherwise(F.lit(0)).alias("ok"),
-        )
-    )
-    scored = lazy_persist(scored)
-    # pre-aggregate by min_cap FIRST: the <= join then runs between two
-    # kernel-sized frames (<= max(CAP_SWEEP) rows vs |CAP_SWEEP| rows).
-    # Hinting broadcast on the PRESERVED side of a left-outer non-equi
-    # join can't be honored — Spark's BroadcastNestedLoopJoin would have
-    # to broadcast the full candidate-pair set instead, an executor-OOM
-    # risk at scale.
-    by_mincap = scored.groupBy("min_cap").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.coalesce(F.sum("ok"), F.lit(0)).alias("n_ok"),
-    )
-    caps = spark.createDataFrame([(c,) for c in CAP_SWEEP], "cap int")
-    per_cap = (
-        caps.join(
-            F.broadcast(by_mincap), F.col("min_cap") <= F.col("cap"), "left"
-        )
-        .groupBy("cap")
-        .agg(
-            F.coalesce(F.sum("n_pairs"), F.lit(0))
-            .cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce(F.sum("n_ok"), F.lit(0))
-            .cast("bigint")
-            .alias("n_verified"),
-        )
-    )
-    total = F.broadcast(
-        scored.agg(F.coalesce(F.sum("ok"), F.lit(0)).alias("_tot"))
-    )
-    return per_cap.crossJoin(total).select(
-        F.col("cap").cast("bigint").alias("cap"),
-        "n_candidates",
-        "n_verified",
-        F.when(
-            F.col("_tot") > 0,
-            F.round(F.col("n_verified").cast("double") / F.col("_tot"), 6),
-        ).alias("recall_vs_max"),
+    # a zero-overlap pair scores jac = 0 here where the oracle's left
+    # join yields c = NULL — both fall to ok = 0 (NULL >= t is NULL)
+    ok = F.when(_jaccard() >= JACCARD_MIN, F.lit(1)).otherwise(F.lit(0))
+    return _cap_sweep(
+        _set_overlaps(cands, st).select("min_cap", ok.alias("ok")), CAP_SWEEP
     )
 
 
 def salted_ngram_jaccard_pairs(
     docs: DataFrame, hot_df_min: int = 50, n_salts: int = 8
 ) -> DataFrame:
-    """EXACT Jaccard pairs (same result as ngram_jaccard_pairs) with
+    """EXACT Jaccard pairs (same result as the unbounded pair_overlaps
+    core, _jaccard_select over pair_overlaps(shingle_df(docs))) with
     head-shingle skew mitigation: shingles whose document frequency
     exceeds `hot_df_min` are routed through a salted self-join
     (hot_cold_split_join), spreading each hot posting list's O(df²)
@@ -1605,35 +1508,9 @@ def dedup_paragraph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# SimHash (60-bit, md5-derived) — Arrow-batched pandas UDF fast path
+# SimHash (60-bit, md5-derived), folded in-row by JVM built-ins
 # --------------------------------------------------------------------------
 SIMHASH_BITS = 60
-
-
-def _simhash_of(text: str) -> int:
-    toks = text.split()
-    if not toks:
-        return 0
-    hv = np.fromiter(
-        (int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks),
-        dtype=np.int64,
-        count=len(toks),
-    )
-    bits = (hv[:, None] >> np.arange(SIMHASH_BITS)) & 1  # (n_tokens, 60)
-    votes = np.where(bits == 1, 1, -1).sum(axis=0)
-    sig = int(((votes > 0).astype(np.int64) << np.arange(SIMHASH_BITS)).sum())
-    return sig
-
-
-def simhash_udf() -> "F.udf":
-    """Arrow-batched SimHash UDF (built lazily: pandas_udf registration
-    needs an active SparkSession)."""
-
-    @F.pandas_udf("bigint")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(_simhash_of)
-
-    return _udf
 
 
 # shared head of the simhash oracle chain (toks -> per-token 60-bit
@@ -1672,17 +1549,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The previous plan exploded tokens into a 60-column bit-vote groupBy;
     correct, but agg-buffer-bound (61 fields per buffer) and it paid a
     shuffle the in-row fold doesn't need — measured 2x slower at sf0.1.
-    `_fan_out` spreads an under-split input across cores first (no-op on
-    big inputs, so no shuffle is added at scale).
+    `_spread_docs` spreads an under-split input across cores first
+    (no-op on big inputs, so no shuffle is added at scale).
     Output is 8 bytes/doc; downstream near-dup search bands on
-    signature prefixes exactly like minhash (see simhash_pairs).
-    A row-at-a-time Arrow UDF variant (simhash_udf) is kept only as the
-    compat path for pickled-function jobs; it is NOT the registered
-    plan (per-token Python hashing does not survive 100TB)."""
-    from disco_spark.operators.classic import DiscoJob
-
+    pigeonhole blocks of the signature (simhash_pigeonhole_pairs)."""
     t = load_tables(spark, sf_dir)
-    return simhash_frame(DiscoJob._fan_out(with_toks(t["documents"])))
+    return simhash_frame(_spread_docs(with_toks(t["documents"])))
 
 
 def simhash_frame(docs: DataFrame) -> DataFrame:
@@ -1798,41 +1670,14 @@ def simhash_pigeonhole_pairs(
     bands = sigs.select(
         "doc_id", "simhash", F.posexplode(keys).alias("band_idx", "band_key")
     )
-    a = bands.toDF("doc_a", "sig_a", "band_idx", "band_key")
-    b = bands.toDF("doc_b", "sig_b", "band_idx", "band_key")
     pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
+        _band_pairs(bands, "simhash")
+        .select("doc_a", "doc_b", "simhash_a", "simhash_b")
         .distinct()
     )
+    xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     return (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def simhash_pairs(docs_with_sig: DataFrame, max_hamming: int = 3, band_bits: int = 20) -> DataFrame:
-    """Near-dup pairs: band on the top `band_bits` bits (join-bucketed),
-    then exact hamming filter via bit_count(xor) — both JVM built-ins."""
-    a = docs_with_sig.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("sig_a"),
-        F.shiftright("simhash", SIMHASH_BITS - band_bits).alias("band"),
-    )
-    b = docs_with_sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("sig_b"),
-        F.shiftright("simhash", SIMHASH_BITS - band_bits).alias("band"),
-    )
-    return (
-        a.join(b, "band")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+        pairs.withColumn("hamming", F.bit_count(xor).cast("long"))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
@@ -1939,6 +1784,20 @@ def _char_hist(col: str = "text") -> Column:
     return F.expr(f"array({cells})")
 
 
+def _edit_payload(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """The one edit-distance verify payload: ``pairs`` (doc_a, doc_b,
+    ...) joined to both docs' text (ta/tb) and char histograms (ha/hb)."""
+
+    def side(s: str) -> DataFrame:
+        return docs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("text").alias(f"t{s}"),
+            _char_hist().alias(f"h{s}"),
+        )
+
+    return pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
+
+
 # lossless prescreen, shared by dedup_edit_distance and the cap
 # calibration: ed_lb = max(length gap, ceil(L1/2)) lower-bounds the true
 # edit distance, so a pair whose BOUND already breaks either threshold
@@ -2010,19 +1869,8 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = spread_verify_pairs(
         capped_band_candidates(minhash_from_toks(with_toks(docs)))
     )
-    ta = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("text").alias("ta"),
-        _char_hist().alias("ha"),
-    )
-    tb = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("text").alias("tb"),
-        _char_hist().alias("hb"),
-    )
     return (
-        pairs.join(ta, "doc_a")
-        .join(tb, "doc_b")
+        _edit_payload(pairs, docs)
         .where(_ED_SCREEN_SQL)
         .withColumn("edit_dist", F.levenshtein("ta", "tb", ED_MAX))
         .where(
@@ -2063,21 +1911,7 @@ EDIT_CAP_SWEEP = [2, 4, 8, 16, 32]
         JOIN documents a ON a.doc_id = p.doc_a
         JOIN documents b ON b.doc_id = p.doc_b
     ),
-    caps AS (SELECT unnest({EDIT_CAP_SWEEP}) AS cap),
-    per_cap AS (
-      SELECT caps.cap, COUNT(s.min_cap) AS n_candidates,
-             COALESCE(SUM(s.ok), 0) AS n_verified
-      FROM caps LEFT JOIN scored s ON s.min_cap <= caps.cap
-      GROUP BY caps.cap
-    ),
-    total AS (SELECT COALESCE(SUM(ok), 0) AS tot FROM scored)
-    SELECT CAST(cap AS BIGINT) AS cap,
-           CAST(n_candidates AS BIGINT) AS n_candidates,
-           CAST(n_verified AS BIGINT) AS n_verified,
-           CASE WHEN tot > 0
-                THEN ROUND(CAST(n_verified AS DOUBLE) / tot, 6)
-           END AS recall_vs_max
-    FROM per_cap CROSS JOIN total
+    {_cap_sweep_sql(EDIT_CAP_SWEEP)}
     """,
 )
 def dedup_edit_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2104,26 +1938,13 @@ def dedup_edit_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped = lazy_persist(
         signature_groups(minhash_from_toks(with_toks(docs)))
     )
-    star = grouped.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.lit(1).alias("min_cap"),
-    )
     ranked = (
         ranked_band_candidates(grouped)
         .filter(F.col("cr") <= max(EDIT_CAP_SWEEP))
         .select("doc_a", "doc_b", F.col("cr").alias("min_cap"))
     )
-    cands = spread_verify_pairs(ranked.unionByName(star))
-    ta = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("text").alias("ta"),
-        _char_hist().alias("ha"),
-    )
-    tb = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("text").alias("tb"),
-        _char_hist().alias("hb"),
+    cands = spread_verify_pairs(
+        ranked.unionByName(_star_edges(grouped, F.lit(1).alias("min_cap")))
     )
     # AND short-circuits in codegen: screened-out pairs never run the
     # banded levenshtein, but still count as candidates (ok = 0)
@@ -2134,39 +1955,9 @@ def dedup_edit_cap_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"     <= {ED_NUM} * greatest(length(ta), length(tb))"
         " THEN 1 ELSE 0 END"
     )
-    scored = lazy_persist(
-        cands.join(ta, "doc_a").join(tb, "doc_b").select("min_cap", ok.alias("ok"))
-    )
-    by_mincap = scored.groupBy("min_cap").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.coalesce(F.sum("ok"), F.lit(0)).alias("n_ok"),
-    )
-    caps = spark.createDataFrame([(c,) for c in EDIT_CAP_SWEEP], "cap int")
-    per_cap = (
-        caps.join(
-            F.broadcast(by_mincap), F.col("min_cap") <= F.col("cap"), "left"
-        )
-        .groupBy("cap")
-        .agg(
-            F.coalesce(F.sum("n_pairs"), F.lit(0))
-            .cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce(F.sum("n_ok"), F.lit(0))
-            .cast("bigint")
-            .alias("n_verified"),
-        )
-    )
-    total = F.broadcast(
-        scored.agg(F.coalesce(F.sum("ok"), F.lit(0)).alias("_tot"))
-    )
-    return per_cap.crossJoin(total).select(
-        F.col("cap").cast("bigint").alias("cap"),
-        "n_candidates",
-        "n_verified",
-        F.when(
-            F.col("_tot") > 0,
-            F.round(F.col("n_verified").cast("double") / F.col("_tot"), 6),
-        ).alias("recall_vs_max"),
+    return _cap_sweep(
+        _edit_payload(cands, docs).select("min_cap", ok.alias("ok")),
+        EDIT_CAP_SWEEP,
     )
 
 
@@ -2409,51 +2200,24 @@ def dedup_minhash_estimate_audit(
     Plan: one persisted MAP-ONLY shingle_sets frame (per-doc distinct
     array + size + signature, all in-row) serves estimate AND exact
     sides: candidates stay band-bucketed (never all pairs); the
-    signature agreement count and the exact intersection
-    (array_intersect) are both computed in-row on the SAME two
-    doc_id-keyed joins, so the old five joins + per-pair
-    re-aggregation collapse to two exchanges. The cnt > 0 filter
-    reproduces the old inner shingle-equijoin, which dropped
-    zero-overlap candidate pairs. All hashing is md5
+    signature agreement count and the exact intersection are both
+    computed in-row on the SAME two doc_id-keyed joins of
+    _set_overlaps. The c > 0 filter drops zero-overlap candidate
+    pairs, as the oracle's inner shingle-equijoin does. All hashing is md5
     (engine-identical), all counts integers, two rounded double
     divisions per pair."""
     docs = load_tables(spark, sf_dir)["documents"]
     st = lazy_persist(shingle_sets(docs))
-    cands = band_candidates(
-        st.select("doc_id", *[f"mh{i}" for i in range(N_HASHES)])
-    )
-    a = st.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh_set").alias("set_a"),
-        F.col("n").alias("na"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_HASHES)],
-    )
-    b = st.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh_set").alias("set_b"),
-        F.col("n").alias("nb"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_HASHES)],
-    )
+    cands = band_candidates(st.select("doc_id", *MH_COLS))
     n_match = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-        for i in range(N_HASHES)
+        (F.col(f"{m}_a") == F.col(f"{m}_b")).cast("int") for m in MH_COLS
     )
     est_j = F.col("n_match").cast("double") / N_HASHES
-    exact_j = F.col("cnt").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("cnt")
-    )
+    exact_j = _jaccard(digits=None)
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            n_match.alias("n_match"),
-            F.size(F.array_intersect("set_a", "set_b")).alias("cnt"),
-            "na",
-            "nb",
-        )
-        .filter(F.col("cnt") > 0)
+        _set_overlaps(cands, st, *MH_COLS)
+        .select("doc_a", "doc_b", n_match.alias("n_match"), "c", "na", "nb")
+        .filter(F.col("c") > 0)
         .select(
             "doc_a",
             "doc_b",
@@ -2538,45 +2302,16 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     best-jaccard frame (no per-threshold replication of the pair set —
     see the in-function note). The scoring
     pass rides ONE persisted map-only shingle_sets frame (per-doc
-    distinct array + size + signature in-row): two doc_id-keyed joins
-    with array_intersect replace the old exploded verify exchanges,
-    sizes joins and per-pair re-aggregation; cnt > 0 reproduces the
-    old inner shingle-equijoin's drop of zero-overlap pairs."""
+    distinct array + size + signature in-row) through _set_overlaps;
+    c > 0 drops zero-overlap pairs, as the oracle's inner
+    shingle-equijoin does."""
     docs = load_tables(spark, sf_dir)["documents"]
     st = lazy_persist(shingle_sets(docs))
-    cands = band_candidates(
-        st.select("doc_id", *[f"mh{i}" for i in range(N_HASHES)])
-    )
-    a = st.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh_set").alias("set_a"),
-        F.col("n").alias("na"),
-    )
-    b = st.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh_set").alias("set_b"),
-        F.col("n").alias("nb"),
-    )
+    cands = band_candidates(st.select("doc_id", *MH_COLS))
     scored = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("set_a", "set_b")).alias("cnt"),
-            "na",
-            "nb",
-        )
-        .filter(F.col("cnt") > 0)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("cnt").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("cnt")),
-                6,
-            ).alias("jac"),
-        )
+        _set_overlaps(cands, st)
+        .filter(F.col("c") > 0)
+        .select("doc_a", "doc_b", _jaccard().alias("jac"))
     )
     scored = lazy_persist(scored)
     # ONE multi-threshold aggregation over the verified pairs instead of

@@ -57,7 +57,7 @@ def _store_manifest(docs: DataFrame, subset: str) -> dict:
             "band_size": BAND_SIZE,
             "shingle_k": SHINGLE_K,
             "band_cap": BAND_CAP,
-            "hash_family": "md5-salted",  # minhash_signatures
+            "hash_family": "md5-salted",  # minhash_from_toks
         },
         "version": 4,  # v4: signature-grouped reps + BAND_CAP bucket cap
     }

@@ -370,20 +370,26 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
 
     Cost at 100 TB: one read of the serveable codes + one label-
     partitioned write — code rows only (a few bytes/vector), embeddings
-    are never touched. The manifest is left as built (compaction is
-    invisible to ensure_index, exactly like add/delete); a marker file
-    records that layers were folded."""
+    are never touched; centroids and codebooks are copied as files.
+    The manifest is copied as built (compaction is invisible to
+    ensure_index, exactly like add/delete); a marker file records that
+    layers were folded. The compacted store is written whole beside the
+    old one and swapped in (store.swap), so a crash at any step leaves
+    the old layered store or the new folded one — never folded codes
+    beside the delta batches and tombstones they already absorbed."""
     codes = ann_index_serveable_codes(spark, path)
-    # written aside and swapped in: a crash leaves codes/ old, new or
-    # (between the two renames) missing, which ensure_index rebuilds
-    store.swap(
-        os.path.join(path, "codes"),
-        lambda d: codes.write.partitionBy("label").mode("overwrite").parquet(d),
-    )
-    shutil.rmtree(os.path.join(path, "codes_delta"), ignore_errors=True)
-    shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
-    with open(os.path.join(path, "compacted.json"), "w") as fh:
-        json.dump({"compacted": True}, fh)
+
+    def write(d: str) -> None:
+        codes.write.partitionBy("label").mode("overwrite").parquet(
+            os.path.join(d, "codes")
+        )
+        for name in ("centroids", "codebooks"):
+            shutil.copytree(os.path.join(path, name), os.path.join(d, name))
+        shutil.copy2(os.path.join(path, "manifest.json"), d)
+        with open(os.path.join(d, "compacted.json"), "w") as fh:
+            json.dump({"compacted": True}, fh)
+
+    store.swap(path, write)
 
 
 @query(

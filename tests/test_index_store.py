@@ -292,6 +292,39 @@ def test_compact_topk_oracle(spark):
     compare_query(spark, "ann_index_compact_topk", SF_SMOKE)
 
 
+def test_interrupted_compaction_is_not_folded_twice(spark, tmp_path, monkeypatch):
+    """A compaction that dies writing its compacted.json marker must not
+    leave folded codes beside the delta batches they absorbed: the rerun
+    would add and fold the odd half a second time. After the crash and
+    one rerun, every vec_id has exactly one code row and the oracle
+    passes."""
+    import builtins
+    import os
+
+    from disco_spark import store
+    from disco_spark.similarity import index_store
+
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
+    raised = []
+
+    def open_failing_marker_once(file, *args, **kwargs):
+        if str(file).endswith("compacted.json") and not raised:
+            raised.append(True)
+            raise OSError("injected")
+        return builtins.open(file, *args, **kwargs)
+
+    # index_store's own `open` (the builtin otherwise) writes the marker
+    monkeypatch.setattr(index_store, "open", open_failing_marker_once, raising=False)
+    compact_topk = registry.QUERIES["ann_index_compact_topk"]
+    with pytest.raises(OSError, match="injected"):
+        compact_topk(spark, SF_SMOKE)
+    compact_topk(spark, SF_SMOKE).collect()
+    path = store.store_path("ann_index", SF_SMOKE, "_compact")
+    codes = spark.read.parquet(os.path.join(path, "codes"))
+    assert codes.count() == codes.select("vec_id").distinct().count()
+    compare_query(spark, "ann_index_compact_topk", SF_SMOKE)
+
+
 def test_missing_codes_dir_triggers_rebuild(spark, tmp_path):
     """A manifest-matching store whose codes dir is GONE (the state a
     crash mid-compaction can leave: manifest intact, codes swapped out

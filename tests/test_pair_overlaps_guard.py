@@ -2,7 +2,8 @@
 never be re-promoted into a production default (the round-8 cluster_map
 regression; measured sf1 OOM even with salting). Callers declare the
 bounded universe they feed in; the unbounded opt-out is a loud literal
-pinned to exactly one call site."""
+that no production call site passes (tests use it as the exact
+reference)."""
 
 from __future__ import annotations
 
@@ -43,11 +44,11 @@ def test_bounded_and_optout_universes_accepted(spark):
         assert sizes.count() == 2
 
 
-def test_optout_literal_has_exactly_one_production_call_site():
+def test_optout_literal_has_no_production_call_site():
     """Source-scan pin: the unbounded opt-out string lives only in
-    dedup/dedup.py, and exactly ONE call site passes it (the exact
-    small-SF oracle core ngram_jaccard_pairs). A second call site means
-    someone re-promoted the quadratic join — fail loudly."""
+    dedup/dedup.py, and NO production call site passes it (the exact
+    small-SF references live in the tests). A call site means someone
+    re-promoted the quadratic join — fail loudly."""
     hits: dict[str, list[str]] = {}
     for path in glob.glob(
         os.path.join(REPO, "disco_spark", "**", "*.py"), recursive=True
@@ -63,14 +64,13 @@ def test_optout_literal_has_exactly_one_production_call_site():
         for ln in src_lines
         if re.search(r"universe\s*=\s*_EXACT_BASELINE_OPTOUT", ln)
     ]
-    assert len(call_sites) == 1, call_sites
+    assert len(call_sites) == 0, call_sites
 
 
 def test_no_registered_query_defaults_to_the_unbounded_join():
-    """Only the dedicated exact-baseline queries may reference the
-    unbounded core: dedup_ngram_jaccard rides the salted split join and
-    ngram_jaccard_pairs is its composable (non-registered) sibling.
-    Every other registered dedup query composes a bounded discipline."""
+    """No registered query may pass the unbounded opt-out: every one
+    composes a bounded discipline (dedup_ngram_jaccard, the exact
+    baseline, rides the salted split join)."""
     import inspect
 
     from disco_spark import registry
@@ -79,7 +79,9 @@ def test_no_registered_query_defaults_to_the_unbounded_join():
     offenders = [
         name
         for name, fn in registry.QUERIES.items()
-        if name != "dedup_ngram_jaccard"
-        and "ngram_jaccard_pairs(" in inspect.getsource(fn)
+        if re.search(
+            r"_EXACT_BASELINE_OPTOUT|UNBOUNDED_EXACT_BASELINE",
+            inspect.getsource(fn),
+        )
     ]
     assert offenders == [], offenders

@@ -31,13 +31,12 @@ def test_edit_cap_calibration_oracle(spark):
 
 def _grouped(spark, docs):
     from disco_spark.dedup.dedup import (
-        minhash_signatures,
-        shingle_df,
+        minhash_from_toks,
         signature_groups,
     )
     from disco_spark.textops.analysis import with_toks
 
-    return signature_groups(minhash_signatures(shingle_df(with_toks(docs))))
+    return signature_groups(minhash_from_toks(with_toks(docs)))
 
 
 def _clique_docs(spark, n=14):

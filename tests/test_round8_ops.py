@@ -60,8 +60,7 @@ def test_band_cap_bounds_bucket_pairs(spark):
     from disco_spark.dedup.dedup import (
         BAND_CAP,
         band_candidates,
-        minhash_signatures,
-        shingle_df,
+        minhash_from_toks,
     )
     from disco_spark.textops.analysis import with_toks
 
@@ -72,7 +71,7 @@ def test_band_cap_bounds_bucket_pairs(spark):
         "doc_id long, text string",
     )
     pairs = band_candidates(
-        minhash_signatures(shingle_df(with_toks(docs)))
+        minhash_from_toks(with_toks(docs))
     ).collect()
     replica = [
         (r.doc_a, r.doc_b) for r in pairs if r.doc_a < 100 and r.doc_b < 100
@@ -101,8 +100,7 @@ def test_edit_distance_budget_semantics(spark):
         ED_DEN,
         band_candidates,
         dedup_edit_distance,
-        minhash_signatures,
-        shingle_df,
+        minhash_from_toks,
     )
     from disco_spark.textops.analysis import with_toks
 
@@ -116,7 +114,7 @@ def test_edit_distance_budget_semantics(spark):
     cands = {
         (r.doc_a, r.doc_b)
         for r in band_candidates(
-            minhash_signatures(shingle_df(with_toks(docs)))
+            minhash_from_toks(with_toks(docs))
         ).collect()
     }
     assert (0, 1) in cands and (0, 2) in cands
@@ -301,8 +299,7 @@ def test_band_cap_soundness_property(spark):
     from disco_spark.dedup.dedup import (
         band_candidates,
         band_keys_df,
-        minhash_signatures,
-        shingle_df,
+        minhash_from_toks,
     )
     from disco_spark.textops.analysis import with_toks
 
@@ -319,7 +316,7 @@ def test_band_cap_soundness_property(spark):
         rows.append((doc_id, " ".join(rng.choices(vocab, k=rng.randint(5, 12)))))
         doc_id += 1
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signatures(shingle_df(with_toks(docs))).persist()
+    sig = minhash_from_toks(with_toks(docs)).persist()
 
     capped = {
         (r.doc_a, r.doc_b) for r in band_candidates(sig).collect()

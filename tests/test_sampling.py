@@ -115,8 +115,7 @@ def test_cluster_aware_split_eliminates_leakage(spark):
     from disco_spark import registry
     from disco_spark.dedup.dedup import (
         band_candidates,
-        minhash_signatures,
-        shingle_df,
+        minhash_from_toks,
     )
     from disco_spark.session import load_tables
     from disco_spark.textops.analysis import with_toks
@@ -129,7 +128,7 @@ def test_cluster_aware_split_eliminates_leakage(spark):
 
     split = registry.QUERIES["split_cluster_aware"](spark, sf)
     pairs = band_candidates(
-        minhash_signatures(shingle_df(with_toks(load_tables(spark, sf)["documents"])))
+        minhash_from_toks(with_toks(load_tables(spark, sf)["documents"]))
     )
     sa = split.toDF("doc_a", "split_a")
     sb = split.toDF("doc_b", "split_b")

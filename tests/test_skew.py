@@ -64,7 +64,13 @@ def test_salted_shingle_jaccard_head_heavy_corpus(spark):
     hot branch's shuffle."""
     import pyspark.sql.functions as F  # noqa: F811 — cloudpickle by-value
 
-    from disco_spark.dedup.dedup import ngram_jaccard_pairs, salted_ngram_jaccard_pairs
+    from disco_spark.dedup.dedup import (
+        _EXACT_BASELINE_OPTOUT,
+        _jaccard_select,
+        pair_overlaps,
+        salted_ngram_jaccard_pairs,
+        shingle_df,
+    )
 
     rows = [
         # 'of the day' shingle shared by all docs; per-doc tail varies
@@ -72,7 +78,9 @@ def test_salted_shingle_jaccard_head_heavy_corpus(spark):
         for i in range(200)
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    plain = ngram_jaccard_pairs(docs)
+    plain = _jaccard_select(
+        *pair_overlaps(shingle_df(docs), universe=_EXACT_BASELINE_OPTOUT)
+    )
     salted = salted_ngram_jaccard_pairs(docs, hot_df_min=20, n_salts=4)
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
     plan = salted._jdf.queryExecution().executedPlan().toString()

@@ -8,12 +8,12 @@ from pyspark.sql import functions as F
 
 from disco_spark import registry
 from disco_spark.dedup.dedup import (
-    minhash_signatures,
+    minhash_from_toks,
     shingle_df,
-    simhash_pairs,
-    simhash_udf,
+    simhash_frame,
 )
 from disco_spark.testing import compare_query
+from disco_spark.textops.analysis import with_toks
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 registry.load_all()
@@ -66,7 +66,7 @@ def near_dup_docs(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark, near_dup_docs):
-    sig = minhash_signatures(shingle_df(near_dup_docs))
+    sig = minhash_from_toks(with_toks(near_dup_docs))
     sigs = {r.doc_id: [r[f"mh{i}"] for i in range(6)] for r in sig.collect()}
     assert sigs[1] == sigs[2]  # identical docs -> identical signatures
     shared_13 = sum(a == b for a, b in zip(sigs[1], sigs[3]))
@@ -76,10 +76,13 @@ def test_minhash_lsh_finds_near_dups(spark, near_dup_docs):
 
 
 def test_simhash_hamming_separates(spark, near_dup_docs):
-    df = near_dup_docs.select("doc_id", simhash_udf()(F.col("text")).alias("simhash"))
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_pairs(df, max_hamming=60, band_bits=0).collect()}
-    assert pairs[(1, 2)] == 0  # identical
-    assert pairs[(1, 3)] < pairs[(1, 4)]  # near dup closer than unrelated
+    sigs = {r.doc_id: r.simhash for r in simhash_frame(with_toks(near_dup_docs)).collect()}
+
+    def hamming(a, b):
+        return bin(sigs[a] ^ sigs[b]).count("1")
+
+    assert hamming(1, 2) == 0  # identical
+    assert hamming(1, 3) < hamming(1, 4)  # near dup closer than unrelated
 
 
 def test_exact_dedup_groups(spark, near_dup_docs):
