@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import lazy_persist, load_tables
+from disco_spark.session import fan_out, lazy_persist, load_tables
 from disco_spark.textops.analysis import with_toks
 
 _TOKS_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
@@ -114,16 +114,14 @@ def _spread_docs(docs: DataFrame) -> DataFrame:
     whole tokenize + k-shingle + N_HASHES x md5 pass ran on ONE task
     while the other cores idled (measured 1.26 -> 0.44 s for
     shingle_sets, 1.21 -> 0.29 s for minhash_from_toks at sf0.1).
-    `DiscoJob._fan_out` is measured-size-guarded: on any input that
+    `session.fan_out` is measured-size-guarded: on any input that
     already scans as >= half the cores' worth of splits (every real
     corpus) it is a no-op, so no shuffle is added at scale. Streaming
     frames pass through untouched (their plans are micro-batch-sized
     and a repartition would reshape every batch)."""
     if docs.isStreaming:
         return docs
-    from disco_spark.operators.classic import DiscoJob
-
-    return DiscoJob._fan_out(docs)
+    return fan_out(docs)
 
 
 def shingle_df(

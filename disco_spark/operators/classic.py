@@ -1,64 +1,40 @@
 """Classic MapReduce compat layer: ``DiscoJob(map=..., reduce=...)``
-lowered onto DataFrame operations, exactly as SURVEY.md §3.1 maps the
-reference lifecycle (lib/disco/job.py Job.run → jobpack → pipeline):
+runs on the one executor, ``plans.pipeline.Pipeline``, lowered as the
+reference lowers a classic job (SURVEY.md §2.4/§3.1, jobpack.erl:380-401):
 
-    map / map_init / combiner  →  mapInPandas   (one pass, streaming)
-    partition(key, n, params)  →  repartition(n, key) when default
-                                  (JVM hash shuffle, no Python); custom
-                                  partitioners compute a label column in
-                                  a pandas UDF, then repartition(n, label)
-    sort=True                  →  sortWithinPartitions(key)  (per-group
-                                  byte order; reference unix sort
-                                  LC_ALL=C ≡ unsigned byte compare on
-                                  BinaryType keys — lib/disco/util.py:319-388)
-    reduce / reduce_init       →  mapInPandas over the shuffled stream
-                                  (a reduce task consumes its whole
-                                  label group, matching
-                                  lib/disco/worker/classic/worker.py:373-395)
+    map only      [{map,split},{map_shuffle,group_node}] -> [(split, map)]
+    map + reduce  ... + {reduce,group_label}  -> + [(group_label, reduce)]
+    reduce only   [{reduce,group_label}]      -> [(group_label, reduce)]
 
-Reference contracts mirrored (not copied):
-- map returns an iterable of (k, v)        func.py:20-37
-- combiner(key, val, buf, done, params)    func.py:48-71; flush policy is
-  the worker's (classic/worker.py:346-354) — we flush every
-  COMBINER_FLUSH_EVERY records to bound memory.
-- reduce(iter, out, params) or reduce2(iter, params) -> iterable
-                                           func.py:73-114
-
-Scale notes: both phases stream Arrow batches — no label group is ever
-materialized on the driver; the only shuffle is the one the reference
-also does (map→reduce). With the default partitioner the shuffle key is
-the record key, so Catalyst plans a plain hash exchange and map-side
-work stays in one python worker pass (map+combiner fused).
+map_shuffle is the identity here (no exchange follows a map).
+- map / map_init / combiner fuse into the split stage, one streaming
+  Python pass; the combiner (func.py:48-71) is flushed every
+  COMBINER_FLUSH_EVERY records to bound memory (classic/worker.py:346-354).
+- partition(key, n, params) is the label. A custom partitioner labels
+  pairs in the split stage (a reduce-only job gets a split stage that
+  only labels); the default one (func.py:128-129) is the JVM column
+  pmod(hash(key), n), so a reduce-only job keeps its one Python pass.
+- sort=True is ``Stage.sort``: byte order within a label (unix sort
+  LC_ALL=C, unsigned compare on BinaryType keys — util.py:319-388).
+- reduce (iter, out, params) / reduce2 (iter, params) -> pairs
+  (func.py:73-114) and reduce_init run once per label with records
+  (``combine=True``): one reduce task per label, classic/worker.py:373-395.
+The only exchange is the one the reference also does (map -> reduce).
 """
 
 from __future__ import annotations
 
 import inspect
-from collections.abc import Callable, Iterable, Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from disco_spark.functions.library import kvify
+from disco_spark.plans.pipeline import GROUP_LABEL, SPLIT, Pipeline, Stage
+from disco_spark.session import fan_out
 
-OUT_BATCH = 10_000
 COMBINER_FLUSH_EVERY = 100_000
-
-_SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _parse_bytes(raw: str) -> int:
-    """'134217728', '134217728b', '128m', '128mb', '1g' -> bytes."""
-    s = str(raw).strip().lower()
-    if s.endswith("b") and len(s) >= 2 and s[-2] in _SIZE_SUFFIX:
-        s = s[:-1]  # two-letter suffix: kb/mb/gb/tb
-    mult = 1
-    if s and s[-1] in _SIZE_SUFFIX:
-        mult = _SIZE_SUFFIX[s[-1]]
-        s = s[:-1]
-    return int(s) * mult
 
 
 class _OOBDictParam:
@@ -76,33 +52,19 @@ class _OOBDictParam:
         return a
 
 
-class _Out:
-    """reduce's ``out.add(k, v)`` collector (reference func.py:73-91)."""
-
-    __slots__ = ("rows",)
-
-    def __init__(self):
-        self.rows: list[tuple] = []
-
-    def add(self, k, v):
-        self.rows.append((k, v))
-
-
-def _rows_of(pdf: pd.DataFrame) -> Iterator[tuple]:
-    return zip(*(pdf[c] for c in pdf.columns)) if len(pdf.columns) > 1 else (
-        (v,) for v in pdf[pdf.columns[0]]
-    )
-
-
-def _rebatch(pairs: Iterable[tuple], columns=("key", "value")) -> Iterator[pd.DataFrame]:
-    buf: list[tuple] = []
-    for p in pairs:
-        buf.append(p)
-        if len(buf) >= OUT_BATCH:
-            yield pd.DataFrame(buf, columns=list(columns))
-            buf = []
-    if buf:
-        yield pd.DataFrame(buf, columns=list(columns))
+def _labeled(df: DataFrame) -> DataFrame:
+    """Input rows as pipeline records (label 0, key, value): a single
+    column is the key with a null value, two columns are the pair, and
+    wider rows travel as one struct key. Columns are taken by position,
+    so an input column named ``label`` is data, not a label."""
+    width = len(df.columns)
+    df = df.toDF(*(f"_{i}" for i in range(width)))
+    if width == 2:
+        key, value = F.col("_0"), F.col("_1")
+    else:
+        key = F.col("_0") if width == 1 else F.struct(*df.columns)
+        value = F.lit(None).cast("string")
+    return df.select(F.lit(0).alias("label"), key.alias("key"), value.alias("value"))
 
 
 class DiscoJob:
@@ -150,125 +112,98 @@ class DiscoJob:
         self.map_output = map_output
         self.reduce_output = reduce_output
 
-    # -- map + combiner (fused, one python worker pass) ------------------
-    def _map_stage(self, df: DataFrame) -> DataFrame:
-        user_map, user_init = self.map, self.map_init
-        user_combiner, params = self.combiner, self.params
+    # -- split stage: map_init + map + combiner (+ custom label) ---------
+    def _split_stage(self, width: int, n: int, output: str) -> Stage:
+        user_map, params = self.map, self.params
+        user_init, user_combiner = (self.map_init, self.combiner) if user_map else (None, None)
+        label_of = self.partition if self.reduce is not None else None
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            inited = False
+        def process(iface, state, _label, inp):
+            if user_map is None or width == 2:
+                entries = inp
+            elif width == 1:
+                entries = (k for k, _v in inp)
+            else:
+                entries = (tuple(k.values()) for k, _v in inp)
+            if user_init is not None:
+                user_init(entries, params)  # may consume a stream prologue
+            if label_of is None:
+                emit = iface.output(0).add
+            else:
+                adds: dict = {}
+
+                def emit(k, v):
+                    label = int(label_of(k, n, params))
+                    add = adds.get(label) or adds.setdefault(label, iface.output(label).add)
+                    add(k, v)
+
             buf: dict = {}
             pending = 0
 
-            def mapped():
-                nonlocal inited, pending
-                for pdf in batches:
-                    rows = _rows_of(pdf)
-                    if not inited:
-                        rows = iter(list(rows))  # entries survive init skip
-                        if user_init is not None:
-                            user_init(rows, params)
-                        inited = True
-                    for row in rows:
-                        entry = row[0] if len(row) == 1 else tuple(row)
-                        for out in user_map(entry, params):
-                            yield kvify(out)
+            def drain():
+                for k, v in user_combiner(None, None, buf, True, params) or ():
+                    emit(k, v)
+                buf.clear()
 
-            if user_combiner is None:
-                yield from _rebatch(mapped())
-                return
-
-            def combined():
-                nonlocal pending
-                for k, v in mapped():
+            for entry in entries:
+                for out in (entry,) if user_map is None else user_map(entry, params):
+                    k, v = kvify(out)
+                    if user_combiner is None:
+                        emit(k, v)
+                        continue
                     user_combiner(k, v, buf, False, params)
                     pending += 1
                     if pending >= COMBINER_FLUSH_EVERY:
-                        yield from (user_combiner(None, None, buf, True, params) or ())
-                        buf.clear()
+                        drain()
                         pending = 0
-                yield from (user_combiner(None, None, buf, True, params) or ())
+                yield
+            if user_combiner is not None:
+                drain()
 
-            yield from _rebatch(combined())
+        return Stage("map", process=process, output=output)
 
-        return df.mapInPandas(run, schema=self.map_output)
-
-    # -- shuffle ----------------------------------------------------------
-    def _shuffle(self, df: DataFrame) -> DataFrame:
-        n = self.partitions
-        if self.partition is None:
-            # default_partition co-locates equal keys; Spark's JVM hash
-            # exchange provides the same guarantee with zero Python cost.
-            return df.repartition(n, "key") if n else df.repartition("key")
-        user_part, params, nparts = self.partition, self.params, n or 32
-
-        @F.pandas_udf("int")
-        def label_of(keys: pd.Series) -> pd.Series:
-            return keys.map(lambda k: int(user_part(k, nparts, params)))
-
-        labeled = df.withColumn("__label", label_of(F.col("key")))
-        return labeled.repartition(nparts, "__label").drop("__label")
-
-    # -- reduce -----------------------------------------------------------
-    def _reduce_stage(self, df: DataFrame) -> DataFrame:
+    # -- reduce stage: one call per label --------------------------------
+    def _reduce_stage(self) -> Stage:
         user_reduce, user_init, params = self.reduce, self.reduce_init, self.params
         # reduce2 variant (iter, params) returns an iterable of pairs
         # (reference func.py:93-114); reduce (iter, out, params) uses out.add.
         is_reduce2 = len(inspect.signature(user_reduce).parameters) == 2
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            def kvstream():
-                first = True
-                for pdf in batches:
-                    rows = _rows_of(pdf)
-                    if first:
-                        rows = iter(list(rows))
-                        if user_init is not None:
-                            user_init(rows, params)
-                        first = False
-                    yield from rows
+        def process(iface, state, label, inp):
+            if user_init is not None:
+                user_init(inp, params)
+            out = iface.output(label)
+            if not is_reduce2:
+                user_reduce(inp, out, params)
+                return
+            for pair in user_reduce(inp, params):
+                out.add(*kvify(pair))
+                yield
 
-            stream = kvstream()
-            if is_reduce2:
-                yield from _rebatch(kvify(p) for p in user_reduce(stream, params))
-            else:
-                out = _Out()
-                user_reduce(stream, out, params)
-                yield from _rebatch(out.rows)
+        return Stage(
+            "reduce", process=process, combine=True, sort=self.sort, output=self.reduce_output
+        )
 
-        return df.mapInPandas(run, schema=self.reduce_output)
-
-    # -- input fan-out ----------------------------------------------------
-    @staticmethod
-    def _fan_out(df: DataFrame) -> DataFrame:
-        """Spread a low-parallelism input across the cluster before the
-        Python map pass (the reference splits map input per 64 MB blob —
-        worker.py task-per-input; one small parquet file arriving as ONE
-        Spark partition would serialize the whole map through one python
-        worker). Decided from Catalyst's size estimate (a ~10 ms driver
-        probe — converting to an RDD to count partitions costs 50x that):
-        when the input would scan as fewer splits than cores, repartition;
-        at real scale the estimate exceeds the threshold and this is a
-        no-op, so no shuffle is added to big jobs."""
-        spark = df.sparkSession
-        try:
-            # sparkContext/_jdf are absent under Spark Connect — any failure
-            # here means "can't estimate", and the safe fallback is to leave
-            # the input untouched (never inject a full shuffle of an input
-            # of unknown size).
-            target = spark.sparkContext.defaultParallelism
-            est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            max_split = _parse_bytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            )
-        except Exception:
-            return df  # stats unavailable: leave partitioning as-is
-        est_splits = max(1, est_bytes // max_split)
-        # only worth a shuffle when the input is BOTH badly under-split
-        # (< half the cores) and small enough that moving it is cheap
-        if est_splits < max(1, target // 2) and est_bytes < (1 << 30):
-            return df.repartition(target)
-        return df
+    def _lower(self, input: DataFrame) -> DataFrame:
+        """The job as pipeline stages over (label, key, value) records."""
+        n = self.partitions or int(input.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = _labeled(input if self.map is None else fan_out(input))
+        if self.map is not None:
+            output = self.map_output
+        elif self.partition is not None:
+            # a reduce-only job with a custom partitioner: the split stage
+            # only labels the input pairs, which keep their types
+            output = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema[1:])
+        else:
+            output = None
+        if output is not None:
+            df = Pipeline([(SPLIT, self._split_stage(len(input.columns), n, output))]).run(df)
+        if self.reduce is not None:
+            if self.partition is None:
+                df = df.withColumn("label", F.pmod(F.hash("key"), F.lit(n)))
+            stages = [(GROUP_LABEL, self._reduce_stage())]
+            df = Pipeline(stages, label_partitions=self.partitions).run(df)
+        return df.drop("label")
 
     def run(self, input: DataFrame) -> DataFrame:
         """Execute the job plan lazily; returns the result DataFrame
@@ -278,13 +213,8 @@ class DiscoJob:
         df = input
         if self.oob:
             self._attach_oob(input.sparkSession)
-        if self.map is not None:
-            df = self._map_stage(self._fan_out(df))
-        if self.reduce is not None:
-            df = self._shuffle(df)
-            if self.sort:
-                df = df.sortWithinPartitions("key")
-            df = self._reduce_stage(df)
+        if self.map is not None or self.reduce is not None:
+            df = self._lower(input)
         if self.save:
             # save=True in the reference persists results under a
             # `disco:results:<job>` DDFS tag (job_coordinator.erl:370-407);
@@ -294,7 +224,6 @@ class DiscoJob:
             TagCatalog(df.sparkSession).push(self.save, df, mode="overwrite")
             return df.sparkSession.table(self.save)
         return df
-
 
     # -- OOB side-channel --------------------------------------------------
     # Reference tasks call the globals put(key, blob)/get(key) and clients

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import load_tables
+from disco_spark.session import fan_out, load_tables
 
 # second-moment sums need more integer headroom than money sums:
 # l_extendedprice^2 is ~1e10 per row, so a 1e12-row corpus sums to
@@ -106,13 +106,12 @@ def regr_price_vs_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships |groups| rows per partition, and the repartition is a
     measured-size no-op at real scale (shuffle-order-independent exact
     sums, results bit-identical)."""
-    from disco_spark.operators.classic import DiscoJob
 
     li = load_tables(spark, sf_dir)["lineitem"].select(
         "l_returnflag", "l_quantity", "l_extendedprice"
     )
     return regr_by_group(
-        DiscoJob._fan_out(li), "l_quantity", "l_extendedprice", "l_returnflag"
+        fan_out(li), "l_quantity", "l_extendedprice", "l_returnflag"
     )
 
 
@@ -206,13 +205,12 @@ def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matter how many cores exist (measured 4.9-5.2 s at sf0.1 — wall #2
     of the r14 bench — with 8 cores ≈ 32 cores because one task did all
     the work). The fan-out shuffles only the four pruned double columns
-    and is a measured-size NO-OP at real scale (see _fan_out); decimal
+    and is a measured-size NO-OP at real scale (see session.fan_out); decimal
     sums are order/partitioning-independent, so results are
     bit-identical."""
-    from disco_spark.operators.classic import DiscoJob
 
     li = load_tables(spark, sf_dir)["lineitem"].select(*_CORR_COLS)
-    return corr_matrix(DiscoJob._fan_out(li), _CORR_COLS)
+    return corr_matrix(fan_out(li), _CORR_COLS)
 
 
 def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -862,10 +860,9 @@ def regr_qty_vs_discount_by_brand(
     stats_corr_matrix: the six decimal sums inherit the scan's
     partitioning, and an under-split scan serializes them through one
     task (measured-size no-op at real scale)."""
-    from disco_spark.operators.classic import DiscoJob
 
     t = load_tables(spark, sf_dir)
-    x = DiscoJob._fan_out(
+    x = fan_out(
         t["lineitem"].select("l_partkey", "l_discount", "l_quantity")
     ).join(
         F.broadcast(t["part"].select("p_partkey", "p_brand")),
@@ -1403,7 +1400,6 @@ def simpson_slope_reversal_audit(
     Plan: one broadcast part join, TWO constant-size moment
     aggregates (pooled 1 row, per-brand |brands| rows), a broadcast
     cross of the 1-row pooled slope, and a bounded fold."""
-    from disco_spark.operators.classic import DiscoJob
     from disco_spark.session import lazy_persist
 
     t = load_tables(spark, sf_dir)
@@ -1411,9 +1407,9 @@ def simpson_slope_reversal_audit(
     # BOTH moment aggregations below inherit the scan's partitioning
     # through the broadcast join and the cache, and an under-split scan
     # serializes their decimal casts through one task (the
-    # stats_corr_matrix lesson; _fan_out is a measured-size no-op at
+    # stats_corr_matrix lesson; fan_out is a measured-size no-op at
     # real scale, and decimal sums are partitioning-independent)
-    li = DiscoJob._fan_out(
+    li = fan_out(
         t["lineitem"].select("l_partkey", "l_discount", "l_quantity")
     )
     x = li.join(

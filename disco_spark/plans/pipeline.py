@@ -36,8 +36,10 @@ carried as an ordinary column so Catalyst can prune/push around it.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from itertools import groupby
+from itertools import chain, groupby
+from operator import itemgetter
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -63,8 +65,9 @@ class Stage:
 
     ``process(interface, state, label, inp)`` consumes ``inp`` — an
     iterator of (key, value) — and emits via
-    ``interface.output(label).add(k, v)``. ``output`` is the Spark DDL
-    schema of emitted (key, value) pairs.
+    ``interface.output(label).add(k, v)``; a generator ``process``
+    streams its output in batches each time it yields. ``output`` is the
+    Spark DDL schema of emitted (key, value) pairs.
     """
 
     def __init__(
@@ -122,18 +125,36 @@ def _stage_runner(stage: Stage, params):
         iface = Interface()
 
         def flush():
-            rows, iface._rows = iface._rows, []
+            # emptied in place: outputs a process holds keep appending here
+            rows = iface._rows
             for i in range(0, len(rows), OUT_BATCH):
                 yield pd.DataFrame(
                     rows[i : i + OUT_BATCH], columns=["label", "key", "value"]
                 )
+            rows.clear()
 
-        def kv_rows():
+        def label_runs():
+            # (label, (key, value) pairs) per stretch of equal labels in
+            # a batch, cut with numpy so no Python code runs per row
             for pdf in batches:
-                yield from zip(pdf["label"], pdf["key"], pdf["value"])
+                labels = pdf["label"].to_numpy()
+                keys, values = pdf["key"].tolist(), pdf["value"].tolist()
+                cuts = [0, *(np.flatnonzero(np.diff(labels)) + 1).tolist(), len(labels)]
+                for a, b in zip(cuts, cuts[1:]):
+                    if a < b:
+                        yield int(labels[a]), zip(keys[a:b], values[a:b])
+
+        def call(label, inp):
+            # output leaves in full batches (a batch costs a DataFrame and
+            # an Arrow conversion); a generator process streams, each
+            # yield a chance to flush
+            for _ in process(iface, state, label, inp) or ():
+                if len(iface._rows) >= OUT_BATCH:
+                    yield from flush()
+            if len(iface._rows) >= OUT_BATCH:
+                yield from flush()
 
         state = init(iface, params) if callable(init) else None
-        yield from flush()
 
         if callable(process):
             if buffered:
@@ -141,21 +162,19 @@ def _stage_runner(stage: Stage, params):
                 # label groups (the reference equivalently holds one
                 # file handle per label — worker.py:249-256).
                 by_label: dict[int, list] = {}
-                for label, k, v in kv_rows():
-                    by_label.setdefault(int(label), []).append((k, v))
+                for label, run in label_runs():
+                    by_label.setdefault(label, []).extend(run)
                 for label in input_hook(state, sorted(by_label)):
-                    process(iface, state, label, iter(by_label[label]))
-                    yield from flush()
+                    yield from call(label, iter(by_label[label]))
             else:
                 # streaming: rows arrive ordered by label, consecutive
                 # runs are the per-label input streams.
-                for label, group in groupby(kv_rows(), key=lambda r: r[0]):
-                    process(iface, state, int(label), ((k, v) for _l, k, v in group))
-                    yield from flush()
+                for label, runs in groupby(label_runs(), key=itemgetter(0)):
+                    yield from call(label, chain.from_iterable(run for _l, run in runs))
 
         if callable(done):
             done(iface, state)
-            yield from flush()
+        yield from flush()
 
     return run
 

@@ -169,13 +169,59 @@ def file_fingerprints(files: list[str]) -> list:
 def default_parallelism(spark: SparkSession, fallback: int = 32) -> int:
     """sparkContext (and so defaultParallelism) is absent under Spark
     Connect — every plan-shaping use must go through this guard instead
-    of touching spark.sparkContext directly (the classic._fan_out
+    of touching spark.sparkContext directly (the fan_out
     lesson). The fallback only sizes partition counts, never changes
     results."""
     try:
         return spark.sparkContext.defaultParallelism
     except Exception:
         return fallback
+
+
+_SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _parse_bytes(raw: str) -> int:
+    """'134217728', '134217728b', '128m', '128mb', '1g' -> bytes."""
+    s = str(raw).strip().lower()
+    if s.endswith("b") and len(s) >= 2 and s[-2] in _SIZE_SUFFIX:
+        s = s[:-1]  # two-letter suffix: kb/mb/gb/tb
+    mult = 1
+    if s and s[-1] in _SIZE_SUFFIX:
+        mult = _SIZE_SUFFIX[s[-1]]
+        s = s[:-1]
+    return int(s) * mult
+
+
+def fan_out(df):
+    """Spread a low-parallelism input across the cluster before a
+    compute-heavy pass (the reference splits map input per 64 MB blob —
+    worker.py task-per-input; one small parquet file arriving as ONE
+    Spark partition would serialize the whole pass through one task).
+    Decided from Catalyst's size estimate (a ~10 ms driver probe —
+    converting to an RDD to count partitions costs 50x that): when the
+    input would scan as fewer splits than cores, repartition; at real
+    scale the estimate exceeds the threshold and this is a no-op, so no
+    shuffle is added to big jobs."""
+    spark = df.sparkSession
+    try:
+        # sparkContext/_jdf are absent under Spark Connect — any failure
+        # here means "can't estimate", and the safe fallback is to leave
+        # the input untouched (never inject a full shuffle of an input
+        # of unknown size).
+        target = spark.sparkContext.defaultParallelism
+        est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        max_split = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        )
+    except Exception:
+        return df  # stats unavailable: leave partitioning as-is
+    est_splits = max(1, est_bytes // max_split)
+    # only worth a shuffle when the input is BOTH badly under-split
+    # (< half the cores) and small enough that moving it is cheap
+    if est_splits < max(1, target // 2) and est_bytes < (1 << 30):
+        return df.repartition(target)
+    return df
 
 
 # Persists created inside a registered query function outlive the

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from disco_spark.dedup.dedup import norm
 from disco_spark.registry import query
-from disco_spark.session import load_tables
+from disco_spark.session import fan_out, load_tables
 
 
 @query(
@@ -497,8 +497,6 @@ def embedding_quantization_error(
     addition is exact, so the fold's left-to-right order reproduces
     SUM bit-for-bit); one grouped aggregate folds vectors to |labels|
     rows. Zero shuffles before the label fold at any scale."""
-    from disco_spark.operators.classic import DiscoJob
-
     t = load_tables(spark, sf_dir)
     vec = F.col("embedding")
     absmax = F.aggregate(
@@ -511,7 +509,7 @@ def embedding_quantization_error(
     # (measured-size no-op at scale); the four decimal folds are
     # row-local and the label fold is exact decimal addition, so the
     # result is partitioning-independent.
-    s = DiscoJob._fan_out(t["embeddings"]).filter(F.size(vec) > 0).select(
+    s = fan_out(t["embeddings"]).filter(F.size(vec) > 0).select(
         "vec_id",
         "label",
         vec.alias("v"),

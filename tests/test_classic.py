@@ -72,18 +72,68 @@ def test_params_bag():
 
 
 def test_custom_partition_colocates(spark):
-    """All records with the same label must land in one Spark partition
+    """All records with the same label must reach one reduce task
     (the group_label guarantee, reference pipeline_utils.erl:147-159)."""
     df = spark.range(1000).select(
         F.col("id").cast("string").alias("key"), F.lit(1).alias("value")
     )
-    job = DiscoJob(partition=lambda k, n, p: int(k) % 5, partitions=5, reduce=sum_reduce)
-    shuffled = job._shuffle(df)
-    check = shuffled.withColumn("pid", F.spark_partition_id()).withColumn(
-        "label", (F.col("key").cast("long") % 5)
+
+    def tag_task(iter, out, params):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for k, _v in iter:
+            out.add(k, pid)
+
+    job = DiscoJob(partition=lambda k, n, p: int(k) % 5, partitions=5, reduce=tag_task)
+    rows = job.run(df).collect()
+    assert len(rows) == 1000
+    tasks: dict = {}
+    for r in rows:
+        tasks.setdefault(int(r.key) % 5, set()).add(r.value)
+    assert sorted(tasks) == [0, 1, 2, 3, 4]
+    assert all(len(pids) == 1 for pids in tasks.values())
+
+
+def test_reduce_runs_once_per_label(spark):
+    """One reduce call per label that has records, with its own
+    reduce_init — the reference runs one reduce task per label
+    (classic/worker.py:373-395). No call sees two labels, and no call
+    runs for an empty label."""
+    df = spark.range(800).select(
+        F.col("id").cast("string").alias("key"), F.lit(1).cast("bigint").alias("value")
     )
-    n = check.groupBy("label").agg(F.countDistinct("pid").alias("k")).filter("k > 1").count()
-    assert n == 0
+    inits = spark.sparkContext.accumulator(0)
+
+    def init(entries, params):
+        inits.add(1)
+
+    def labels_seen(iter, out, params):
+        out.add(",".join(sorted({str(int(k) % 8) for k, _v in iter})), 1)
+
+    job = DiscoJob(
+        partition=lambda k, n, p: int(k) % n, partitions=8, reduce=labels_seen, reduce_init=init
+    )
+    rows = job.run(df).collect()
+    assert sorted(r.key for r in rows) == [str(i) for i in range(8)]
+    assert inits.value == 8
+
+
+def test_wide_row_reaches_map_as_tuple(spark):
+    """A row of three or more columns is one map entry: the row tuple,
+    in column order."""
+    df = spark.createDataFrame(
+        [(1, "a", 2.5), (2, "b", 0.5)], "id bigint, name string, score double"
+    )
+
+    def m(entry, params):
+        assert isinstance(entry, tuple) and len(entry) == 3
+        doc_id, name, score = entry
+        yield f"{doc_id}:{name}", int(score * 10)
+
+    out = DiscoJob(map=m).run(df)
+    assert out.columns == ["key", "value"]
+    assert {(r.key, r.value) for r in out.collect()} == {("1:a", 25), ("2:b", 5)}
 
 
 def test_sorted_reduce_sees_byte_order(spark):

@@ -1,6 +1,7 @@
 """Repository hygiene: no tracked script reaches for the retired
-headline harness (bench.py) or its rehearsal tooling, and every script
-left in tools/ still imports. Runs no Spark."""
+headline harness (bench.py) or its rehearsal tooling, every script left
+in tools/ still imports, and the classic MapReduce layer has no executor
+of its own. Runs no Spark."""
 
 from __future__ import annotations
 
@@ -60,3 +61,13 @@ def test_no_script_uses_deleted_tooling():
 def test_tool_imports(script, monkeypatch):
     monkeypatch.syspath_prepend(TOOLS)
     runpy.run_path(os.path.join(TOOLS, script), run_name=script[:-3])
+
+
+def test_classic_has_no_executor_of_its_own():
+    """DiscoJob lowers onto plans.pipeline: the classic layer runs no
+    Python pass of its own, so it must not grow a second map/shuffle/
+    reduce runner back."""
+    with open(os.path.join(ROOT, "disco_spark", "operators", "classic.py"), encoding="utf-8") as fh:
+        src = fh.read()
+    found = [name for name in ("mapInPandas", "pandas_udf", "OUT_BATCH") if name in src]
+    assert not found, found
