@@ -6,13 +6,14 @@ lib/disco/worker/pipeline/worker.py:44-120; execution order
 run_stage worker.py:263-280; grouping semantics
 master/src/pipeline_utils.erl:106-181) on Spark:
 
-| grouping          | exchange                | task granularity        |
-|-------------------|-------------------------|-------------------------|
-| split             | none                    | one task per partition  |
-| group_label       | repartition(n, label)   | label groups co-located |
-| group_all         | repartition(1)          | single global task      |
-| group_node        | none (pre-shuffle)      | per-partition combine   |
-| group_node_label  | none (pre-shuffle)      | per (partition, label)  |
+| grouping          | exchange                    | task granularity        |
+|-------------------|-----------------------------|-------------------------|
+| split             | none                        | one task per partition  |
+| group_label       | repartitionById(n, label)   | label l on task l mod n |
+|                   | repartition(label) (no n)   | label groups co-located |
+| group_all         | repartition(1)              | single global task      |
+| group_node        | none (pre-shuffle)          | per-partition combine   |
+| group_node_label  | none (pre-shuffle)          | per (partition, label)  |
 
 ``group_node(_label)`` have no host-placement analog in Spark by design
 (SURVEY §7 risks): we guarantee the *algebraic* contract — a combining
@@ -184,7 +185,10 @@ class Pipeline:
 
     ``label_partitions`` bounds the exchange width for group_label
     stages (the reference's label space is data-driven and sparse —
-    SURVEY §7 maps labels through a dense partitioning).
+    SURVEY §7 maps labels through a dense partitioning). With it, label
+    ``l`` goes to partition ``l mod n`` by id, as the reference's
+    labels name their reduce task; a hash of the label would put
+    several labels on one task and leave others empty.
     """
 
     def __init__(self, stages: list[tuple[str, Stage]], *, label_partitions: int | None = None, params=None):
@@ -212,7 +216,7 @@ class Pipeline:
         for grouping, stage in self.stages:
             if grouping == GROUP_LABEL:
                 n = self.label_partitions
-                df = df.repartition(n, "label") if n else df.repartition("label")
+                df = df.repartitionById(n, "label") if n else df.repartition("label")
             elif grouping == GROUP_ALL:
                 df = df.repartition(1)
             # split / group_node / group_node_label: no exchange.

@@ -17,6 +17,7 @@ the same scale-oriented defaults:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -231,28 +232,35 @@ def fan_out(df):
 # one query's worth of deferred cache is resident at a time, instead of
 # every shingle/base projection accumulating for the session's lifetime
 # (visible as creeping executor-storage growth across a 49-query bench).
-_DEFERRED_PERSISTS: list = []
+# The handles are kept per creating thread: a query started on one thread
+# must not unpersist frames another thread is still reading.
+_DEFERRED_PERSISTS: dict[threading.Thread, list] = {}
+_DEFERRED_LOCK = threading.Lock()
 
 
 def lazy_persist(df):
     """persist() a DataFrame whose action happens after the building
     query function returns; released automatically when the next
-    registered query starts (or via release_deferred)."""
+    registered query starts on the same thread (or via release_deferred)."""
     df = df.persist()
-    _DEFERRED_PERSISTS.append(df)
+    with _DEFERRED_LOCK:
+        _DEFERRED_PERSISTS.setdefault(threading.current_thread(), []).append(df)
     return df
 
 
 def release_deferred() -> int:
-    """Unpersist every deferred handle; returns how many were released."""
-    n = len(_DEFERRED_PERSISTS)
-    for df in _DEFERRED_PERSISTS:
+    """Unpersist the calling thread's deferred handles and those left by
+    threads that have exited; returns how many were released."""
+    me = threading.current_thread()
+    with _DEFERRED_LOCK:
+        done = [t for t in _DEFERRED_PERSISTS if t is me or not t.is_alive()]
+        dfs = [df for t in done for df in _DEFERRED_PERSISTS.pop(t)]
+    for df in dfs:
         try:
             df.unpersist()
         except Exception:
             pass  # session may already be stopped
-    _DEFERRED_PERSISTS.clear()
-    return n
+    return len(dfs)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:

@@ -1,32 +1,36 @@
-"""Similarity search over embedding columns (beyond-reference surface;
-driver north star): brute-force cosine top-k as the exactness baseline,
-and an IVF-style bucketed variant as the scale path.
+"""Similarity search over embedding columns: exact cosine top-k as the
+baseline, IVF cells that bound where a query looks, and (similarity/pq.py)
+PQ codes that bound what it reads there.
 
-Scale design:
-- brute force: the query set is broadcast (it's small by construction);
-  the scan side computes cosine via JVM higher-order functions and each
-  partition keeps only its local top-k before the final merge
-  (window rank under AQE -> partial TopK), so shuffle traffic is
-  O(queries * k), not O(rows).
-- IVF: a coarse quantizer (here: per-label centroids, i.e. the natural
-  cluster ids of the data) maps every vector to a cell; a query probes
-  only its nearest `nprobe` cells. At 100 TB the cells are the
-  partition/bucket key, so a probe is a partition-pruned scan, not a
-  full pass.
+Every ANN query composes three steps, each written once:
+- **cell probe** (``probe_cells``): rank the coarse cells per query by
+  ``ROUND(cosine(q, centroid), 6) DESC, label ASC`` against the
+  broadcast centroid table and keep the first ``nprobe`` (the nprobe
+  calibration keeps every rank). The cells are per-label centroids
+  (``ivf_centroids``) or adaptive sqrt(n) k-means cells; at scale a cell
+  is the partition key, so a probe is a partition-pruned scan.
+- **ADC** (``pq.adc_shortlist``): score PQ codes against per-query
+  lookup tables JVM-side and cut a shortlist.
+- **exact top-k** (``exact_topk``): ``ROUND(dot / (|q|·|v|), 6) DESC,
+  id ASC``, first k per query. The window ranks under AQE as a partial
+  then final group limit, so shuffle traffic is O(queries * k).
+
+The brute-force scan, IVF search, k-NN graph, IVF-PQ and PQ rerank differ
+only in which pairs reach the exact top-k. The DuckDB oracles compose
+the same way from ``_label_cents_sql``/``_cells_cents_sql`` (centroids),
+``_cell_rank_sql`` (probe order) and ``_topk_sql`` (the top-k tail).
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from disco_spark import store
-from disco_spark.dedup.dedup import COS_MIN, cosine, dot, norm
+from disco_spark.dedup.dedup import COS_MIN, dot, norm
 from disco_spark.registry import query
 from disco_spark.session import (
     default_parallelism,
@@ -39,51 +43,161 @@ N_QUERIES = 5
 TOP_K = 5
 
 
-@query(
-    "ann_cosine_topk",
-    oracle=f"""
+# --------------------------------------------------------------------------
+# the shared steps
+# --------------------------------------------------------------------------
+def _dbl(c: "F.Column") -> "F.Column":
+    """Cast a float array to double ONCE per row. dot()/norm() cast per
+    element; on a pre-cast array Catalyst drops those casts, so a row
+    that meets many pairs is cast once instead of once per pair, with
+    the same element-wise double values."""
+    return F.transform(c, lambda x: x.cast("double"))
+
+
+def _length(emb: str, nrm: str | None) -> "F.Column":
+    """The norm of column ``emb``: column ``nrm`` when precomputed."""
+    return norm(F.col(emb)) if nrm is None else F.col(nrm)
+
+
+def probe_cells(
+    rows: DataFrame,
+    cents: DataFrame,
+    key: str,
+    nprobe: int | None = None,
+    emb: str = "q_emb",
+    nrm: str | None = None,
+) -> DataFrame:
+    """The cell probe: every row of ``rows`` ranks the broadcast
+    ``cents`` (label, centroid) by ROUND(cosine(emb, centroid), 6) DESC,
+    label ASC, numbered ``rn`` per ``key``; the first ``nprobe`` ranks
+    are kept (every rank when None). Rounding to 6 decimals on both
+    engines keeps the cell choice off sub-1e-6 arithmetic jitter; the
+    label breaks rounded ties identically. ``nrm`` names a precomputed
+    norm of ``emb``."""
+    c_sim = dot(F.col(emb), F.col("centroid")) / (_length(emb, nrm) * norm(F.col("centroid")))
+    w = Window.partitionBy(key).orderBy(F.desc("c_sim"), F.asc("label"))
+    ranked = (
+        rows.crossJoin(F.broadcast(cents))
+        .withColumn("c_sim", F.round(c_sim, 6))
+        .withColumn("rn", F.row_number().over(w))
+    )
+    return ranked if nprobe is None else ranked.filter(F.col("rn") <= nprobe)
+
+
+def exact_topk(
+    pairs: DataFrame,
+    k: int,
+    key: str,
+    nbr: str,
+    q_emb: str,
+    v_emb: str,
+    q_nrm: str | None = None,
+    v_nrm: str | None = None,
+) -> DataFrame:
+    """The exact top-k: cos_sim = ROUND(dot(q, v) / (|q|·|v|), 6) over
+    ``pairs``, ranked cos_sim DESC, ``nbr`` ASC per ``key``; the first
+    ``k`` of each key as (key, nbr, cos_sim). ``q_nrm``/``v_nrm`` name
+    norms precomputed per row, for rows that meet many pairs."""
+    cos = dot(F.col(q_emb), F.col(v_emb)) / (_length(q_emb, q_nrm) * _length(v_emb, v_nrm))
+    w = Window.partitionBy(key).orderBy(F.desc("cos_sim"), F.asc(nbr))
+    return (
+        pairs.withColumn("cos_sim", F.round(cos, 6))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(key, nbr, "cos_sim")
+    )
+
+
+def _cents_sql(dims: str) -> str:
+    """DuckDB twin of ivf_centroids: CTE `cents` (label, centroid), the
+    decimal-accumulated per-label mean of ``dims`` (label, pos, val)."""
+    return f"""cents AS (
+      SELECT label, list(mean_val ORDER BY pos) AS centroid FROM (
+        SELECT label, pos, CAST(SUM(CAST(val AS DECIMAL(38,18))) / COUNT(*) AS DOUBLE) AS mean_val FROM {dims} GROUP BY label, pos
+      ) GROUP BY label
+    )"""
+
+
+def _dims_sql(source: str) -> str:
+    """(label, pos, val) rows of the embeddings in ``source``."""
+    return f"""SELECT label, generate_subscripts(embedding, 1) AS pos,
+             unnest(embedding)::DOUBLE AS val
+      FROM {source}"""
+
+
+def _label_cents_sql(source: str) -> str:
+    """CTEs `dims` + `cents`: per-label centroids of ``source``."""
+    return f"""dims AS (
+      {_dims_sql(source)}
+    ),
+    {_cents_sql("dims")}"""
+
+
+def _cell_rank_sql(cols: str, key: str, emb: str, rel: str, rank: str = "rn") -> str:
+    """DuckDB twin of probe_cells: ``cols`` and every cell of ``cents``
+    per row of ``rel``, numbered ``rank`` in probe order."""
+    return f"""SELECT {cols}, c.label,
+               ROW_NUMBER() OVER (
+                 PARTITION BY {key}
+                 ORDER BY ROUND(list_cosine_similarity({emb}::DOUBLE[], c.centroid), 6) DESC,
+                          c.label
+               ) AS {rank}
+        FROM {rel} CROSS JOIN cents c"""
+
+
+def _probe_sql(name: str, out_id: str, ranked: str, nprobe: int) -> str:
+    """CTE ``name`` (out_id, q_emb, label): the first ``nprobe`` cells."""
+    return f"""{name} AS (
+      SELECT {out_id}, q_emb, label FROM (
+        {ranked}
+      ) WHERE rn <= {nprobe}
+    )"""
+
+
+def _topk_sql(key: str, nbr: str, scored: str, k: int, cols: str | None = None) -> str:
+    """DuckDB twin of exact_topk's cut over ``scored`` (.., cos_sim)."""
+    return f"""SELECT {cols or f"{key}, {nbr}, cos_sim"} FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY {key}
+                                   ORDER BY cos_sim DESC, {nbr}) AS rn
+      FROM {scored}
+    ) WHERE rn <= {k}"""
+
+
+# --------------------------------------------------------------------------
+# brute force: the exactness baseline
+# --------------------------------------------------------------------------
+def brute_force_topk(e: DataFrame, n_queries: int, k: int = TOP_K) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim): exact top-k cosine neighbors of
+    the ``n_queries`` lowest vec_ids over the whole table. The probe set
+    is broadcast and norms are computed per row, not per pair."""
+    e = e.withColumn("nrm", norm(F.col("embedding")))
+    q = e.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).withColumnRenamed(
+        "vec_id", "neighbor_id"
+    )
+    return exact_topk(pairs, k, "query_id", "neighbor_id", "q_emb", "embedding", "q_nrm", "nrm")
+
+
+BRUTE_FORCE_ORACLE = f"""
     WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {N_QUERIES}),
     scored AS (
       SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
              ROUND(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]), 6) AS cos_sim
       FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
     )
-    SELECT query_id, neighbor_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """,
-)
+    {_topk_sql("query_id", "neighbor_id", "scored", TOP_K)}
+    """
+
+
+@query("ann_cosine_topk", oracle=BRUTE_FORCE_ORACLE)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N query vectors —
     the correctness baseline every ANN variant is measured against."""
-    t = load_tables(spark, sf_dir)
-    # per-row norms before the pair join (cosine() inside the join would
-    # re-walk both arrays per pair); dot/(nq·ne) keeps the exact
-    # arithmetic of cosine(q_emb, embedding), so values are bit-stable.
-    e = t["embeddings"].withColumn("nrm", norm(F.col("embedding")))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
-            ),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return brute_force_topk(load_tables(spark, sf_dir)["embeddings"], N_QUERIES)
 
 
 # --------------------------------------------------------------------------
@@ -127,56 +241,19 @@ def ann_ivf_search(
     """Probe the `nprobe` nearest cells per query, exact-rank inside them.
 
     queries: (query_id, q_emb). Returns (query_id, neighbor_id, cos_sim).
-    """
-    cents = ivf_centroids(e)
-    # rank cells per query by centroid cosine, ROUNDED to 6 decimals on
-    # both engines: the probe choice must not hinge on sub-1e-6 cross-
-    # engine arithmetic jitter (label tie-break resolves rounded ties
-    # identically — same robustness idiom as the scored stage)
-    qc = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6))
+    The probe set is small, so it is broadcast into a partition-pruned
+    scan of the probed cells."""
+    probe = probe_cells(queries, ivf_centroids(e), "query_id", nprobe).select(
+        "query_id", "q_emb", norm(F.col("q_emb")).alias("q_nrm"), "label"
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    probe = (
-        qc.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "q_emb", norm(F.col("q_emb")).alias("q_nrm"), "label")
-    )
-    # partition-pruned scan of the probed cells only; norms precomputed
-    # per row, not per pair
-    scored = (
+    pairs = (
         e.withColumn("nrm", norm(F.col("embedding")))
         .join(F.broadcast(probe), "label")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
-            ),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_sim")
-    )
-
-
-def _dbl(c: "F.Column") -> "F.Column":
-    """Cast a float array to double ONCE per row. Inside pair loops the
-    old form cast every element on every pair (`x.cast * y.cast` in the
-    zip_with lambda) — hoisting the cast out of the O(pairs) loop is
-    free and arithmetic-identical (same element-wise double values)."""
-    return F.transform(c, lambda x: x.cast("double"))
-
-
-def _dot_raw(a: "F.Column", b: "F.Column") -> "F.Column":
-    """dot() for arrays already in double — no per-element casts."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    return exact_topk(
+        pairs, k, "query_id", "vec_id", "q_emb", "embedding", "q_nrm", "nrm"
+    ).withColumnRenamed("vec_id", "neighbor_id")
 
 
 def knn_graph(e: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
@@ -204,63 +281,49 @@ def knn_graph(e: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
 
     Returns (src_id, dst_id, cos_sim), k rows per src.
     """
-    spark = e.sparkSession
-    cents = ivf_centroids(e)
     v = e.select("vec_id", _dbl(F.col("embedding")).alias("emb")).withColumn(
-        "nrm", F.sqrt(F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x))
+        "nrm", norm(F.col("emb"))
     )
-    # probe-ranking key rounded to 6 decimals on both engines (see
-    # ann_ivf_search): cell choice never hinges on 1-ulp jitter
-    ranked_cells = v.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim",
-        F.round(
-            _dot_raw(F.col("emb"), F.col("centroid"))
-            / (
-                F.col("nrm")
-                * F.sqrt(
-                    F.aggregate(F.col("centroid"), F.lit(0.0), lambda a, x: a + x * x)
-                )
-            ),
-            6,
-        ),
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("label"))
     probes = (
-        ranked_cells.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= nprobe)
+        probe_cells(v, ivf_centroids(e), "vec_id", nprobe, emb="emb", nrm="nrm")
         .select(
             F.col("vec_id").alias("src_id"),
             F.col("emb").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
             "label",
         )
-        .repartition(default_parallelism(spark))
+        .repartition(default_parallelism(e.sparkSession))
     )
     members = e.select(
         F.col("vec_id").alias("dst_id"), _dbl(F.col("embedding")).alias("m_emb"), "label"
-    ).withColumn(
-        "d_nrm", F.sqrt(F.aggregate(F.col("m_emb"), F.lit(0.0), lambda a, x: a + x * x))
-    )
+    ).withColumn("d_nrm", norm(F.col("m_emb")))
     # no broadcast hint on members: locally AQE broadcasts the small side
     # (preserving the probe-side parallelism); at scale both sides are
     # huge and the right plan is a shuffle join co-located on the cell id
-    scored = (
-        probes.join(members, "label")
-        .filter(F.col("dst_id") != F.col("src_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                _dot_raw(F.col("q_emb"), F.col("m_emb")) / (F.col("q_nrm") * F.col("d_nrm")),
-                6,
-            ),
-        )
+    pairs = probes.join(members, "label").filter(F.col("dst_id") != F.col("src_id"))
+    return exact_topk(pairs, k, "src_id", "dst_id", "q_emb", "m_emb", "q_nrm", "d_nrm")
+
+
+def _knn_sql(head: str, source: str, members: str, m: str, nprobe: int, k: int) -> str:
+    """Replay knn_graph: ``head`` (CTEs ending in `cents`), the first
+    ``nprobe`` cells of every vector of ``source``, exact cosine against
+    the ``members`` (aliased ``m``) of the probed cells, top-k per
+    source. A full SELECT (src_id, dst_id, cos_sim)."""
+    ranked = _cell_rank_sql(
+        "v.vec_id AS src_id, v.embedding AS q_emb", "v.vec_id", "v.embedding", f"{source} v"
     )
-    w = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("src_id", "dst_id", "cos_sim")
+    return f"""
+    WITH {head},
+    {_probe_sql("probes", "src_id", ranked, nprobe)},
+    scored AS (
+      SELECT p.src_id, {m}.vec_id AS dst_id,
+             ROUND(list_cosine_similarity(p.q_emb::DOUBLE[], {m}.embedding::DOUBLE[]), 6)
+               AS cos_sim
+      FROM probes p JOIN {members} {m}
+        ON {m}.label = p.label AND {m}.vec_id <> p.src_id
     )
+    {_topk_sql("src_id", "dst_id", "scored", k)}
+    """
 
 
 @query(
@@ -268,92 +331,49 @@ def knn_graph(e: DataFrame, k: int = TOP_K, nprobe: int = 2) -> DataFrame:
     # full replay of the IVF-blocked graph: centroids, per-vector probe
     # ranking, in-cell exact scoring — same determinism argument as
     # ann_ivf_topk (verified bit-exact there)
-    oracle=f"""
-    WITH dims AS (
-      SELECT label, generate_subscripts(embedding, 1) AS pos,
-             unnest(embedding)::DOUBLE AS val
-      FROM embeddings
-    ),
-    cents AS (
-      SELECT label, list(mean_val ORDER BY pos) AS centroid FROM (
-        SELECT label, pos, CAST(SUM(CAST(val AS DECIMAL(38,18))) / COUNT(*) AS DOUBLE) AS mean_val FROM dims GROUP BY label, pos
-      ) GROUP BY label
-    ),
-    probes AS (
-      SELECT src_id, q_emb, label FROM (
-        SELECT v.vec_id AS src_id, v.embedding AS q_emb, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY ROUND(list_cosine_similarity(v.embedding::DOUBLE[], c.centroid), 6) DESC,
-                          c.label
-               ) AS rn
-        FROM embeddings v CROSS JOIN cents c
-      ) WHERE rn <= 2
-    ),
-    scored AS (
-      SELECT p.src_id, e.vec_id AS dst_id,
-             ROUND(list_cosine_similarity(p.q_emb::DOUBLE[], e.embedding::DOUBLE[]), 6)
-               AS cos_sim
-      FROM probes p JOIN embeddings e
-        ON e.label = p.label AND e.vec_id <> p.src_id
-    )
-    SELECT src_id, dst_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY src_id
-                                   ORDER BY cos_sim DESC, dst_id) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """,
+    oracle=_knn_sql(_label_cents_sql("embeddings"), "embeddings", "embeddings", "e", 2, TOP_K),
 )
 def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return knn_graph(t["embeddings"], k=TOP_K, nprobe=2)
 
 
-@query(
-    "ann_ivf_topk",
-    # The coarse quantizer is deterministic (per-label centroids), so the
-    # whole IVF probe is SQL-expressible: recompute centroids, rank cells
-    # per query, probe the top-nprobe cells, exact-rank inside them.
-    oracle=f"""
-    WITH dims AS (
-      SELECT label, generate_subscripts(embedding, 1) AS pos,
-             unnest(embedding)::DOUBLE AS val
-      FROM embeddings
-    ),
-    cents AS (
-      SELECT label, list(mean_val ORDER BY pos) AS centroid FROM (
-        SELECT label, pos, CAST(SUM(CAST(val AS DECIMAL(38,18))) / COUNT(*) AS DOUBLE) AS mean_val FROM dims GROUP BY label, pos
-      ) GROUP BY label
-    ),
+# exact-within-probed-cells replay of the IVF search at nprobe=3. It is
+# the oracle of ann_ivf_topk, and of IVF-PQ (similarity/pq.py) and the
+# persisted-index queries (index_store): the ADC shortlist recovers the
+# in-cell top-k at the gated scales and the rerank recomputes EXACT
+# cosine, so a recall regression surfaces as a value mismatch.
+def ivf_oracle_sql(base_where: str = "TRUE", neighbor_where: str = "TRUE") -> str:
+    """IVF replay oracle. ``base_where`` restricts the rows the
+    coarse quantizer (centroids) was trained on — the add path trains
+    on the base subset but serves over ALL rows (scored stage always
+    joins the full table). ``neighbor_where`` (column refs on ``e``)
+    restricts which rows are SERVEABLE as neighbors — the delete path's
+    tombstoned ids drop out of scoring but stay out of training."""
+    ranked = _cell_rank_sql("q.query_id, q.q_emb", "q.query_id", "q.q_emb", "q")
+    return f"""
+    WITH {_label_cents_sql(f"embeddings WHERE {base_where}")},
     q AS (
       SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
       WHERE vec_id < {N_QUERIES}
     ),
-    probe AS (
-      SELECT query_id, q_emb, label FROM (
-        SELECT q.query_id, q.q_emb, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY ROUND(list_cosine_similarity(q.q_emb::DOUBLE[], c.centroid), 6) DESC,
-                          c.label
-               ) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 3
-    ),
+    {_probe_sql("probe", "query_id", ranked, 3)},
     scored AS (
       SELECT p.query_id, e.vec_id AS neighbor_id,
              ROUND(list_cosine_similarity(p.q_emb::DOUBLE[], e.embedding::DOUBLE[]), 6)
                AS cos_sim
       FROM probe p JOIN embeddings e
         ON e.label = p.label AND e.vec_id <> p.query_id
+      WHERE {neighbor_where}
     )
-    SELECT query_id, neighbor_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """,
-)
+    {_topk_sql("query_id", "neighbor_id", "scored", TOP_K)}
+    """
+
+
+IVF_ORACLE = ivf_oracle_sql()
+
+
+@query("ann_ivf_topk", oracle=IVF_ORACLE)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
@@ -398,59 +418,27 @@ def _cells_cents_sql(source: str = "embeddings") -> str:
     planted-cluster recall audit points it at a derived CTE."""
     from disco_spark.similarity.kmeans import kmeans_ctes
 
+    dims = f"""(
+          {_dims_sql("cells")}
+        )"""
     return f"""{kmeans_ctes(_ADAPTIVE_K_SQL.format(source=source), iters=1, source=source)},
     cells AS (
       SELECT e.vec_id, e.embedding, a.cluster AS label
       FROM {source} e JOIN afinal a USING (vec_id)
     ),
-    cents AS (
-      SELECT label, list(mean_val ORDER BY pos) AS centroid FROM (
-        SELECT label, pos, CAST(SUM(CAST(val AS DECIMAL(38,18))) / COUNT(*) AS DOUBLE) AS mean_val FROM (
-          SELECT label, generate_subscripts(embedding, 1) AS pos,
-                 unnest(embedding)::DOUBLE AS val
-          FROM cells
-        ) GROUP BY label, pos
-      ) GROUP BY label
-    )"""
+    {_cents_sql(dims)}"""
 
 
-def _adaptive_knn_sql(
-    nprobe: int, k: int, source: str = "embeddings", pre_ctes: str = ""
-) -> str:
+def _adaptive_knn_sql(nprobe: int, k: int, source: str = "embeddings") -> str:
     """Replay knn_graph over adaptive sqrt(n) k-means cells: converged
     assignments from the unrolled Lloyd CTEs, per-cell mean centroids,
     top-nprobe cell probes per vector, exact cosine within probed cells,
     top-k per source. Returns a full SELECT (src_id, dst_id, cos_sim).
-    ``source``/``pre_ctes`` let a caller replay the same geometry over a
-    derived vector relation: ``pre_ctes`` (trailing comma included by
-    this function) is spliced ahead of the quantizer chain."""
-    pre = f"{pre_ctes}," if pre_ctes else ""
-    return f"""
-    WITH {pre}{_cells_cents_sql(source)},
-    probes AS (
-      SELECT src_id, q_emb, label FROM (
-        SELECT v.vec_id AS src_id, v.embedding AS q_emb, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY ROUND(list_cosine_similarity(v.embedding::DOUBLE[], c.centroid), 6) DESC,
-                          c.label
-               ) AS rn
-        FROM {source} v CROSS JOIN cents c
-      ) WHERE rn <= {nprobe}
-    ),
-    scored AS (
-      SELECT p.src_id, m.vec_id AS dst_id,
-             ROUND(list_cosine_similarity(p.q_emb::DOUBLE[], m.embedding::DOUBLE[]), 6)
-               AS cos_sim
-      FROM probes p JOIN cells m
-        ON m.label = p.label AND m.vec_id <> p.src_id
-    )
-    SELECT src_id, dst_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY src_id
-                                   ORDER BY cos_sim DESC, dst_id) AS rn
-      FROM scored
-    ) WHERE rn <= {k}
-    """
+    ``source`` is the (vec_id, embedding) relation to replay (the
+    planted-cluster audit points it at a derived CTE)."""
+    return _knn_sql(_cells_cents_sql(source), source, "cells", "m", nprobe, k)
+
+
 def adaptive_cells(e: DataFrame, iters: int = 1) -> DataFrame:
     """(vec_id, label) cell assignment with k = ceil(sqrt(n)) k-means
     cells. The count() is one bounded action; at real scale the trainer
@@ -647,45 +635,11 @@ def ann_knn_graph_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 AUDIT_N_QUERIES = 128
 
 
-def _exact_topk_pairs(e: DataFrame, n_queries: int) -> DataFrame:
-    """(query_id, neighbor_id) exact brute-force cosine top-5 (TOP_K)
-    for the first ``n_queries`` vectors — the ground-truth side shared
-    by ann_recall_audit and ann_nprobe_calibration. Probe set
-    broadcast; per-row norms precomputed; deterministic tie-break
-    (ROUND(cos,6) DESC, id ASC) on both engines."""
-    e = e.withColumn("nrm", norm(F.col("embedding")))
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-
-
 def _exact_pairs_sql(n_queries: int, source: str = "embeddings") -> str:
     """DuckDB CTEs `q` (probe vectors) -> `qscored` -> `exact`
-    ((query_id, neighbor_id) ground truth) mirroring
-    _exact_topk_pairs. ``source`` is the (vec_id, embedding) relation
-    to audit (the planted-cluster audit points it at a derived CTE)."""
+    ((query_id, neighbor_id) ground truth) mirroring brute_force_topk.
+    ``source`` is the (vec_id, embedding) relation to audit (the
+    planted-cluster audit points it at a derived CTE)."""
     return f"""
     q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM {source}
           WHERE vec_id < {n_queries}),
@@ -695,20 +649,25 @@ def _exact_pairs_sql(n_queries: int, source: str = "embeddings") -> str:
       FROM q JOIN {source} e ON e.vec_id <> q.query_id
     ),
     exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, neighbor_id) AS rn
-        FROM qscored
-      ) WHERE rn <= {TOP_K}
+      {_topk_sql("query_id", "neighbor_id", "qscored", TOP_K, "query_id, neighbor_id")}
     )"""
 
 
-@query(
-    "ann_recall_audit",
-    oracle=f"""
-    WITH knn AS ({_adaptive_knn_sql(nprobe=4, k=TOP_K)}),
-    {_exact_pairs_sql(AUDIT_N_QUERIES)},
-    matched AS (
+def _recall_histogram(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """(n_matched, n_queries): how many probes recovered how many of
+    their exact (query_id, neighbor_id) pairs in ``approx`` (src_id,
+    dst_id)."""
+    joined = exact.join(
+        approx,
+        (exact.query_id == approx.src_id) & (exact.neighbor_id == approx.dst_id),
+        "left",
+    )
+    per_q = joined.groupBy("query_id").agg(F.count("dst_id").alias("n_matched"))
+    return per_q.groupBy("n_matched").agg(F.count(F.lit(1)).alias("n_queries"))
+
+
+# DuckDB twin of _recall_histogram over CTEs `exact` and `knn`
+_RECALL_SQL = """matched AS (
       SELECT e.query_id, COUNT(k.dst_id) AS m
       FROM exact e LEFT JOIN knn k
         ON k.src_id = e.query_id AND k.dst_id = e.neighbor_id
@@ -716,7 +675,15 @@ def _exact_pairs_sql(n_queries: int, source: str = "embeddings") -> str:
     )
     SELECT CAST(m AS BIGINT) AS n_matched,
            CAST(COUNT(*) AS BIGINT) AS n_queries
-    FROM matched GROUP BY 1
+    FROM matched GROUP BY 1"""
+
+
+@query(
+    "ann_recall_audit",
+    oracle=f"""
+    WITH knn AS ({_adaptive_knn_sql(nprobe=4, k=TOP_K)}),
+    {_exact_pairs_sql(AUDIT_N_QUERIES)},
+    {_RECALL_SQL}
     """,
 )
 def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -740,20 +707,9 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm off the persisted graph store; the comparison join starts
     FROM the 640-row exact list."""
     t = load_tables(spark, sf_dir)
-    exact = _exact_topk_pairs(t["embeddings"], AUDIT_N_QUERIES)
+    exact = brute_force_topk(t["embeddings"], AUDIT_N_QUERIES)
     approx = _adaptive_knn(spark, sf_dir).select("src_id", "dst_id")
-    joined = exact.join(
-        approx,
-        (exact.query_id == approx.src_id)
-        & (exact.neighbor_id == approx.dst_id),
-        "left",
-    )
-    per_q = joined.groupBy("query_id").agg(
-        F.count("dst_id").alias("n_matched")
-    )
-    return per_q.groupBy("n_matched").agg(
-        F.count(F.lit(1)).alias("n_queries")
-    )
+    return _recall_histogram(exact, approx)
 
 
 # --------------------------------------------------------------------------
@@ -774,13 +730,7 @@ NPROBE_SWEEP = [1, 2, 4, 8]
     WITH {_cells_cents_sql()},
     {_exact_pairs_sql(AUDIT_N_QUERIES)},
     cellrank AS (
-      SELECT q.query_id, c.label,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.query_id
-               ORDER BY ROUND(list_cosine_similarity(q.q_emb::DOUBLE[], c.centroid), 6) DESC,
-                        c.label
-             ) AS cell_rank
-      FROM q CROSS JOIN cents c
+      {_cell_rank_sql("q.query_id", "q.query_id", "q.q_emb", "q", "cell_rank")}
     ),
     covered AS (
       SELECT r.cell_rank
@@ -825,18 +775,12 @@ def ann_nprobe_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2 = lazy_persist(
         e.drop("label").join(cells, "vec_id").select("vec_id", "embedding", "label")
     )
-    exact = _exact_topk_pairs(e2, AUDIT_N_QUERIES)
-    cents = ivf_centroids(e2)
+    exact = brute_force_topk(e2, AUDIT_N_QUERIES)
     q = e2.filter(F.col("vec_id") < AUDIT_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    qc = q.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6)
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    ranks = (
-        qc.withColumn("cell_rank", F.row_number().over(wc))
-        .select("query_id", "label", "cell_rank")
+    ranks = probe_cells(q, ivf_centroids(e2), "query_id").select(
+        "query_id", "label", F.col("rn").alias("cell_rank")
     )
     covered = (
         exact.join(
@@ -970,15 +914,7 @@ def _planted_vectors(ids: DataFrame) -> DataFrame:
     WITH {_PLANTED_SQL},
     knn AS ({_adaptive_knn_sql(nprobe=4, k=TOP_K, source="planted")}),
     {_exact_pairs_sql(AUDIT_N_QUERIES, source="planted")},
-    matched AS (
-      SELECT e.query_id, COUNT(k.dst_id) AS m
-      FROM exact e LEFT JOIN knn k
-        ON k.src_id = e.query_id AND k.dst_id = e.neighbor_id
-      GROUP BY 1
-    )
-    SELECT CAST(m AS BIGINT) AS n_matched,
-           CAST(COUNT(*) AS BIGINT) AS n_queries
-    FROM matched GROUP BY 1
+    {_RECALL_SQL}
     """,
 )
 def ann_recall_audit_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1009,20 +945,9 @@ def ann_recall_audit_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     p2 = lazy_persist(
         planted.join(cells, "vec_id").select("vec_id", "embedding", "label")
     )
-    exact = _exact_topk_pairs(planted, AUDIT_N_QUERIES)
+    exact = brute_force_topk(planted, AUDIT_N_QUERIES)
     approx = knn_graph(p2, k=TOP_K, nprobe=4).select("src_id", "dst_id")
-    joined = exact.join(
-        approx,
-        (exact.query_id == approx.src_id)
-        & (exact.neighbor_id == approx.dst_id),
-        "left",
-    )
-    per_q = joined.groupBy("query_id").agg(
-        F.count("dst_id").alias("n_matched")
-    )
-    return per_q.groupBy("n_matched").agg(
-        F.count(F.lit(1)).alias("n_queries")
-    )
+    return _recall_histogram(exact, approx)
 
 
 @query(

@@ -20,7 +20,7 @@ vectors of the O(queries x shortlist) rerank rows. Serving never touches
 the training path — exactly how a FAISS index file or DiscoDB is used.
 Training is deterministic (bounded lowest-vec_id sample, fixed init), so
 the load path is bit-identical to the fresh-trained path and shares its
-oracle (IVFPQ_ORACLE).
+oracle (ann.IVF_ORACLE).
 """
 
 from __future__ import annotations
@@ -38,14 +38,12 @@ from pyspark.sql import functions as F
 from disco_spark import store
 from disco_spark.registry import query
 from disco_spark.session import file_fingerprints, load_tables
-from disco_spark.similarity.ann import TOP_K, ivf_centroids
+from disco_spark.similarity.ann import IVF_ORACLE, TOP_K, ivf_centroids, ivf_oracle_sql
 from disco_spark.similarity.pq import (
-    IVFPQ_ORACLE,
     K_SUB,
     M_SUBSPACES,
     PQ_ITERS,
     PQ_SAMPLE_CAP,
-    ivfpq_oracle_sql,
     ivfpq_search,
     pq_encode,
     pq_train,
@@ -237,14 +235,14 @@ def _serve_topk(
     )
 
 
-@query("ann_index_load_topk", oracle=IVFPQ_ORACLE)
+@query("ann_index_load_topk", oracle=IVF_ORACLE)
 def ann_index_load_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve IVF-PQ top-k from the PERSISTED index: no training in the
     serve path. First call per dataset builds the index on disk (the
     "build job"); every later call loads centroids/codes/codebooks and
     goes straight to probe -> ADC -> rerank. Deterministic training
-    makes this bit-identical to ann_ivfpq_topk, so IVFPQ_ORACLE gates
-    both (similarity/pq.py) — a divergence between the fresh and loaded
+    makes this bit-identical to ann_ivfpq_topk, so IVF_ORACLE gates
+    both (similarity/ann.py) — a divergence between the fresh and loaded
     paths surfaces as a hash mismatch here."""
     e = load_tables(spark, sf_dir)["embeddings"]
     path = store.store_path("ann_index", sf_dir)
@@ -258,7 +256,7 @@ def ann_index_load_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same contract as ann_index_add_topk: coarse quantizer trained on
     # the even base, every odd vector serveable — HOW the odd half
     # arrived (N micro-batches vs one batch) must be invisible
-    oracle=ivfpq_oracle_sql(base_where="vec_id % 2 = 0"),
+    oracle=ivf_oracle_sql(base_where="vec_id % 2 = 0"),
 )
 def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest into the persisted ANN index: the odd-vec_id
@@ -310,7 +308,7 @@ def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_index_delete_topk",
-    oracle=ivfpq_oracle_sql(neighbor_where="e.vec_id % 5 <> 3"),
+    oracle=ivf_oracle_sql(neighbor_where="e.vec_id % 5 <> 3"),
 )
 def ann_index_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve top-k AFTER a logical delete (vec_id % 5 = 3 tombstoned)
@@ -334,7 +332,7 @@ def ann_index_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_index_add_topk",
-    oracle=ivfpq_oracle_sql(base_where="vec_id % 2 = 0"),
+    oracle=ivf_oracle_sql(base_where="vec_id % 2 = 0"),
 )
 def ann_index_add_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the index on HALF the corpus (even vec_ids), incrementally
@@ -398,7 +396,7 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
     # tombstoned (delete path), everything folded into the base by the
     # compaction — the oracle replays the logical state the folded
     # index must serve
-    oracle=ivfpq_oracle_sql(
+    oracle=ivf_oracle_sql(
         base_where="vec_id % 2 = 0", neighbor_where="e.vec_id % 7 <> 2"
     ),
 )

@@ -13,15 +13,19 @@ Spark mapping:
 - **encode** (the 100-TB pass): Arrow-batched ``mapInPandas``;
   vectorized argmin over the codebook per subspace, emitting
   ``codes: array<int>`` per row.
-- **search** (ADC — asymmetric distance computation): per query a
-  m x ksub lookup table of subspace dot-products is computed
-  driver-side (tiny), shipped as a broadcast literal column, and the
-  approximate cosine is a pure-JVM higher-order sum:
-  ``aggregate(transform(codes, (c,j) -> lut[j*ksub+c]), ...)`` —
-  no Python in the scan, shuffle is only the final O(queries*k) top-k.
+- **search** (ADC — asymmetric distance computation, ``adc_shortlist``):
+  per query a m x ksub lookup table (LUT) of subspace dot-products is
+  computed driver-side (tiny, ``adc_queries``) and shipped as a broadcast
+  literal column; the approximate cosine is a pure-JVM higher-order sum
+  ``aggregate(transform(codes, (c,j) -> lut[j*ksub+c]), ...)`` — no
+  Python in the scan — and cuts a shortlist per query. The shortlist
+  then goes through the exact top-k of similarity/ann.py (the FAISS
+  refine stage), so only O(queries * shortlist) raw vectors are read.
+  ``ivfpq_search`` scores the codes of the probed cells only;
+  ``ann_pq_topk`` scores every code.
 
-Verified by a recall-vs-bruteforce test (approximate op — no SQL oracle),
-same gate as ann_ivf_topk.
+The rerank recomputes EXACT cosine, so both registered queries replay
+as exact SQL oracles (recall regressions surface as value mismatches).
 """
 
 from __future__ import annotations
@@ -34,7 +38,15 @@ from pyspark.sql.window import Window
 
 from disco_spark.registry import query
 from disco_spark.session import file_fingerprints, load_tables
-from disco_spark.similarity.ann import N_QUERIES, TOP_K
+from disco_spark.similarity.ann import (
+    BRUTE_FORCE_ORACLE,
+    IVF_ORACLE,
+    N_QUERIES,
+    TOP_K,
+    exact_topk,
+    ivf_centroids,
+    probe_cells,
+)
 
 # m=16/ksub=64 + shortlist-100 rerank measured at recall@5 = 0.96-1.0 on
 # the test embeddings (sf0.01/sf0.1); codes are 16 bytes vs 256-byte raw.
@@ -159,89 +171,56 @@ def pq_encode(e: DataFrame, codebooks: np.ndarray) -> DataFrame:
     )
 
 
-def pq_search(
-    codes_df: DataFrame,
-    queries: list[tuple[int, np.ndarray]],
-    codebooks: np.ndarray,
-    spark: SparkSession,
-    k: int = TOP_K,
+def adc_queries(
+    spark: SparkSession, queries: list[tuple[int, np.ndarray]], codebooks: np.ndarray
 ) -> DataFrame:
-    """ADC search: per-query LUT of subspace dot products, scored JVM-side.
-
-    queries: [(query_id, raw_vector)]. Returns (query_id, neighbor_id,
-    pq_score) with pq_score ~ cosine similarity."""
-    m, ksub, dsub = codebooks.shape
+    """(query_id, q_emb, lut) for the raw query vectors ``queries``:
+    lut[j*ksub + c] = <q_j, codebook[j][c]> of the L2-normalized query,
+    flattened row-major so the ADC expression indexes it by code."""
+    m, _, dsub = codebooks.shape
     rows = []
     for qid, vec in queries:
         v = np.asarray(vec, dtype=np.float64)
-        v /= max(np.linalg.norm(v), 1e-12)
-        # lut[j, c] = <q_sub_j, codebook[j][c]>; flattened row-major so the
-        # JVM expression indexes it as lut[j*ksub + c]
-        lut = np.einsum(
-            "jd,jcd->jc", v.reshape(m, dsub), codebooks
-        ).ravel()
-        rows.append((int(qid), [float(x) for x in lut]))
-    q = spark.createDataFrame(rows, "query_id bigint, lut array<double>")
-    scored = (
-        codes_df.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        nv = v / max(np.linalg.norm(v), 1e-12)
+        lut = np.einsum("jd,jcd->jc", nv.reshape(m, dsub), codebooks).ravel()
+        rows.append((int(qid), [float(x) for x in vec], [float(x) for x in lut]))
+    return spark.createDataFrame(rows, "query_id bigint, q_emb array<float>, lut array<double>")
+
+
+def adc_shortlist(
+    codes: DataFrame, q: DataFrame, ksub: int, shortlist: int, on: str | None = None
+) -> DataFrame:
+    """The ADC step: join the broadcast query rows ``q`` (query_id, q_emb,
+    lut; plus ``on``) to ``codes`` (vec_id, codes; plus ``on``), score
+    each code row by summing its LUT entries JVM-side, and keep the
+    ``shortlist`` best per query as (query_id, neighbor_id, q_emb).
+    ``on=None`` scores every code against every query."""
+    adc = (
+        codes.join(F.broadcast(q), on)
+        .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn(
             "pq_score",
-            F.round(
-                F.expr(
-                    f"aggregate(transform(codes, (c, j) -> "
-                    f"element_at(lut, j * {ksub} + c + 1)), 0D, (acc, x) -> acc + x)"
-                ),
-                6,
-            ),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "pq_score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("pq_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "pq_score")
-    )
-
-
-def pq_search_rerank(
-    e: DataFrame,
-    codes_df: DataFrame,
-    queries: list[tuple[int, np.ndarray]],
-    codebooks: np.ndarray,
-    spark: SparkSession,
-    k: int = TOP_K,
-    shortlist: int = 100,
-) -> DataFrame:
-    """PQ shortlist + exact re-rank (the FAISS refine stage): ADC scores
-    cut the candidate set to ``shortlist`` per query (scanning codes, not
-    vectors), then exact cosine runs only on those candidates — at scale
-    the expensive float read touches O(queries * shortlist) rows."""
-    from disco_spark.dedup.dedup import dot, norm
-
-    cand = pq_search(codes_df, queries, codebooks, spark, k=shortlist)
-    q = spark.createDataFrame(
-        [(int(qid), [float(x) for x in v]) for qid, v in queries],
-        "qid bigint, q_emb array<float>",
-    )
-    exact = (
-        cand.join(e.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id")
-        .join(F.broadcast(q), F.col("query_id") == F.col("qid"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (norm(F.col("q_emb")) * norm(F.col("embedding"))),
-                6,
+            F.expr(
+                f"aggregate(transform(codes, (c, j) -> "
+                f"element_at(lut, j * {ksub} + c + 1)), 0D, (acc, x) -> acc + x)"
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    ws = Window.partitionBy("query_id").orderBy(F.desc("pq_score"), F.asc("vec_id"))
     return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
+        adc.withColumn("srn", F.row_number().over(ws))
+        .filter(F.col("srn") <= shortlist)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "q_emb")
     )
+
+
+def _rerank(e: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of the ADC shortlist ``cand`` against the raw vectors
+    of ``e``: (query_id, neighbor_id, cos_sim)."""
+    pairs = cand.join(
+        e.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id"
+    )
+    return exact_topk(pairs, k, "query_id", "neighbor_id", "q_emb", "embedding")
 
 
 def ivfpq_search(
@@ -261,132 +240,23 @@ def ivfpq_search(
     256-byte floats), and an exact rerank on the shortlist restores
     exactness for the rows that matter.
 
-    ``codes_df`` must carry (vec_id, codes, label). Probed cells come
-    from the same per-label centroid quantizer as ann_ivf_search; ADC
-    scoring joins the (broadcast) per-query LUT + probe set against only
-    the probed cells' codes. Pass ``cents`` to serve from a PERSISTED
-    coarse quantizer (index_store.ann_index_load) instead of recomputing
-    it from ``e`` — ``e`` is then only the rerank's raw-vector source."""
-    from disco_spark.dedup.dedup import dot, norm
-    from disco_spark.similarity.ann import ivf_centroids
-    from disco_spark.dedup.dedup import cosine
-
-    m, ksub, dsub = codebooks.shape
+    ``codes_df`` must carry (vec_id, codes, label). The cell probe picks
+    each query's ``nprobe`` cells, and the ADC step joins the (broadcast)
+    LUT + probe rows against only the probed cells' codes. Pass
+    ``cents`` to serve from a PERSISTED coarse quantizer
+    (index_store.ann_index_load) instead of recomputing it from ``e`` —
+    ``e`` is then only the rerank's raw-vector source."""
     if cents is None:
         cents = ivf_centroids(e)
-    q_rows = []
-    for qid, vec in queries:
-        v = np.asarray(vec, dtype=np.float64)
-        nv = v / max(np.linalg.norm(v), 1e-12)
-        lut = np.einsum("jd,jcd->jc", nv.reshape(m, dsub), codebooks).ravel()
-        q_rows.append((int(qid), [float(x) for x in vec], [float(x) for x in lut]))
-    q = spark.createDataFrame(q_rows, "query_id bigint, q_emb array<float>, lut array<double>")
-    wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6))
-        .withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "q_emb", "lut", "label")
+    q = adc_queries(spark, queries, codebooks)
+    probes = probe_cells(q, cents, "query_id", nprobe).select(
+        "query_id", "q_emb", "lut", "label"
     )
-    adc = (
-        codes_df.join(F.broadcast(probes), "label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "pq_score",
-            F.expr(
-                f"aggregate(transform(codes, (c, j) -> "
-                f"element_at(lut, j * {ksub} + c + 1)), 0D, (acc, x) -> acc + x)"
-            ),
-        )
-    )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("pq_score"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= shortlist)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "q_emb")
-    )
-    exact = (
-        cand.join(e.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id")
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (norm(F.col("q_emb")) * norm(F.col("embedding"))),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    cand = adc_shortlist(codes_df, probes, codebooks.shape[1], shortlist, on="label")
+    return _rerank(e, cand, k)
 
 
-# exact-within-probed-cells replay (same SQL as ann_ivf_topk): valid
-# because the ADC shortlist provably recovers the in-cell top-k at
-# the gated scales and the rerank recomputes EXACT cosine — a recall
-# regression surfaces as a value mismatch. Shared by ann_ivfpq_topk,
-# ann_index_load_topk and (with base_where) ann_index_add_topk
-# (index_store): load/add paths must be value-identical to the
-# fresh-trained path, so one oracle text serves all.
-def ivfpq_oracle_sql(
-    base_where: str = "TRUE", neighbor_where: str = "TRUE"
-) -> str:
-    """IVF-PQ replay oracle. ``base_where`` restricts the rows the
-    coarse quantizer (centroids) was trained on — the add path trains
-    on the base subset but serves over ALL rows (scored stage always
-    joins the full table). ``neighbor_where`` (column refs on ``e``)
-    restricts which rows are SERVEABLE as neighbors — the delete path's
-    tombstoned ids drop out of scoring but stay out of training."""
-    return f"""
-    WITH dims AS (
-      SELECT label, generate_subscripts(embedding, 1) AS pos,
-             unnest(embedding)::DOUBLE AS val
-      FROM embeddings WHERE {base_where}
-    ),
-    cents AS (
-      SELECT label, list(mean_val ORDER BY pos) AS centroid FROM (
-        SELECT label, pos, CAST(SUM(CAST(val AS DECIMAL(38,18))) / COUNT(*) AS DOUBLE) AS mean_val FROM dims GROUP BY label, pos
-      ) GROUP BY label
-    ),
-    q AS (
-      SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
-      WHERE vec_id < {N_QUERIES}
-    ),
-    probe AS (
-      SELECT query_id, q_emb, label FROM (
-        SELECT q.query_id, q.q_emb, c.label,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.query_id
-                 ORDER BY ROUND(list_cosine_similarity(q.q_emb::DOUBLE[], c.centroid), 6) DESC,
-                          c.label
-               ) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 3
-    ),
-    scored AS (
-      SELECT p.query_id, e.vec_id AS neighbor_id,
-             ROUND(list_cosine_similarity(p.q_emb::DOUBLE[], e.embedding::DOUBLE[]), 6)
-               AS cos_sim
-      FROM probe p JOIN embeddings e
-        ON e.label = p.label AND e.vec_id <> p.query_id
-      WHERE {neighbor_where}
-    )
-    SELECT query_id, neighbor_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """
-
-
-IVFPQ_ORACLE = ivfpq_oracle_sql()
-
-
-@query("ann_ivfpq_topk", oracle=IVFPQ_ORACLE)
+@query("ann_ivfpq_topk", oracle=IVF_ORACLE)
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir)["embeddings"]
     books = pq_train(e)
@@ -394,30 +264,16 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_search(e, codes, probe_queries(e), books, spark, k=TOP_K, nprobe=3)
 
 
-@query(
-    "ann_pq_topk",
-    # The rerank stage recomputes EXACT cosine over the PQ shortlist, so
-    # whenever the shortlist (100 per query) contains the true top-k —
-    # verified against brute force at sf0.001/sf0.01 — the output equals
-    # exact top-k and the brute-force SQL is a valid oracle. A recall
-    # regression would surface here as a value mismatch, which is the
-    # point of the gate.
-    oracle=f"""
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             ROUND(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]), 6) AS cos_sim
-      FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, cos_sim FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, neighbor_id) AS rn
-      FROM scored
-    ) WHERE rn <= {TOP_K}
-    """,
-)
+# The rerank recomputes EXACT cosine over the PQ shortlist (100 per
+# query), so whenever the shortlist contains the true top-k — verified
+# against brute force at sf0.001/sf0.01 — the output equals exact top-k
+# and the brute-force SQL is a valid oracle. A recall regression would
+# surface here as a value mismatch, which is the point of the gate.
+@query("ann_pq_topk", oracle=BRUTE_FORCE_ORACLE)
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADC over every code, then the exact rerank of a 100-row shortlist."""
     e = load_tables(spark, sf_dir)["embeddings"]
     books = pq_train(e)
-    codes = pq_encode(e, books)
-    return pq_search_rerank(e, codes, probe_queries(e), books, spark, k=TOP_K)
+    q = adc_queries(spark, probe_queries(e), books)
+    cand = adc_shortlist(pq_encode(e, books), q, books.shape[1], shortlist=100)
+    return _rerank(e, cand, TOP_K)

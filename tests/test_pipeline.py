@@ -154,3 +154,25 @@ def test_twelve_stage_pipeline_preserves_totals(spark):
     assert len(rows) == keys
     assert all(v == n // keys for v in rows.values()), rows
     assert sum(rows.values()) == n
+
+
+def test_label_partitions_place_one_label_per_task(spark):
+    """With label_partitions=n, labels 0..n-1 land on n distinct tasks:
+    placement by label id, not by a hash that doubles labels up on some
+    tasks and leaves others empty."""
+    from pyspark import TaskContext
+
+    df = spark.createDataFrame(
+        [(i % 8, f"k{i}", i) for i in range(800)], "label int, key string, value bigint"
+    )
+
+    def proc(iface, state, label, inp):
+        for _ in inp:
+            pass
+        iface.output(label).add(str(label), TaskContext.get().partitionId())
+
+    stage = Stage("s", process=proc, combine=True, output="key string, value bigint")
+    out = Pipeline([(GROUP_LABEL, stage)], label_partitions=8).run(df)
+    part = {r.key: r.value for r in out.collect()}
+    assert sorted(part) == [str(i) for i in range(8)]
+    assert len(set(part.values())) == 8, part

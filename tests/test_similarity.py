@@ -342,7 +342,7 @@ def test_ann_recall_audit_accounting(spark):
     from disco_spark.similarity.ann import (
         AUDIT_N_QUERIES,
         TOP_K,
-        _exact_topk_pairs,
+        brute_force_topk,
     )
 
     registry.load_all()
@@ -352,7 +352,7 @@ def test_ann_recall_audit_accounting(spark):
     e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in _exact_topk_pairs(e, AUDIT_N_QUERIES).collect()
+        for r in brute_force_topk(e, AUDIT_N_QUERIES).collect()
     }
     assert len(exact) == AUDIT_N_QUERIES * TOP_K
     approx = {
