@@ -8,16 +8,10 @@ cluster even when A~C was never scored). The reference's closest analog
 is the iterative-job pattern its datamining examples use
 (examples/datamining/kclustering.py client loop).
 
-Spark mapping — min-label propagation as a DataFrame loop:
-each iteration joins the (symmetrized) edge list with current labels,
-takes the per-node min over neighbor labels, and stops when no label
-changed. Iterations = graph diameter; near-dup clusters are shallow
-(diameter 2-4), so this converges in a handful of rounds. Each round is
-one shuffle keyed by node id; labels persist() between rounds and the
-loop re-checkpoints lineage so plans stay flat. The distributed path
-uses the large-star/small-star algorithm (O(log n) rounds independent
-of graph diameter — the 100 TB shape); min-label propagation is kept
-as the simpler diameter-bounded alternative.
+Spark mapping: small edge lists (the usual case) run union-find on the
+driver; larger ones run the large-star/small-star algorithm as a
+DataFrame loop (O(log n) rounds independent of graph diameter — the
+100 TB shape), re-checkpointing lineage each round so plans stay flat.
 
 The oracle is exact: DuckDB recursive CTE enumerating reachable labels,
 min per node — SQL-expressible because components here are tiny (the
@@ -153,7 +147,7 @@ def connected_components(
     labels (comp = min reachable node id)."""
     spark = edges.sparkSession
     # the edge list is typically an expensive pair-join plan; persist it
-    # so the threshold count() and the subsequent collect()/propagation
+    # so the threshold count() and the subsequent collect()/star rounds
     # don't run that plan twice
     edges = edges.persist()
     n_edges = edges.count()
@@ -238,49 +232,6 @@ def _cc_large_small_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
         cur.select(F.col("b").alias("node"), F.col("b").alias("comp"))
     ).distinct()
     cur.unpersist()
-    return labels
-
-
-def _cc_label_propagation(edges: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Distributed min-label propagation (the > threshold path)."""
-    sym = edges.select(
-        F.col("src").cast("bigint").alias("node"), F.col("dst").cast("bigint").alias("nbr")
-    ).union(
-        edges.select(
-            F.col("dst").cast("bigint").alias("node"), F.col("src").cast("bigint").alias("nbr")
-        )
-    )
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
-        sym.select("node").distinct().withColumn("comp", F.col("node"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("node", "nbr"), "nbr")
-            .groupBy("node")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # carry old + new comp through ONE join so change detection needs
-        # no second join against the previous labels; localCheckpoint
-        # truncates the growing lineage so iteration N's plan doesn't
-        # replay iterations 1..N-1
-        stepped = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.col("comp").alias("old_comp"),
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.filter(F.col("comp") != F.col("old_comp")).count()
-        labels.unpersist()
-        labels = stepped.select("node", "comp")
-        if changed == 0:
-            break
-    sym.unpersist()
     return labels
 
 

@@ -86,7 +86,7 @@ def _write_signatures(docs: DataFrame, path: str) -> None:
 
 
 def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> None:
-    """Build the corpus's signature store and swap it in at ``path``
+    """Build the corpus's signature store and publish it at ``path``
     whole (store.build)."""
     store.build(
         path, _store_manifest(docs, subset), lambda d: _write_signatures(docs, d)
@@ -96,13 +96,10 @@ def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> Non
 def ensure_signature_store(
     docs: DataFrame, path: str, subset: str = "all"
 ) -> bool:
-    """Build the store unless a manifest-matching one with both data
-    dirs exists. Returns True when a build ran (test hook)."""
+    """Build the store unless a manifest-matching one with both tables
+    exists. Returns True when a build ran (test hook)."""
     return store.ensure(
-        path,
-        _store_manifest(docs, subset),
-        ("bands", "groups"),
-        lambda d: _write_signatures(docs, d),
+        path, _store_manifest(docs, subset), lambda d: _write_signatures(docs, d)
     )
 
 
@@ -116,10 +113,11 @@ def dedup_against_store(
     a scan of the band table. The rep join is bounded per bucket
     (≤BAND_CAP a side); the expansions are linear equi-joins — exact,
     because identical signatures collide on identical band keys."""
-    store_bands = spark.read.parquet(os.path.join(path, "bands")).select(
+    b = store.blobs(path)
+    store_bands = store.read(spark, path, b["bands"]).select(
         F.col("doc_id").alias("c_rep"), "band_idx", "band_key"
     )
-    store_groups = spark.read.parquet(os.path.join(path, "groups")).select(
+    store_groups = store.read(spark, path, b["groups"]).select(
         F.col("doc_id").alias("corpus_doc"), F.col("rep").alias("c_rep")
     )
     in_grouped = lazy_persist(

@@ -37,10 +37,6 @@ def dsum(expr: Column, alias: str, scale: int = 6) -> Column:
     return F.sum(expr.cast(f"decimal(20,{scale})")).cast("double").alias(alias)
 
 
-def _dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(20,{scale}))) AS DOUBLE) AS {alias}"
-
-
 # ---------------------------------------------------------------------------
 # q1: pricing summary (TPC-H Q1 shape) — the canonical groupBy/agg.
 # Reference parity: combiner + reduce aggregation chain

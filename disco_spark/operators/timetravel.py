@@ -57,7 +57,7 @@ def _write_versions(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .parquet(os.path.join(base, "v=1"))
     )
-    with open(os.path.join(base, "manifest.json"), "w") as f:
+    with open(os.path.join(base, "versions.json"), "w") as f:
         json.dump({"versions": [0, 1]}, f)
     return base
 
@@ -65,7 +65,7 @@ def _write_versions(spark: SparkSession, sf_dir: str) -> str:
 def read_as_of(spark: SparkSession, base: str, version: int) -> DataFrame:
     """Reconstruct the table AS OF `version`: union the manifest's
     version dirs <= version, latest-wins per key."""
-    with open(os.path.join(base, "manifest.json")) as f:
+    with open(os.path.join(base, "versions.json")) as f:
         versions = [v for v in json.load(f)["versions"] if v <= version]
     parts = [
         spark.read.parquet(os.path.join(base, f"v={v}")) for v in versions

@@ -124,18 +124,6 @@ import weakref
 _LAST_VIEWS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def invalidate_table_cache(sf_dir: str | None = None) -> None:
-    """Drop cached table plans — call after rewriting parquet under an
-    sf_dir mid-application (the cached DataFrame pins the file listing
-    captured at first read). ``None`` clears everything."""
-    if sf_dir is None:
-        _TABLE_CACHE.clear()
-        return
-    target = os.path.abspath(sf_dir)
-    for key in [k for k in _TABLE_CACHE if k[1] == target]:
-        _TABLE_CACHE.pop(key, None)
-
-
 def scratch_dir(name: str, sf_dir: str) -> str:
     """Stable per-(operator, dataset) scratch directory under
     benchdata/scratch — for queries that WRITE a layout and read it back

@@ -503,8 +503,8 @@ def _adaptive_knn(
         )
         knn_graph(e2, k=k, nprobe=nprobe).write.parquet(os.path.join(d, "graph"))
 
-    store.ensure(path, want, ("graph",), write)
-    return spark.read.parquet(os.path.join(path, "graph"))
+    store.ensure(path, want, write)
+    return store.read(spark, path, store.blobs(path)["graph"])
 
 
 @query(
@@ -874,10 +874,9 @@ def planted_cells_store(
     store.ensure(
         path,
         want,
-        ("cells",),
         lambda d: adaptive_cells(planted).write.parquet(os.path.join(d, "cells")),
     )
-    return spark.read.parquet(os.path.join(path, "cells"))
+    return store.read(spark, path, store.blobs(path)["cells"])
 
 
 def _planted_vectors(ids: DataFrame) -> DataFrame:

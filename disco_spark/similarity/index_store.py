@@ -3,15 +3,20 @@ retraining — the modern parity for DiscoDB's build-then-load contract
 (reference lib/disco/schemes/scheme_discodb.py:5-28 mmaps a previously
 constructed index file and queries it; the builder is a separate job).
 
-The index is three parquet tables under one directory:
+The index is a store (disco_spark/store.py): parquet blobs behind one
+tag, ``manifest.json``, which records the input files and training
+params (a changed corpus invalidates the index instead of silently
+serving stale cells) and names the blobs of each role:
 
-    centroids/  (label, centroid array<double>)   — IVF coarse quantizer
-    codes/      (vec_id, codes array<int>, label)  — 16-byte PQ codes
-    codebooks/  (subspace, code, centroid array<double>) — PQ codebooks
+    centroids    (label, centroid array<double>)   — IVF coarse quantizer
+    codebooks    (subspace, code, centroid array<double>) — PQ codebooks
+    codes        (vec_id, codes array<int>, label) — 16-byte PQ codes
+    codes_delta  the same rows, one blob per add batch
+    tombstones   (vec_id), one blob per delete batch
 
-plus a ``manifest.json`` recording the input files and training params,
-so a changed corpus invalidates the index instead of silently serving
-stale cells.
+An add or a delete publishes one blob in place of an earlier run of its
+batch id; a compaction publishes one folded codes blob in place of the
+layers it read.
 
 Scale story: at 100 TB the build pass (train + encode + centroid agg)
 runs once; every subsequent query reads ONLY the probed cells' codes
@@ -25,9 +30,7 @@ oracle (ann.IVF_ORACLE).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import tempfile
 
 import numpy as np
@@ -106,7 +109,7 @@ def _write_index(e: DataFrame, path: str) -> None:
 
 def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
     """Build the full IVF-PQ index from (vec_id, embedding, label) rows
-    and swap it in at ``path`` whole (store.build). A rebuild drops any
+    and publish it at ``path`` whole (store.build). A rebuild drops any
     delta batches — their codes were assigned under the OLD codebooks
     and would ADC-score as garbage against the new LUTs — and any
     tombstones: the rebuilt corpus IS the truth, and stale tombstones
@@ -121,12 +124,11 @@ def ann_index_load(
 
     Codebook doubles roundtrip parquet exactly (IEEE 754 binary), so
     ADC scores from a loaded index are bit-identical to fresh ones."""
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    codes = spark.read.parquet(os.path.join(path, "codes")).select(
-        "vec_id", "codes", F.col("label").cast("int").alias("label")
-    )
+    b = store.blobs(path)
+    cents = store.read(spark, path, b["centroids"])
+    codes = _codes(spark, path, {"codes": b["codes"]})
     rows = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
+        store.read(spark, path, b["codebooks"])
         .orderBy("subspace", "code")
         .collect()  # bounded: m*ksub rows (16*64 = 1024), a few KB
     )
@@ -142,9 +144,24 @@ def ann_index_load(
 def ensure_index(e: DataFrame, path: str, subset: str = "all") -> bool:
     """Build the index at ``path`` unless a manifest-matching one exists.
     Returns True when a build ran (test hook)."""
-    return store.ensure(
-        path, _manifest(e, subset), ("codes",), lambda d: _write_index(e, d)
-    )
+    return store.ensure(path, _manifest(e, subset), lambda d: _write_index(e, d))
+
+
+def _put_batch(path: str, role: str, batch_id: str, rows: DataFrame) -> None:
+    """Write ``rows`` as one ``role`` blob for ``batch_id`` and publish
+    the tag with it, in place of any entry an earlier run left."""
+    group = f"{role}/batch={batch_id}"
+    # unpartitioned, unlike the base codes: every batch's blobs are read
+    # as one table, and partition discovery refuses partitioned roots
+    # with no common base directory
+    blob = store.put(path, group, lambda d: rows.write.mode("overwrite").parquet(d))
+
+    def update(tag: dict) -> dict:
+        b = tag["blobs"]
+        kept = [n for n in b.get(role, []) if os.path.dirname(n) != group]
+        return {**tag, "blobs": {**b, role: kept + [blob]}}
+
+    store.publish(path, update)
 
 
 def ann_index_add(
@@ -152,9 +169,9 @@ def ann_index_add(
 ) -> None:
     """Incremental add (FAISS ``index.add()`` parity): encode NEW
     vectors with the index's persisted codebooks — no retraining, no
-    touch of existing codes — and write ONE delta directory per
-    ``batch_id`` (codes_delta/batch=<id>). Distinct batches accumulate;
-    re-running the SAME batch_id overwrites only its own directory, so
+    touch of existing codes — into ONE delta blob per ``batch_id``.
+    Distinct batches accumulate; re-running the SAME batch_id replaces
+    only its own blob, and only once the new one is written whole, so
     the operation stays idempotent under task/ingest retries without a
     second batch ever clobbering the first's vectors.
 
@@ -169,59 +186,52 @@ def ann_index_add(
     new_codes = pq_encode(e_new, books).join(
         e_new.select("vec_id", "label"), "vec_id"
     )
-    new_codes.write.partitionBy("label").mode("overwrite").parquet(
-        os.path.join(path, "codes_delta", f"batch={batch_id}")
-    )
+    _put_batch(path, "codes_delta", batch_id, new_codes)
+
+
+def _codes(spark: SparkSession, path: str, b: dict) -> DataFrame:
+    """Base codes plus every delta batch the blob map ``b`` names, minus
+    every vec_id its tombstones name: one parquet scan per role."""
+    codes = store.read(spark, path, b["codes"]).select("vec_id", "codes", "label")
+    if b.get("codes_delta"):
+        codes = codes.unionByName(
+            store.read(spark, path, b["codes_delta"]).select("vec_id", "codes", "label")
+        )
+    codes = codes.select("vec_id", "codes", F.col("label").cast("int").alias("label"))
+    if b.get("tombstones"):
+        # broadcast when the tombstone set is small (the usual case);
+        # AQE handles the rest
+        tomb = store.read(spark, path, b["tombstones"]).select("vec_id")
+        codes = codes.join(tomb, "vec_id", "left_anti")
+    return codes
 
 
 def ann_index_load_all_codes(spark: SparkSession, path: str) -> DataFrame:
-    """Base codes plus EVERY delta batch added after the build: reading
-    the codes_delta root discovers batch=<id>/label=<l> partitions, so
-    the union covers all batches (the pre-fix shape dropped batch N-1
-    when batch N landed)."""
-    base = spark.read.parquet(os.path.join(path, "codes"))
-    delta_dir = os.path.join(path, "codes_delta")
-    if os.path.isdir(delta_dir) and any(os.scandir(delta_dir)):
-        delta = spark.read.parquet(delta_dir).select("vec_id", "codes", "label")
-        base = base.select("vec_id", "codes", "label").unionByName(delta)
-    return base.select(
-        "vec_id", "codes", F.col("label").cast("int").alias("label")
-    )
+    """Base codes plus EVERY delta batch added after the build."""
+    b = store.blobs(path)
+    return _codes(spark, path, {k: b.get(k) for k in ("codes", "codes_delta")})
 
 
 def ann_index_delete(
     ids: DataFrame, path: str, batch_id: str = "0"
 ) -> None:
     """Logical delete (FAISS ``remove_ids`` / Lucene tombstone parity):
-    record the vec_ids in a tombstone partition under the index; codes
-    are NOT rewritten. The serve path anti-joins tombstones out of the
-    ADC scan; a full rebuild (ann_index_save) compacts them away.
+    record the vec_ids in a tombstone blob; codes are NOT rewritten.
+    The serve path anti-joins tombstones out of the ADC scan; a
+    compaction or a full rebuild drops them.
 
-    Same per-batch layout as ann_index_add: distinct delete batches
-    accumulate, re-running one batch_id overwrites only itself. At
+    Same per-batch discipline as ann_index_add: distinct delete batches
+    accumulate, re-running one batch_id replaces only its own blob. At
     100 TB rewriting label-partitioned code files per delete would be a
     full-index write; tombstones make delete O(|deleted|)."""
-    ids.select(F.col("vec_id").cast("bigint")).distinct().write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "tombstones", f"batch={batch_id}"))
-
-
-def ann_index_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    tomb_dir = os.path.join(path, "tombstones")
-    if os.path.isdir(tomb_dir) and any(os.scandir(tomb_dir)):
-        return spark.read.parquet(tomb_dir).select("vec_id")
-    return None
+    rows = ids.select(F.col("vec_id").cast("bigint")).distinct()
+    _put_batch(path, "tombstones", batch_id, rows)
 
 
 def ann_index_serveable_codes(spark: SparkSession, path: str) -> DataFrame:
     """Codes visible to search: base + every add batch, minus every
-    tombstoned vec_id. The anti-join broadcasts when the tombstone set
-    is small (the usual case); AQE handles the rest."""
-    codes = ann_index_load_all_codes(spark, path)
-    tomb = ann_index_tombstones(spark, path)
-    if tomb is not None:
-        codes = codes.join(tomb, "vec_id", "left_anti")
-    return codes
+    tombstoned vec_id, all from one read of the tag."""
+    return _codes(spark, path, store.blobs(path))
 
 
 def _serve_topk(
@@ -263,11 +273,11 @@ def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     half arrives as a real Structured Streaming source (3 files,
     maxFilesPerTrigger=1 -> 3 micro-batches), and each micro-batch's
     foreachBatch encodes it with the PERSISTED codebooks into its own
-    codes_delta/batch=<id> directory — the per-batch layout the round-6
-    ADVICE fix introduced, exercised here with real multi-batch
-    accumulation (batch N must not clobber batch N-1). Serve is the
-    ordinary load path over base + all deltas; retried micro-batches
-    are idempotent because a batch id overwrites only itself.
+    codes_delta blob — the per-batch layout, exercised here with real
+    multi-batch accumulation (batch N must not clobber batch N-1).
+    Serve is the ordinary load path over base + all deltas; retried
+    micro-batches are idempotent because a batch id replaces only its
+    own blob.
 
     At 100 TB this is the standing shape of index maintenance: a
     crawler appends embedding files, the stream encodes ONLY new
@@ -368,26 +378,28 @@ def ann_index_compact(spark: SparkSession, path: str) -> None:
 
     Cost at 100 TB: one read of the serveable codes + one label-
     partitioned write — code rows only (a few bytes/vector), embeddings
-    are never touched; centroids and codebooks are copied as files.
-    The manifest is copied as built (compaction is invisible to
-    ensure_index, exactly like add/delete); a marker file records that
-    layers were folded. The compacted store is written whole beside the
-    old one and swapped in (store.swap), so a crash at any step leaves
-    the old layered store or the new folded one — never folded codes
-    beside the delta batches and tombstones they already absorbed."""
-    codes = ann_index_serveable_codes(spark, path)
+    are never touched, and centroids and codebooks keep their blobs.
+    The published tag names the folded blob as the codes and drops only
+    the deltas and tombstones this compaction read, so a batch published
+    while it ran stays served; a crash leaves the layered generation.
+    Folded codes are not published over a rebuild that landed meanwhile
+    (they were encoded under the old codebooks)."""
+    folded = store.blobs(path)
+    codes = _codes(spark, path, folded)
+    blob = store.put(
+        path, "compact",
+        lambda d: codes.write.partitionBy("label").mode("overwrite").parquet(d),
+    )
 
-    def write(d: str) -> None:
-        codes.write.partitionBy("label").mode("overwrite").parquet(
-            os.path.join(d, "codes")
-        )
-        for name in ("centroids", "codebooks"):
-            shutil.copytree(os.path.join(path, name), os.path.join(d, name))
-        shutil.copy2(os.path.join(path, "manifest.json"), d)
-        with open(os.path.join(d, "compacted.json"), "w") as fh:
-            json.dump({"compacted": True}, fh)
+    def update(tag: dict) -> dict:
+        b = {**tag["blobs"], "codes": [blob]}
+        if b["codebooks"] != folded["codebooks"]:
+            return tag
+        for role in ("codes_delta", "tombstones"):
+            b[role] = [n for n in b.get(role, []) if n not in folded.get(role, [])]
+        return {**tag, "blobs": {k: v for k, v in b.items() if v}}
 
-    store.swap(path, write)
+    store.publish(path, update)
 
 
 @query(
@@ -407,16 +419,16 @@ def ann_index_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks frozen), and answer top-k from the folded base alone.
     The oracle replays the logical state, so a compaction bug —
     dropped delta batch, resurrected tombstone, accidental retrain —
-    surfaces as a value mismatch. On a warm store (compacted marker
-    present) the layers are already folded and the query serves
-    directly; the pytest proves pre/post-compaction serve equality and
-    that the layer directories are gone."""
+    surfaces as a value mismatch. On a warm store (its tag names a
+    compacted codes blob) the layers are already folded and the query
+    serves directly; the pytest proves pre/post-compaction serve
+    equality and that the layer directories are gone."""
     e = load_tables(spark, sf_dir)["embeddings"]
     base = e.filter(F.col("vec_id") % 2 == 0)
     path = store.store_path("ann_index", sf_dir, "_compact")
     ensure_index(base, path, subset="even-compact")
-    # a (re)build swaps in a store without the marker
-    if not os.path.exists(os.path.join(path, "compacted.json")):
+    # a (re)build's tag names the codes inside its own build blob
+    if os.path.dirname(store.blobs(path)["codes"][0]) != "compact":
         cents, _, books = ann_index_load(spark, path)
         ann_index_add(e.filter(F.col("vec_id") % 2 == 1), path, books=books)
         ann_index_delete(

@@ -91,19 +91,6 @@ def capped_order_sets(
     )
 
 
-def capped_order_parts(
-    lineitem: DataFrame, cap: int = MAX_ORDER_PARTS
-) -> DataFrame:
-    """Distinct (o, p) with hub orders (> cap distinct parts) dropped —
-    the ONE definition of the graph's base projection (mirrors the
-    oracle `capped` CTE); edges, strengths, and item frequencies all
-    derive from this. Derived by exploding capped_order_sets (one
-    exchange; the previous distinct + window shape paid two)."""
-    return capped_order_sets(lineitem, cap).select(
-        "o", F.explode("ps").alias("p")
-    )
-
-
 def coorder_strengths_from_sets(
     sets: DataFrame, min_strength: int = MIN_COORDERS
 ) -> DataFrame:

@@ -42,10 +42,6 @@ BM25_QUERY_TERMS = ("spark", "stream", "merge")
 ZIPF_VOCAB = 1000
 
 
-def _bm25_terms_sql() -> str:
-    return ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
-
-
 @query(
     "bm25_topk_docs",
     oracle=f"""

@@ -3,6 +3,8 @@ side-channel + registry PRIORITY hygiene."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from disco_spark import registry
@@ -293,43 +295,38 @@ def test_compact_topk_oracle(spark):
 
 
 def test_interrupted_compaction_is_not_folded_twice(spark, tmp_path, monkeypatch):
-    """A compaction that dies writing its compacted.json marker must not
-    leave folded codes beside the delta batches they absorbed: the rerun
-    would add and fold the odd half a second time. After the crash and
-    one rerun, every vec_id has exactly one code row and the oracle
-    passes."""
-    import builtins
-    import os
-
+    """A compaction that dies publishing its tag must not leave folded
+    codes beside the delta batches they absorbed: the rerun would add
+    and fold the odd half a second time. After the crash and one rerun,
+    every vec_id has exactly one code row and the oracle passes."""
     from disco_spark import store
-    from disco_spark.similarity import index_store
 
     monkeypatch.setattr(store, "ROOT", str(tmp_path))
+    replace = os.replace
     raised = []
 
-    def open_failing_marker_once(file, *args, **kwargs):
-        if str(file).endswith("compacted.json") and not raised:
+    def replace_failing_compaction_once(src, dst):
+        with open(src) as fh:
+            compacting = '"compact/' in fh.read()
+        if compacting and not raised:
             raised.append(True)
             raise OSError("injected")
-        return builtins.open(file, *args, **kwargs)
+        return replace(src, dst)
 
-    # index_store's own `open` (the builtin otherwise) writes the marker
-    monkeypatch.setattr(index_store, "open", open_failing_marker_once, raising=False)
+    monkeypatch.setattr(os, "replace", replace_failing_compaction_once)
     compact_topk = registry.QUERIES["ann_index_compact_topk"]
     with pytest.raises(OSError, match="injected"):
         compact_topk(spark, SF_SMOKE)
     compact_topk(spark, SF_SMOKE).collect()
     path = store.store_path("ann_index", SF_SMOKE, "_compact")
-    codes = spark.read.parquet(os.path.join(path, "codes"))
+    codes = spark.read.parquet(_blob(path, "codes"))
     assert codes.count() == codes.select("vec_id").distinct().count()
     compare_query(spark, "ann_index_compact_topk", SF_SMOKE)
 
 
 def test_missing_codes_dir_triggers_rebuild(spark, tmp_path):
-    """A manifest-matching store whose codes dir is GONE (the state a
-    crash mid-compaction can leave: manifest intact, codes swapped out
-    but not yet in) must not be served — ensure_index rebuilds it."""
-    import os
+    """A manifest-matching store whose codes blob is GONE must not be
+    served — ensure_index rebuilds it."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -339,9 +336,17 @@ def test_missing_codes_dir_triggers_rebuild(spark, tmp_path):
     base = e.filter(F.col("vec_id") % 2 == 0)
     assert ensure_index(base, path, subset="even") is True
     assert ensure_index(base, path, subset="even") is False
-    shutil.rmtree(os.path.join(path, "codes"))
+    shutil.rmtree(_blob(path, "codes"))
     assert ensure_index(base, path, subset="even") is True
-    assert os.path.isdir(os.path.join(path, "codes"))
+    assert os.path.isdir(_blob(path, "codes"))
+
+
+def _blob(path, role):
+    """The one blob the store's tag names for ``role``."""
+    from disco_spark import store
+
+    (name,) = store.blobs(path)[role]
+    return os.path.join(path, name)
 
 
 def _snapshot(path):
@@ -386,7 +391,7 @@ def test_signature_store_missing_bands_triggers_rebuild(
     path = store.store_path("sig_store", SF_SMOKE, "_evencorpus")
     docs = load_tables(spark, SF_SMOKE)["documents"]
     corpus = docs.filter(docs.doc_id % 2 == 0)
-    shutil.rmtree(os.path.join(path, "bands"))
+    shutil.rmtree(_blob(path, "bands"))
     assert incremental.ensure_signature_store(corpus, path, "even") is True
     compare_query(spark, "dedup_incremental_lsh", SF_SMOKE)
 
@@ -422,11 +427,11 @@ def test_interrupted_signature_store_build_is_rebuilt(
 
 
 def test_interrupted_index_rebuild_is_rebuilt(spark, tmp_path, monkeypatch):
-    """ensure_index's crash case, one step on: a compaction crash leaves
-    no codes/, the rebuild ensure_index starts writes codes/ and dies
-    while writing centroids/. The store must stay exactly as the crash
-    left it — never codes/ beside the old, still-matching manifest —
-    and the next ensure_index rebuilds it."""
+    """ensure_index's crash case, one step on: the codes blob is gone,
+    and the rebuild ensure_index starts writes codes and dies while
+    writing centroids. The store must stay exactly as it was — never
+    new codes beside the old, still-matching tag — and the next
+    ensure_index rebuilds it."""
     import os
     import shutil
 
@@ -437,7 +442,8 @@ def test_interrupted_index_rebuild_is_rebuilt(spark, tmp_path, monkeypatch):
     compare_query(spark, "ann_index_load_topk", SF_SMOKE)  # builds
     path = store.store_path("ann_index", SF_SMOKE)
     e = load_tables(spark, SF_SMOKE)["embeddings"]
-    shutil.rmtree(os.path.join(path, "codes"))
+    codes = _blob(path, "codes")
+    shutil.rmtree(codes)
     cents = index_store.ivf_centroids
     monkeypatch.setattr(
         index_store, "ivf_centroids", lambda x: _failing_write(cents(x))
@@ -447,7 +453,181 @@ def test_interrupted_index_rebuild_is_rebuilt(spark, tmp_path, monkeypatch):
         ensure_index(e, path)
     monkeypatch.setattr(index_store, "ivf_centroids", cents)
     assert _snapshot(path) == before
-    assert not os.path.isdir(os.path.join(path, "codes"))
+    assert not os.path.isdir(codes)
     assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
     assert ensure_index(e, path) is True
     compare_query(spark, "ann_index_load_topk", SF_SMOKE)
+
+
+def _ids(frame) -> set[int]:
+    return {r.vec_id for r in frame.select("vec_id").collect()}
+
+
+def _even_index(spark, path):
+    """(embeddings, codebooks) of an index built on the even vec_ids."""
+    from disco_spark.similarity.index_store import ann_index_load, ann_index_save
+
+    e = load_tables(spark, SF_SMOKE)["embeddings"]
+    ann_index_save(e.filter("vec_id % 2 = 0"), path, subset="even")
+    return e, ann_index_load(spark, path)[2]
+
+
+def _fail_writes(monkeypatch, marker):
+    """Make every parquet write whose target path holds ``marker`` clear
+    its target and raise: what a ``mode("overwrite")`` write whose last
+    stage fails leaves behind."""
+    import shutil
+
+    import pyspark.sql.readwriter as rw
+
+    write = rw.DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if marker in str(path):
+            shutil.rmtree(path, ignore_errors=True)
+            raise RuntimeError("injected")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(rw.DataFrameWriter, "parquet", parquet)
+
+
+def test_retried_add_whose_write_fails_keeps_first_attempt(
+    spark, tmp_path, monkeypatch
+):
+    """A retried add batch whose write dies keeps the first attempt's
+    vectors served: the retry writes a fresh blob, never the live one."""
+    from disco_spark.similarity.index_store import (
+        ann_index_add,
+        ann_index_serveable_codes,
+    )
+
+    path = str(tmp_path / "idx")
+    e, books = _even_index(spark, path)
+    added = e.filter("vec_id % 2 = 1")
+    ann_index_add(added, path, books=books, batch_id="b1")
+    assert _ids(ann_index_serveable_codes(spark, path)) == _ids(e)
+    with monkeypatch.context() as m:
+        _fail_writes(m, "codes_delta")
+        with pytest.raises(Exception, match="injected"):
+            ann_index_add(added, path, books=books, batch_id="b1")
+    assert _ids(ann_index_serveable_codes(spark, path)) == _ids(e)
+
+
+def test_retried_delete_whose_write_fails_keeps_tombstones(
+    spark, tmp_path, monkeypatch
+):
+    """A retried delete batch whose write dies keeps the first attempt's
+    ids tombstoned."""
+    from disco_spark.similarity.index_store import (
+        ann_index_delete,
+        ann_index_serveable_codes,
+    )
+
+    path = str(tmp_path / "idx")
+    e, _ = _even_index(spark, path)
+    dead = e.filter("vec_id % 4 = 2").select("vec_id")
+    alive = _ids(e.filter("vec_id % 4 = 0"))
+    ann_index_delete(dead, path, batch_id="d1")
+    assert _ids(ann_index_serveable_codes(spark, path)) == alive
+    with monkeypatch.context() as m:
+        _fail_writes(m, "tombstones")
+        with pytest.raises(Exception, match="injected"):
+            ann_index_delete(dead, path, batch_id="d1")
+    assert _ids(ann_index_serveable_codes(spark, path)) == alive
+
+
+def test_add_published_during_compaction_is_served(spark, tmp_path, monkeypatch):
+    """An add published after a compaction planned its read, and before
+    the compaction publishes, is still served afterwards: the compaction
+    drops only the batches it folded."""
+    import pyspark.sql.readwriter as rw
+
+    from disco_spark.similarity.index_store import (
+        ann_index_add,
+        ann_index_compact,
+        ann_index_serveable_codes,
+    )
+
+    path = str(tmp_path / "idx")
+    e, books = _even_index(spark, path)
+    ann_index_add(e.filter("vec_id % 4 = 1"), path, books=books, batch_id="early")
+    write = rw.DataFrameWriter.parquet
+    late = []
+
+    def parquet(self, target, *args, **kwargs):
+        if not late:  # the compaction's own write: its read is planned
+            late.append(target)
+            ann_index_add(
+                e.filter("vec_id % 4 = 3"), path, books=books, batch_id="late"
+            )
+        return write(self, target, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(rw.DataFrameWriter, "parquet", parquet)
+        ann_index_compact(spark, path)
+    assert late
+    assert _ids(ann_index_serveable_codes(spark, path)) == _ids(e)
+
+
+def test_rebuild_published_during_compaction_is_kept(spark, tmp_path, monkeypatch):
+    """A rebuild published after a compaction wrote its folded codes,
+    and before the compaction publishes, is what is served afterwards:
+    codes folded under the old codebooks are not published over it."""
+    from disco_spark import store
+    from disco_spark.similarity.index_store import (
+        ann_index_add,
+        ann_index_compact,
+        ann_index_save,
+        ann_index_serveable_codes,
+    )
+
+    path = str(tmp_path / "idx")
+    e, books = _even_index(spark, path)
+    ann_index_add(e.filter("vec_id % 4 = 1"), path, books=books)
+    publish = store.publish
+    rebuilt = []
+
+    def rebuild_first(*args, **kwargs):
+        if not rebuilt:  # the compaction's publish
+            rebuilt.append(True)
+            ann_index_save(e, path)
+        return publish(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(store, "publish", rebuild_first)
+        ann_index_compact(spark, path)
+    assert rebuilt
+    assert sorted(store.blobs(path)) == ["centroids", "codebooks", "codes"]
+    assert _ids(ann_index_serveable_codes(spark, path)) == _ids(e)
+
+
+def test_concurrent_adds_are_both_served(spark, tmp_path):
+    """Two threads adding different batches to one index at once: both
+    batches are served."""
+    import threading
+
+    from disco_spark.similarity.index_store import (
+        ann_index_add,
+        ann_index_serveable_codes,
+    )
+
+    path = str(tmp_path / "idx")
+    e, books = _even_index(spark, path)
+    errors = []
+
+    def add(where, batch):
+        try:
+            ann_index_add(e.filter(where), path, books=books, batch_id=batch)
+        except BaseException as exc:  # pragma: no cover - reported below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=add, args=("vec_id % 4 = 1", "a")),
+        threading.Thread(target=add, args=("vec_id % 4 = 3", "b")),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not errors
+    assert _ids(ann_index_serveable_codes(spark, path)) == _ids(e)

@@ -12,13 +12,18 @@ import shutil
 from pyspark.sql import functions as F
 
 from disco_spark.similarity.ann import _adaptive_knn
-from disco_spark.store import store_path
+from disco_spark.store import blobs, store_path
 
 from tests.conftest import SF_SMOKE
 
 
 def _store(k=5, p=4) -> str:
     return store_path("knn_graph", SF_SMOKE, f"_k{k}_p{p}")
+
+
+def _graph() -> str:
+    (name,) = blobs(_store())["graph"]
+    return os.path.join(_store(), name)
 
 
 def test_warm_serve_equals_fresh_build(spark):
@@ -44,13 +49,13 @@ def test_stale_manifest_rebuilds(spark):
 
 
 def test_missing_graph_dir_rebuilds(spark):
-    """Manifest intact but graph dir gone (the crash shape the
+    """Manifest intact but graph blob gone (the crash shape the
     ensure_index lesson covers) -> rebuild, never an empty serve."""
     _adaptive_knn(spark, SF_SMOKE).count()
-    shutil.rmtree(os.path.join(_store(), "graph"))
+    shutil.rmtree(_graph())
     rows = _adaptive_knn(spark, SF_SMOKE).count()
     assert rows > 0
-    assert os.path.isdir(os.path.join(_store(), "graph"))
+    assert os.path.isdir(_graph())
 
 
 def test_k_and_nprobe_key_separate_stores(spark):

@@ -18,13 +18,18 @@ from disco_spark.similarity.ann import (
     adaptive_cells,
     planted_cells_store,
 )
-from disco_spark.store import store_path
+from disco_spark.store import blobs, store_path
 
 from tests.conftest import SF_SMOKE
 
 
 def _store() -> str:
     return store_path("planted_cells", SF_SMOKE)
+
+
+def _cells() -> str:
+    (name,) = blobs(_store())["cells"]
+    return os.path.join(_store(), name)
 
 
 def _planted(spark):
@@ -66,15 +71,15 @@ def test_stale_manifest_retrains(spark):
 
 def test_manifest_without_cells_dir_retrains(spark):
     """The ensure_index lesson: a matching manifest alone is not a
-    serveable store — cells/ missing must force a rebuild, not a read
-    of a nonexistent path."""
+    serveable store — the cells blob missing must force a rebuild, not
+    a read of a nonexistent path."""
     emb = load_tables(spark, SF_SMOKE)["embeddings"]
     p = _planted(spark)
     planted_cells_store(spark, SF_SMOKE, p, emb).count()
-    shutil.rmtree(os.path.join(_store(), "cells"))
+    shutil.rmtree(_cells())
     got = planted_cells_store(spark, SF_SMOKE, p, emb)
     assert got.count() == emb.count()
-    assert os.path.isdir(os.path.join(_store(), "cells"))
+    assert os.path.isdir(_cells())
 
 
 def test_audit_query_runs_warm_and_cold(spark):

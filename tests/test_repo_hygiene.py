@@ -1,7 +1,8 @@
 """Repository hygiene: no tracked script reaches for the retired
 headline harness (bench.py) or its rehearsal tooling, every script left
-in tools/ still imports, and the classic MapReduce layer has no executor
-of its own. Runs no Spark."""
+in tools/ still imports, the classic MapReduce layer has no executor of
+its own, and only disco_spark/store.py moves files into place or writes
+a manifest. Runs no Spark."""
 
 from __future__ import annotations
 
@@ -71,3 +72,62 @@ def test_classic_has_no_executor_of_its_own():
         src = fh.read()
     found = [name for name in ("mapInPandas", "pandas_udf", "OUT_BATCH") if name in src]
     assert not found, found
+
+
+def _store_writes(tree) -> list[int]:
+    """Lines that move a file into place (``os.replace``/``os.rename``)
+    or open a ``manifest.json`` for writing."""
+    import ast
+
+    hits = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if (
+            isinstance(f, ast.Attribute)
+            and f.attr in ("replace", "rename")
+            and isinstance(f.value, ast.Name)
+            and f.value.id == "os"
+        ):
+            hits.append(node.lineno)
+        elif isinstance(f, ast.Name) and f.id == "open":
+            mode = node.args[1] if len(node.args) > 1 else next(
+                (k.value for k in node.keywords if k.arg == "mode"), None
+            )
+            names = [
+                c.value for c in ast.walk(node.args[0]) if isinstance(c, ast.Constant)
+            ] if node.args else []
+            writes = isinstance(mode, ast.Constant) and set(str(mode.value)) & set("wax+")
+            if writes and any("manifest.json" in str(n) for n in names):
+                hits.append(node.lineno)
+    return sorted(hits)
+
+
+def test_only_the_store_publishes_tags():
+    """Every persisted-store write goes through disco_spark/store.py:
+    no other module moves files into place or writes a manifest."""
+    import ast
+
+    pkg = os.path.join(ROOT, "disco_spark")
+    hits = []
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or path == os.path.join(pkg, "store.py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            hits += [f"{os.path.relpath(path, ROOT)}:{n}" for n in _store_writes(tree)]
+    assert not hits, hits
+
+
+def test_store_write_guard_sees_what_it_forbids():
+    import ast
+
+    src = (
+        "os.replace(a, b)\nos.rename(a, b)\n"
+        "open(os.path.join(p, 'manifest.json'), 'w')\n"
+        "open(os.path.join(p, 'manifest.json'))\nopen(x, 'w')\n"
+    )
+    assert _store_writes(ast.parse(src)) == [1, 2, 3]

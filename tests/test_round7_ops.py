@@ -340,12 +340,12 @@ def test_index_delete_excludes_tombstoned(spark):
 
 
 def test_index_delete_batches_accumulate_and_rebuild_compacts(spark, tmp_path):
+    from disco_spark import store
     from disco_spark.session import load_tables as lt
     from disco_spark.similarity.index_store import (
         ann_index_delete,
         ann_index_save,
         ann_index_serveable_codes,
-        ann_index_tombstones,
     )
 
     e = lt(spark, SF_SMOKE)["embeddings"]
@@ -363,7 +363,7 @@ def test_index_delete_batches_accumulate_and_rebuild_compacts(spark, tmp_path):
     }
     assert served == alive  # both delete batches applied
     ann_index_save(e, path)  # rebuild compacts tombstones
-    assert ann_index_tombstones(spark, path) is None
+    assert "tombstones" not in store.blobs(path)
     n_all = e.count()
     assert ann_index_serveable_codes(spark, path).count() == n_all
 

@@ -171,17 +171,13 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_cc_star_vs_propagation_vs_unionfind_random_graphs(spark):
-    """All three CC paths (driver union-find, large/small-star, min-label
-    propagation) agree on random graphs, including a long chain — the
-    diameter shape where star-style rewriting needs O(log n) rounds but
-    propagation needs n."""
+    """Both CC paths (driver union-find, large/small-star) agree on
+    random graphs, including a long chain — the diameter shape where
+    star-style rewriting needs O(log n) rounds, where min-label
+    propagation would need n."""
     import random
 
-    from disco_spark.dedup.cc import (
-        _cc_label_propagation,
-        _cc_large_small_star,
-        connected_components,
-    )
+    from disco_spark.dedup.cc import _cc_large_small_star, connected_components
 
     rng = random.Random(7)
     cases = []
@@ -196,12 +192,9 @@ def test_cc_star_vs_propagation_vs_unionfind_random_graphs(spark):
         want = {
             r.node: r.comp for r in connected_components(edges).collect()
         }  # union-find ground truth (threshold far above edge count)
+        # star converges in O(log n) rounds with the default budget
         star = {r.node: r.comp for r in _cc_large_small_star(edges).collect()}
-        # propagation is diameter-bounded: the 80-chain needs ~80 rounds
-        # (star converges in O(log n) with the default budget — the point)
-        prop = {r.node: r.comp for r in _cc_label_propagation(edges, max_iter=100).collect()}
         assert star == want, f"case {i}: star mismatch"
-        assert prop == want, f"case {i}: propagation mismatch"
 
 
 def test_pii_scrub_and_url_stats_on_synthetic(spark):
