@@ -12,6 +12,9 @@ the same scale-oriented defaults:
   sanctioned Python hot path).
 - shuffle.partitions sized for local[32] test runs; on a real cluster
   AQE's coalescing makes the initial number mostly a ceiling.
+- Python workers fork from ``disco_spark.worker_daemon``, so a task does
+  not re-read ``pyspark.zip``, and import ``disco_spark`` from the
+  checkout (their ``PYTHONPATH``) whatever the working directory.
 """
 
 from __future__ import annotations
@@ -26,6 +29,8 @@ from disco_spark import store
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# holds the disco_spark package the worker daemon and engine UDFs import
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region",
@@ -45,8 +50,9 @@ def get_spark(app_name: str = "disco_spark", master: str | None = None) -> Spark
     """Build (or reuse) a SparkSession with engine defaults.
 
     In local mode we mirror the driver's harness (local[$SPARK_GRAFT_CPUS]);
-    on a cluster the master is injected by spark-submit and this factory
-    only contributes SQL-level settings, all of which are cluster-safe.
+    on a cluster the master is injected by spark-submit. Python workers
+    start from ``disco_spark.worker_daemon``, so executors must import
+    ``disco_spark``, as every engine UDF already requires.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -78,6 +84,8 @@ def get_spark(app_name: str = "disco_spark", master: str | None = None) -> Spark
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
         )
+        .config("spark.python.daemon.module", "disco_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT)
     )
     if master is not None:
         builder = builder.master(master)
