@@ -18,20 +18,19 @@ graph: ~1.7k of 2.5k nodes still flipping at round 12), while the
 self-preferenced variant reaches its exact fixpoint in 6 rounds —
 the standard damping for synchronous schedules. Every step is integer
 arithmetic on exact neighbor-label counts, so Spark and DuckDB replay
-the same trajectory bit-for-bit, and the oracle is the same
-unrolled-CTE chain the k-core / unrolled-Lloyd queries use.
+the same trajectory bit-for-bit.
+
+Graph: the co-order edge set of the triangles.py harness, oriented
+both ways by its ``_both_orientations``; the oracle is the harness's
+``unrolled_ctes`` over its ``UND_CTE``, one CTE pair per round.
 
 Scale story: one round = one hash join (adjacency x labels; the
 adjacency co-partitioned on src once, reused every round) + one
-grouped deterministic mode() over that node's few
-candidate labels — O(rounds) keyed shuffles of the LABEL frame, no
-driver state, no fixpoint iteration (LPA_ROUNDS bounds the plan; the
-test suite asserts the label assignment has CONVERGED on this graph
-by the registered round count, so the answer is the true sync-LPA
-fixpoint there). The adjacency is the hub-capped, strength-thresholded
-co-order graph shared with every other graph query (triangles.EDGES_
-CTES) — the one definition of the graph, so community structure
-cannot drift from what triangles/k-core measure.
+grouped deterministic mode() over that node's few candidate labels —
+O(rounds) keyed shuffles of the LABEL frame, no driver state, no
+fixpoint iteration (LPA_ROUNDS bounds the plan; the test suite asserts
+the label assignment has CONVERGED on this graph by the registered
+round count, so the answer is the true sync-LPA fixpoint there).
 """
 
 from __future__ import annotations
@@ -40,37 +39,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import lazy_persist, load_tables
-from disco_spark.similarity.triangles import EDGES_CTES, coorder_edges
+from disco_spark.session import default_parallelism, lazy_persist, load_tables
+from disco_spark.similarity.triangles import (
+    EDGES_CTES,
+    UND_CTE,
+    _both_orientations,
+    coorder_edges,
+    unrolled_ctes,
+)
 
 LPA_ROUNDS = 6
 
-
-def _lpa_cte_chain(rounds: int = LPA_ROUNDS) -> str:
-    """Unrolled sync-LPA rounds over the shared `edges` CTE: labels0 =
-    own id; labels{r+1}(v) = most frequent label among v's neighbors
-    AND v itself (self-loop vote), ties to the smallest label.
-    Mirrors label_propagation() exactly."""
-    parts = [
-        """
-    sym AS (
-      SELECT u AS src, v AS dst FROM edges
-      UNION ALL SELECT v, u FROM edges
-    ),
-    und AS (
-      SELECT src, dst FROM sym
-      UNION ALL SELECT DISTINCT src, src FROM sym
-    ),
-    labels0 AS (SELECT DISTINCT src AS node, src AS label FROM sym)"""
-    ]
-    for r in range(rounds):
-        parts.append(f"""
+# labels{r+1}(v) = the most frequent label among v's neighbours AND v
+# itself (the self-loop rows of adj), ties to the smallest label
+_LPA_ROUND = """
     votes{r} AS (
       SELECT e.dst AS node, l.label, COUNT(*) AS c
-      FROM und e JOIN labels{r} l ON l.node = e.src
+      FROM adj e JOIN labels{r} l ON l.node = e.src
       GROUP BY 1, 2
     ),
-    labels{r + 1} AS (
+    labels{r1} AS (
       SELECT node, label FROM (
         SELECT node, label,
                ROW_NUMBER() OVER (
@@ -78,8 +66,14 @@ def _lpa_cte_chain(rounds: int = LPA_ROUNDS) -> str:
                ) AS rk
         FROM votes{r}
       ) WHERE rk = 1
-    )""")
-    return ",".join(parts)
+    )"""
+
+_LPA_PRELUDE = f"""{UND_CTE},
+    adj AS (
+      SELECT src, dst FROM und
+      UNION ALL SELECT DISTINCT src, src FROM und
+    ),
+    labels0 AS (SELECT DISTINCT src AS node, src AS label FROM und)"""
 
 
 def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
@@ -87,28 +81,12 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     over an undirected edge list (u, v) — the engine plan behind
     graph_label_propagation, exposed for planted-community tests.
 
-    Physical shape per round (guide §2.4): ONE exchange of the
-    node-sized labels frame (the adjacency is co-partitioned on src
-    once, up front, and reused by every round's join) + ONE grouped
-    mode() aggregation by node. The previous shape re-shuffled the
-    adjacency every round and resolved the vote with a
-    groupBy(node, label) exchange PLUS a row_number window (a third
-    exchange + sort): mode(label, deterministic=true) — most frequent,
-    ties to the SMALLEST value — is the vote rule as one aggregate,
-    with map-side partial aggregation of the per-node label histogram.
-    Labels/round counts are bit-identical (exact integer votes, same
-    tie rule)."""
-    from disco_spark.session import default_parallelism
-
-    from disco_spark.similarity.triangles import _both_orientations
-
-    # both orientations emitted in-row instead of a two-arm unionAll:
-    # the union arms each embedded (and really executed) the edge-
-    # builder subtree. Measured A/B at sf0.1: warm median 3.78 ->
-    # 3.31 s, cold rep 16.3 -> 4.4 s; persisting `edges` on top was
-    # WORSE (3.79 warm / 6.9 cold) — both remaining subtree references
-    # land inside one persisted-und materialization, where per-
-    # partition cache locking already dedups the work.
+    Physical shape per round: ONE exchange of the node-sized labels
+    frame (the adjacency is co-partitioned on src once, up front, and
+    reused by every round's join) + ONE grouped mode() aggregation by
+    node: mode(label, deterministic=true) — most frequent, ties to the
+    SMALLEST value — is the vote rule as one aggregate, with map-side
+    partial aggregation of the per-node label histogram."""
     # input self-loops are IGNORED (filtered before orientation): every
     # node already casts exactly one self-vote via the appended loop row
     # below. Without the filter, a caller-supplied (u, u) edge would emit
@@ -116,23 +94,24 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     # three duplicate labels0 rows and triple self-vote weight, diverging
     # from the oracle's DISTINCT labels0 (in-repo callers emit u < v
     # edges, but label_propagation is an exported API).
-    sym = _both_orientations(edges.filter(F.col("u") != F.col("v")))
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    und = lazy_persist(
-        sym.unionAll(
+    und = _both_orientations(edges.filter(F.col("u") != F.col("v")))
+    nodes = und.select(F.col("src").alias("node")).distinct()
+    # the adjacency plus one self-loop per node (the oracle's adj), read
+    # by labels0 and by every round: cached once, co-partitioned on src
+    adj = lazy_persist(
+        und.unionAll(
             nodes.select(
                 F.col("node").alias("src"), F.col("node").alias("dst")
             )
         ).repartition(default_parallelism(edges.sparkSession), "src")
     )
-    # labels0 from the persisted adjacency's self-loop rows (every node
-    # has exactly one) — no second distinct over sym
-    labels = und.filter(F.col("src") == F.col("dst")).select(
+    # labels0 from the self-loop rows (every node has exactly one)
+    labels = adj.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
     for _ in range(rounds):
         labels = (
-            und.join(labels.withColumnRenamed("node", "src"), "src")
+            adj.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.mode("label", True).alias("label"))
         )
@@ -142,7 +121,7 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 @query(
     "graph_label_propagation",
     oracle=f"""
-    WITH {EDGES_CTES},{_lpa_cte_chain()}
+    WITH {EDGES_CTES},{unrolled_ctes(_LPA_PRELUDE, _LPA_ROUND, LPA_ROUNDS)}
     SELECT label AS community,
            CAST(COUNT(*) AS BIGINT) AS n_members,
            CAST(MIN(node) AS BIGINT) AS min_node,

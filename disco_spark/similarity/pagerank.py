@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 
 from disco_spark.registry import query
 from disco_spark.session import default_parallelism, lazy_persist, load_tables
+from disco_spark.similarity.triangles import (
+    DEG_CTE,
+    UND_CTE,
+    _both_orientations,
+    _degrees,
+    unrolled_ctes,
+)
 
 
 def pagerank(
@@ -35,19 +42,15 @@ def pagerank(
     Fully lazy: every scalar the update needs (node count, per-iteration
     dangling mass) is a 1-row aggregate cross-joined into the plan
     (Catalyst broadcasts it), so the whole ``iters``-deep recursion is
-    ONE plan with ONE action at the end — no per-iteration ``.first()``
-    round-trips, and (since r15) no eager localCheckpoint either: the
-    caller's own action executes the plan exactly once, and the cached
-    intermediates are released by the lazy_persist protocol at the next
-    registered query instead of an extra materialize-then-replay job.
+    ONE plan with ONE action at the end: the caller's own action
+    executes it exactly once, and the cached intermediates are released
+    by the lazy_persist protocol at the next registered query.
 
-    Physical shape per iteration (guide §2.4): out-degree rides INSIDE
-    the rank frame — (node, deg, rank) — so the per-source contribution
-    is a row-local projection, not the out_deg-join the previous shape
-    paid per iteration (one fewer join + broadcast future x iters); the
-    only per-iteration exchange is the groupBy(dst) of (dst, c) pairs.
-    ``partitions`` defaults to the session's parallelism (the r14
-    verdict flagged the hardcoded 32).
+    Physical shape per iteration: out-degree rides INSIDE the rank
+    frame — (node, d, rank) — so the per-source contribution is a
+    row-local projection; the only per-iteration exchange is the
+    groupBy(dst) of (dst, c) pairs. ``partitions`` defaults to the
+    session's parallelism.
 
     ``symmetric=True`` asserts every edge's reverse is also present (the
     caller built an undirected/bidirectional edge list). Then every node
@@ -61,52 +64,38 @@ def pagerank(
         partitions = default_parallelism(edges.sparkSession)
     # ONE shuffle for edge prep: after repartition on src, every (src,
     # dst) duplicate is already co-located, so Catalyst satisfies the
-    # dropDuplicates clustering requirement without a second exchange
-    # (verified: plan has a single Exchange). distinct-then-repartition
-    # was two full edge shuffles.
+    # dropDuplicates clustering requirement without a second exchange.
     edges = lazy_persist(
         edges.select("src", "dst")
         .repartition(partitions, "src")
         .dropDuplicates(["src", "dst"])
     )
-    if symmetric:
-        # node spine directly from the co-partitioned degree aggregate:
-        # zero exchanges past the edge prep (hash(src) satisfies the
-        # groupBy clustering) and deg is never NULL
-        nd = lazy_persist(
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .select(F.col("src").alias("node"), "deg")
-        )
-    else:
+    # node spine (node, d): d is the out-degree, NULL for a dangling node.
+    # A symmetric graph has no dangling node, so its spine IS the
+    # co-partitioned degree aggregate (no exchange past the edge prep).
+    nd = _degrees(edges)
+    if not symmetric:
         nodes = (
             edges.select(F.col("src").alias("node"))
             .unionAll(edges.select(F.col("dst").alias("node")))
             .distinct()
         )
-        out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        # node spine: (node, deg) — deg NULL for dangling nodes (no
-        # out-edges). nodes and out_deg each have exactly one consumer
-        # (this join), so only the joined spine is persisted.
-        nd = lazy_persist(
-            nodes.join(out_deg, nodes.node == out_deg.src, "left").select(
-                "node", "deg"
-            )
-        )
+        nd = nodes.join(nd, "node", "left")
+    nd = lazy_persist(nd)
     # scalar spine: n as a broadcast 1-row frame (same IEEE double ops as
-    # the former driver-side literals, so ranks are bit-identical); nd
-    # has exactly one row per node, so counting it counts nodes
+    # driver-side literals, so ranks are bit-identical); nd has exactly
+    # one row per node, so counting it counts nodes
     n_df = nd.agg(F.count(F.lit(1)).cast("double").alias("__n"))
     ranks = nd.crossJoin(F.broadcast(n_df)).select(
-        "node", "deg", (F.lit(1.0) / F.col("__n")).alias("rank")
+        "node", "d", (F.lit(1.0) / F.col("__n")).alias("rank")
     )
 
     for _ in range(iters):
-        # row-local: exactly the rows the old out_deg-inner-join kept
-        # (deg NULL = absent from out_deg), same c values
-        per_src = ranks.filter(F.col("deg").isNotNull()).select(
-            F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("c")
+        per_src = ranks.filter(F.col("d").isNotNull()).select(
+            F.col("node").alias("src"), (F.col("rank") / F.col("d")).alias("c")
         )
+        # contribs is read twice (dang_df and the rank join); ranks once
+        # (the next iteration's per_src), so only contribs is persisted
         contribs = lazy_persist(
             edges.join(per_src, "src")
             .select("dst", "c")
@@ -117,16 +106,13 @@ def pagerank(
         dang_df = contribs.agg(
             F.coalesce(F.sum("recv"), F.lit(0.0)).alias("__linked")
         )
-        # contribs is persisted (2 downstream refs: dang_df and this
-        # join); ranks is referenced exactly once (next iteration's
-        # per_src), so persisting it would only add a barrier
         ranks = (
             nd.join(contribs, nd.node == contribs.dst, "left")
             .crossJoin(F.broadcast(n_df))
             .crossJoin(F.broadcast(dang_df))
             .select(
                 "node",
-                "deg",
+                "d",
                 (
                     (F.lit(1.0) - F.lit(damping)) / F.col("__n")
                     + F.lit(damping)
@@ -141,44 +127,37 @@ def pagerank(
 
 
 def _pagerank_oracle_sql(iters: int, damping: float = 0.85) -> str:
-    """Unroll the fixed-iteration PageRank as chained CTEs (aggregation
-    is not allowed inside a recursive CTE term, so a WITH RECURSIVE
-    formulation can't express the per-iteration groupBy; unrolling can).
-    Float literals are forced ::DOUBLE so DuckDB doesn't route them
-    through DECIMAL arithmetic — the engine computes (1.0 - 0.85) in
-    IEEE double, and the oracle must hit the same bits."""
-    parts = [
-        """
-    e0 AS (
-      SELECT DISTINCT 's' || l_suppkey AS src, 'p' || l_partkey AS dst FROM lineitem
-    ),
-    edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    params AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-    deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-    r0 AS (SELECT node, 1.0::DOUBLE / (SELECT n FROM params) AS rank FROM nodes)"""
-    ]
-    d = damping
-    for i in range(1, iters + 1):
-        parts.append(f"""
-    c{i} AS (
-      SELECT e.dst, SUM(r.rank / d.deg) AS recv
-      FROM edges e JOIN deg d ON e.src = d.src JOIN r{i - 1} r ON e.src = r.node
+    """The fixed-iteration PageRank as the harness's unrolled CTEs over
+    its adjacency and degrees. Float literals are forced ::DOUBLE so
+    DuckDB doesn't route them through DECIMAL arithmetic — the engine
+    computes (1.0 - 0.85) in IEEE double, and the oracle must hit the
+    same bits."""
+    prelude = f"""
+    edges AS (
+      SELECT DISTINCT 's' || l_suppkey AS u, 'p' || l_partkey AS v
+      FROM lineitem
+    ),{UND_CTE},{DEG_CTE},
+    params AS (SELECT count(*)::DOUBLE AS n FROM deg),
+    r0 AS (SELECT node, 1.0::DOUBLE / (SELECT n FROM params) AS rank FROM deg)"""
+    step = f"""
+    c{{r1}} AS (
+      SELECT e.dst, SUM(r.rank / d.d) AS recv
+      FROM und e JOIN deg d ON e.src = d.node JOIN r{{r}} r ON e.src = r.node
       GROUP BY e.dst
     ),
-    dang{i} AS (
-      SELECT (1.0::DOUBLE - SUM(recv)) / (SELECT n FROM params) AS dang FROM c{i}
+    dang{{r1}} AS (
+      SELECT (1.0::DOUBLE - SUM(recv)) / (SELECT n FROM params) AS dang FROM c{{r1}}
     ),
-    r{i} AS (
+    r{{r1}} AS (
       SELECT n.node,
-             (1.0::DOUBLE - {d}::DOUBLE) / (SELECT n FROM params)
-             + {d}::DOUBLE * (COALESCE(c.recv, 0.0::DOUBLE) + (SELECT dang FROM dang{i}))
+             (1.0::DOUBLE - {damping}::DOUBLE) / (SELECT n FROM params)
+             + {damping}::DOUBLE * (COALESCE(c.recv, 0.0::DOUBLE) + (SELECT dang FROM dang{{r1}}))
                AS rank
-      FROM nodes n LEFT JOIN c{i} c ON n.node = c.dst
-    )""")
+      FROM deg n LEFT JOIN c{{r1}} c ON n.node = c.dst
+    )"""
     return (
-        "WITH" + ",".join(parts)
-        + f"\n    SELECT node, ROUND(rank, 9) AS rank FROM r{iters}"
+        f"WITH{unrolled_ctes(prelude, step, iters)}"
+        f"\n    SELECT node, ROUND(rank, 9) AS rank FROM r{iters}"
     )
 
 
@@ -191,27 +170,16 @@ def pagerank_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     The iteration runs on INTEGER node ids (supplier k -> 2k, part k ->
     2k+1); the display names ('s<k>'/'p<k>') are built only on the final
     node-sized result. Every edge-table shuffle (dedup, co-partition,
-    per-dst sums) then hashes/compares 8-byte longs instead of strings —
-    measured ~25% faster warm and ~2x cold at sf0.1, and at 100 TB the
-    shuffle-volume cut scales with |edges|. Rank VALUES are unchanged:
-    the arithmetic depends only on graph structure, not id encoding."""
-    t = load_tables(spark, sf_dir)
-    # both orientations emitted IN-ROW (explode of a 2-struct array):
-    # the old fwd.unionAll(back) embedded — and really executed — the
-    # lineitem scan in both arms (one 64-task scan stage at sf0.1);
-    # one arm per row halves the work feeding the dedup exchange
-    # (guide §2.4, the _both_orientations pattern from the co-order
-    # kernels)
-    s_node = F.col("l_suppkey") * 2
-    p_node = F.col("l_partkey") * 2 + 1
-    both = F.array(
-        F.struct(s_node.alias("src"), p_node.alias("dst")),
-        F.struct(p_node.alias("src"), s_node.alias("dst")),
-    )
-    edges = (
-        t["lineitem"]
-        .select(F.explode(both).alias("_e"))
-        .select("_e.src", "_e.dst")
+    per-dst sums) then hashes/compares 8-byte longs instead of strings,
+    a shuffle-volume cut that grows with |edges|. Rank VALUES are the
+    same as with string ids: the arithmetic depends only on graph
+    structure, not id encoding."""
+    li = load_tables(spark, sf_dir)["lineitem"]
+    edges = _both_orientations(
+        li.select(
+            (F.col("l_suppkey") * 2).alias("u"),
+            (F.col("l_partkey") * 2 + 1).alias("v"),
+        )
     )
     # symmetric=True: both orientations of every pair are emitted above,
     # so the rank loop skips the node-spine union/join (see pagerank)

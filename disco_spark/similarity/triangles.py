@@ -1,6 +1,9 @@
-"""Triangle counting over the part co-order graph — the third classic
-distributed graph kernel alongside PageRank (similarity/pagerank.py)
-and connected components (dedup/cc.py). Reference analog: none (the
+"""The part co-order graph and the queries on it, on one edge harness:
+triangle counting, clustering coefficients, market-basket lift, the
+degree distribution, link prediction, degree assortativity, k-core
+peeling and local bridges here, k-hop reachability in khop.py and
+label propagation in communities.py; pagerank.py orients its supplier-
+part graph with the same function. Reference analog: none (the
 reference ships PageRank and k-means as example jobs; triangle counting
 is the canonical next kernel — clustering-coefficient / community-
 density audits).
@@ -18,29 +21,40 @@ degenerates into n^3 work about nothing). Hub orders (more than
 (LSH bands, exact spans), per Suri & Vassilvitskii, "Counting Triangles
 and the Curse of the Last Reducer".
 
-Scale story: the compact-forward counting scheme — orient every edge
-u < v, join edges-with-edges on the shared middle vertex, then verify
-the closing edge with a third join. Each triangle {u < v < w} is
-counted exactly once as (u,v) + (v,w) + (u,w). Three hash joins on
-vertex keys, no per-node adjacency materialization, no driver state;
-per-node counts are one explode + groupBy.
+The harness, each piece once in Spark and once as oracle SQL:
+
+- the capped, thresholded edge list (u, v), u < v: ``coorder_edges``
+  / ``EDGES_CTES`` (``strengths`` keeps the pair counts lift needs);
+  ``_shared_edges`` is its one persist, for the queries that pay for it;
+- both orientations (src, dst) of every edge: ``_both_orientations`` /
+  ``UND_CTE``;
+- the per-node degree (node, d) over that adjacency: ``_degrees`` /
+  ``DEG_CTE``;
+- the wedge join w1 ⋈ w2 ON z, a < b, pairs with a common neighbour z:
+  ``_wedges`` / ``WEDGE_CTE``;
+- per-node triangle counts: ``triangle_counts`` / ``TCOUNT_CTES``;
+- ``unrolled_ctes``, the oracle of every fixed-round iteration (k-core,
+  label propagation, PageRank): a prelude and one CTE group per round.
+
+Triangles use the compact-forward scheme: join the u < v edges with
+themselves on the shared middle vertex, then verify the closing edge
+with a third join, so each triangle {u < v < w} is counted exactly once.
+Three hash joins on vertex keys, no per-node adjacency materialization,
+no driver state; per-node counts are one explode + groupBy.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import load_tables
+from disco_spark.session import default_parallelism, lazy_persist, load_tables
 
 MAX_ORDER_PARTS = 50
 MIN_COORDERS = 2
 
 
-# shared DuckDB CTE chain op -> capped -> edges (and tris on top) — both
-# graph oracles compose from this single source so the graph definition
-# (cap, strength threshold, orientation) cannot drift between them
 EDGES_CTES = f"""
     op AS (
       SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
@@ -50,31 +64,64 @@ EDGES_CTES = f"""
         SELECT o, p, COUNT(*) OVER (PARTITION BY o) AS d FROM op
       ) WHERE d <= {MAX_ORDER_PARTS}
     ),
+    strengths AS (
+      SELECT a.p AS u, b.p AS v, COUNT(*) AS strength
+      FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p
+      GROUP BY 1, 2
+    ),
     edges AS (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS strength
-        FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p
-        GROUP BY 1, 2
-      ) WHERE strength >= {MIN_COORDERS}
+      SELECT u, v FROM strengths WHERE strength >= {MIN_COORDERS}
     )"""
 
-TRIS_CTE = """
+UND_CTE = """
+    und AS (
+      SELECT u AS src, v AS dst FROM edges
+      UNION ALL SELECT v, u FROM edges
+    )"""
+
+DEG_CTE = """
+    deg AS (
+      SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
+      FROM und GROUP BY 1
+    )"""
+
+WEDGE_CTE = """
+    wedge AS (
+      SELECT w1.dst AS a, w2.dst AS b, w1.src AS z
+      FROM und w1 JOIN und w2 ON w1.src = w2.src AND w1.dst < w2.dst
+    )"""
+
+TCOUNT_CTES = """
     tris AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
       FROM edges e1
       JOIN edges e2 ON e1.v = e2.u
       JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
+    ),
+    tcount AS (
+      SELECT node, COUNT(*) AS n_triangles FROM (
+        SELECT a AS node FROM tris
+        UNION ALL SELECT b FROM tris
+        UNION ALL SELECT c FROM tris
+      ) GROUP BY node
     )"""
+
+
+def unrolled_ctes(prelude: str, step: str, rounds: int) -> str:
+    """``prelude``, then ``rounds`` copies of the per-round CTEs
+    ``step``, where ``{r}`` names the round read and ``{r1}`` the round
+    written. A fixed-round iteration is unrolled because DuckDB allows
+    no aggregation in a recursive CTE's recursive term."""
+    return ",".join(
+        [prelude] + [step.format(r=r, r1=r + 1) for r in range(rounds)]
+    )
 
 
 def capped_order_sets(
     lineitem: DataFrame, cap: int = MAX_ORDER_PARTS
 ) -> DataFrame:
     """(o, ps) with ps = the SORTED distinct part set of order o, hub
-    orders (> cap distinct parts) dropped — the ONE aggregation the
-    graph's base projection needs. One groupBy(o) exchange replaces the
-    previous distinct-(o,p) exchange PLUS count-over-o window exchange
-    + sort (guide §2.4: two shuffles keyed compatibly share one):
+    orders (> cap distinct parts) dropped. One groupBy(o) exchange:
     collect_set dedups parts per order AND yields the hub degree as
     size(ps) in the same pass. The transient set for a hub order is
     collected before the cap filter drops it, bounded by the order's
@@ -96,48 +143,23 @@ def coorder_strengths_from_sets(
 ) -> DataFrame:
     """(u, v, strength) with u < v from a capped_order_sets frame: each
     order's C(k,2) ordered pairs are generated IN-ROW from the sorted
-    part set (nested array transform over suffix slices — no self-join,
-    guide §3.3: the previous shape joined the exploded projection with
-    itself on o, re-shuffling both branches and recomputing the
-    upstream twice), then one groupBy(u, v) counts co-orders. k <= cap
-    bounds the per-row expansion exactly as it bounded the join."""
+    part set (nested array transform over suffix slices, no self-join),
+    then one groupBy(u, v) counts co-orders. k <= cap bounds the per-row
+    expansion."""
     pair_structs = F.expr(
         "flatten(transform(ps, (x, i) -> "
         "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
     )
-    # Round-robin spread BEFORE the C(k,2) expansion (the
-    # spread_verify_pairs pattern): the sets rows are bytes-TINY but
-    # each expands k²/2-fold and pays the groupBy(u,v) partial
-    # aggregation, so AQE's byte-based coalescing packs the whole
-    # expansion onto a handful of tasks (measured 4 tasks x ~0.4 s at
-    # sf0.1 while 28 cores idled). AQE never coalesces a user
-    # repartition; the extra exchange moves only the |orders|-bounded
-    # array rows — always the small side of the expansion.
-    from disco_spark.session import default_parallelism
-
+    # Round-robin spread BEFORE the C(k,2) expansion: the sets rows are
+    # bytes-TINY but each expands k²/2-fold and pays the groupBy(u,v)
+    # partial aggregation, so AQE's byte-based coalescing would pack the
+    # whole expansion onto a handful of tasks. AQE never coalesces a
+    # user repartition; the extra exchange moves only the
+    # |orders|-bounded array rows — always the small side.
     return (
         sets.repartition(default_parallelism(sets.sparkSession))
         .select(F.explode(pair_structs).alias("e"))
         .select("e.u", "e.v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("strength"))
-        .filter(F.col("strength") >= min_strength)
-    )
-
-
-def coorder_strengths(
-    capped: DataFrame, min_strength: int = MIN_COORDERS
-) -> DataFrame:
-    """(u, v, strength) with u < v: part pairs co-ordered >=
-    min_strength times in a capped (o, p) projection. Kept for callers
-    holding the exploded shape; the sets path
-    (coorder_strengths_from_sets) avoids the self-join when the caller
-    starts from lineitem."""
-    a = capped.select("o", F.col("p").alias("u"))
-    b = capped.select("o", F.col("p").alias("v"))
-    return (
-        a.join(b, "o")
-        .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("strength"))
         .filter(F.col("strength") >= min_strength)
@@ -150,14 +172,45 @@ def coorder_edges(
     min_strength: int = MIN_COORDERS,
 ) -> DataFrame:
     """(u, v) with u < v: part pairs co-ordered >= min_strength times.
-
-    Physical shape (guide §2.4): lineitem scan → ONE groupBy(o)
-    exchange (set-collect) → in-row pair generation → ONE groupBy(u, v)
-    exchange. The previous shape (distinct + hub window + self-join on
-    o) paid ~5 exchanges and computed the capped projection twice."""
+    Lineitem scan → ONE groupBy(o) exchange (set-collect) → in-row pair
+    generation → ONE groupBy(u, v) exchange."""
     return coorder_strengths_from_sets(
         capped_order_sets(lineitem, cap), min_strength
     ).select("u", "v")
+
+
+def _shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-order edge list of ``sf_dir``, persisted (released at the
+    next registered query): for the queries that read it more than once
+    and pay less for the cache than for re-running the pair count."""
+    return lazy_persist(coorder_edges(load_tables(spark, sf_dir)["lineitem"]))
+
+
+def _both_orientations(edges: DataFrame) -> DataFrame:
+    """(src, dst) with BOTH orientations of every (u, v) edge, emitted
+    in-row (explode of a 2-element struct array), so the edge-builder
+    subtree is planned and run once."""
+    both = F.array(
+        F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+        F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+    )
+    return edges.select(F.explode(both).alias("_e")).select(
+        "_e.src", "_e.dst"
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d): each node's row count in the adjacency (src, dst)."""
+    return und.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("d")
+    )
+
+
+def _wedges(und: DataFrame) -> DataFrame:
+    """(z, a, b): every pair a < b of neighbours of a node z."""
+    w1 = und.select(F.col("src").alias("z"), F.col("dst").alias("a"))
+    w2 = und.select(F.col("src").alias("z"), F.col("dst").alias("b"))
+    return w1.join(w2, "z").filter(F.col("a") < F.col("b"))
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -177,74 +230,39 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH {EDGES_CTES},{TRIS_CTE},
-    nodes AS (
-      SELECT a AS node FROM tris
-      UNION ALL SELECT b FROM tris
-      UNION ALL SELECT c FROM tris
-    )
-    SELECT node, COUNT(*) AS n_triangles FROM nodes GROUP BY node
+    WITH {EDGES_CTES},{TCOUNT_CTES}
+    SELECT node, n_triangles FROM tcount
     """,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from disco_spark.session import lazy_persist
-
-    t = load_tables(spark, sf_dir)
-    # the edge list feeds three self-join references; persist it once
-    # (released at the next registered query, like every deferred persist)
-    return triangle_counts(lazy_persist(coorder_edges(t["lineitem"])))
+    return triangle_counts(_shared_edges(spark, sf_dir))
 
 
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
-    WITH {EDGES_CTES},{TRIS_CTE},
-    tcount AS (
-      SELECT node, COUNT(*) AS n_triangles FROM (
-        SELECT a AS node FROM tris
-        UNION ALL SELECT b FROM tris
-        UNION ALL SELECT c FROM tris
-      ) GROUP BY node
-    ),
-    degree AS (
-      SELECT node, COUNT(*) AS deg FROM (
-        SELECT u AS node FROM edges UNION ALL SELECT v FROM edges
-      ) GROUP BY node
-    )
-    SELECT d.node, d.deg, COALESCE(t.n_triangles, 0) AS n_triangles,
+    WITH {EDGES_CTES},{UND_CTE},{DEG_CTE},{TCOUNT_CTES}
+    SELECT d.node, d.d AS deg, COALESCE(t.n_triangles, 0) AS n_triangles,
            ROUND(CAST(2.0 * COALESCE(t.n_triangles, 0) AS DOUBLE)
-                 / (d.deg * (d.deg - 1)), 6) AS clustering_coeff
-    FROM degree d LEFT JOIN tcount t USING (node)
-    WHERE d.deg >= 2
+                 / (d.d * (d.d - 1)), 6) AS clustering_coeff
+    FROM deg d LEFT JOIN tcount t USING (node)
+    WHERE d.d >= 2
     """,
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node: 2*triangles / (deg*(deg-1))
     for nodes with degree >= 2 — the community-density audit the
-    triangle kernel exists to feed. Degrees from one explode+groupBy of
-    the edge list; triangles from triangle_counts; one left join."""
-    from disco_spark.session import lazy_persist
-
-    t = load_tables(spark, sf_dir)
-    # five references to the edge plan (3 in the triangle join, 2 in the
-    # degree union): one persisted materialization serves all
-    edges = lazy_persist(coorder_edges(t["lineitem"]))
-    tri = triangle_counts(edges)
-    degree = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= 2)
-    )
-    return degree.join(tri, "node", "left").select(
+    triangle kernel exists to feed. Degrees and triangles from the
+    harness; one left join."""
+    edges = _shared_edges(spark, sf_dir)
+    deg = _degrees(_both_orientations(edges)).filter(F.col("d") >= 2)
+    n_tri = F.coalesce(F.col("n_triangles"), F.lit(0))
+    return deg.join(triangle_counts(edges), "node", "left").select(
         "node",
-        "deg",
-        F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
+        F.col("d").alias("deg"),
+        n_tri.alias("n_triangles"),
         F.round(
-            (2.0 * F.coalesce(F.col("n_triangles"), F.lit(0)).cast("double"))
-            / (F.col("deg") * (F.col("deg") - 1)),
-            6,
+            (2.0 * n_tri.cast("double")) / (F.col("d") * (F.col("d") - 1)), 6
         ).alias("clustering_coeff"),
     )
 
@@ -260,45 +278,30 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "market_basket_lift",
     oracle=f"""
     WITH {EDGES_CTES},
-    strengths AS (
-      SELECT a.p AS u, b.p AS v, COUNT(*) AS strength
-      FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p
-      GROUP BY 1, 2
-    ),
-    kept AS (
-      SELECT * FROM strengths WHERE strength >= {MIN_COORDERS}
-    ),
     icnt AS (SELECT p, COUNT(*) AS c FROM capped GROUP BY 1),
     n AS (SELECT COUNT(DISTINCT o) AS n_orders FROM capped)
     SELECT k.u, k.v, k.strength,
            ROUND(CAST(k.strength AS DOUBLE) * n.n_orders
                  / (cu.c * CAST(cv.c AS DOUBLE)), 6) AS lift
-    FROM kept k
+    FROM strengths k
     JOIN icnt cu ON cu.p = k.u
     JOIN icnt cv ON cv.p = k.v
     CROSS JOIN n
+    WHERE k.strength >= {MIN_COORDERS}
     """,
 )
 def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v, strength, lift) for every co-order edge. Lift derives
-    from three aggregates of the SAME capped (order, part) projection
-    the edges use — per-item counts join back on the part key (hash
-    joins on dimension-sized tables), the order total rides in as a
-    broadcast 1-row aggregate. Integer counts ratio'd in double =
+    from three aggregates of the SAME capped order sets the edges use —
+    per-item counts join back on the part key (hash joins on
+    dimension-sized tables), the order total rides in as a broadcast
+    1-row aggregate (one row per surviving order, so COUNT(*) is the
+    distinct order count). Integer counts ratio'd in double =
     engine-deterministic at 6 decimals."""
-    from disco_spark.session import lazy_persist
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    # one persisted set-collect serves pair generation, item counts and
-    # the order total: the previous shape persisted the exploded (o, p)
-    # projection and self-joined it on o (guide §2.4/§3.3 — the
-    # coorder_edges rewrite, shared here)
-    sets = lazy_persist(capped_order_sets(li))
+    sets = capped_order_sets(load_tables(spark, sf_dir)["lineitem"])
     kept = coorder_strengths_from_sets(sets)
     capped = sets.select("o", F.explode("ps").alias("p"))
     icnt = capped.groupBy("p").agg(F.count(F.lit(1)).alias("c"))
-    # sets holds one row per surviving order, so COUNT(*) == the
-    # previous countDistinct(o) — same value, no distinct aggregation
     n = F.broadcast(sets.agg(F.count(F.lit(1)).alias("n_orders")))
     cu = icnt.select(F.col("p").alias("u"), F.col("c").alias("cu"))
     cv = icnt.select(F.col("p").alias("v"), F.col("c").alias("cv"))
@@ -323,94 +326,41 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact degree histogram of the co-order graph: (degree, n_nodes)
     # over the same capped/thresholded edge set as the triangle kernel
     oracle=f"""
-    WITH {EDGES_CTES},
-    deg AS (
-      SELECT node, COUNT(*) AS degree FROM (
-        SELECT u AS node FROM edges
-        UNION ALL
-        SELECT v AS node FROM edges
-      ) GROUP BY node
-    )
-    SELECT degree, COUNT(*) AS n_nodes
-    FROM deg GROUP BY degree
+    WITH {EDGES_CTES},{UND_CTE},{DEG_CTE}
+    SELECT d AS degree, COUNT(*) AS n_nodes
+    FROM deg GROUP BY 1
     """,
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the part co-order graph — the first
     thing anyone plots before running graph kernels (hub spotting,
     power-law eyeballing, join-skew forecasting for the triangle
-    pass). Pure integers: per-node degree from one union+groupBy over
-    the shared edge set, folded to (degree, n_nodes).
+    pass). Pure integers: the harness's per-node degree folded to
+    (degree, n_nodes).
 
     Scale: two aggregates whose shuffles carry (node) then (degree)
     keys; the edge set is already hub-capped and
-    strength-thresholded (EDGES_CTES), so no degree can exceed what
-    the triangle kernel itself would see."""
-    li = load_tables(spark, sf_dir)["lineitem"]
-    # endpoint stream emitted in-row (explode) — the two-arm unionAll
-    # embedded and executed the edge-builder subtree twice
-    nodes = coorder_edges(li).select(
-        F.explode(F.array("u", "v")).alias("node")
+    strength-thresholded, so no degree can exceed what the triangle
+    kernel itself would see."""
+    edges = coorder_edges(load_tables(spark, sf_dir)["lineitem"])
+    deg = _degrees(_both_orientations(edges))
+    return deg.groupBy(F.col("d").alias("degree")).agg(
+        F.count(F.lit(1)).alias("n_nodes")
     )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
 # ---------------------------------------------------------------------------
 # Link prediction + degree mixing on the same shared co-order graph:
 # resource-allocation scores for non-adjacent pairs, and the degree
-# assortativity coefficient. Both compose from EDGES_CTES so the graph
-# definition cannot drift from the triangle/clustering kernels.
+# assortativity coefficient.
 # ---------------------------------------------------------------------------
 RA_TOPK = 25
-
-# shared undirected adjacency + exact integer degrees on top of edges
-_UND_DEG_CTES = """
-    und AS (
-      SELECT u AS src, v AS dst FROM edges
-      UNION ALL SELECT v, u FROM edges
-    ),
-    deg AS (
-      SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
-      FROM und GROUP BY 1
-    )"""
-
-
-def _both_orientations(edges: DataFrame) -> DataFrame:
-    """(src, dst) with BOTH orientations of every (u, v) edge, emitted
-    IN-ROW (explode of a 2-element struct array) instead of a
-    two-arm unionAll. The union shape embeds the edge-builder subtree
-    twice, and measured on kcore the arms really execute twice
-    (~10-12 core-s each at sf0.1) — exchange reuse does not collapse
-    them under the persisted-union materialization. One explode, one
-    subtree (guide §2.4)."""
-    both = F.array(
-        F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-        F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-    )
-    return edges.select(F.explode(both).alias("_e")).select(
-        "_e.src", "_e.dst"
-    )
-
-
-def _und_deg(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(undirected adjacency (src, dst), per-node degrees (node, d)) —
-    the Spark mirror of _UND_DEG_CTES."""
-    und = _both_orientations(edges)
-    deg = und.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    )
-    return und, deg
 
 
 @query(
     "graph_ra_link_prediction",
     oracle=f"""
-    WITH {EDGES_CTES},{_UND_DEG_CTES},
-    wedge AS (
-      SELECT w1.dst AS a, w2.dst AS b, w1.src AS z
-      FROM und w1 JOIN und w2 ON w1.src = w2.src AND w1.dst < w2.dst
-    ),
+    WITH {EDGES_CTES},{UND_CTE},{DEG_CTE},{WEDGE_CTE},
     cand AS (
       SELECT w.a, w.b,
              CAST(COUNT(*) AS BIGINT) AS n_common,
@@ -440,22 +390,16 @@ def graph_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, so both engines produce identical scores and
     identical ranking (ties broken on (a, b)).
 
-    Scale: wedge generation is the same middle-vertex join the
-    triangle kernel uses, on the same hub-capped strength-thresholded
-    edge set (sum of deg^2 bounded by the caps); candidate scoring is
-    one groupBy on the pair key; the anti-join removes existing edges
-    before the bounded top-k."""
-    from disco_spark.session import lazy_persist
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    e = lazy_persist(coorder_edges(li))
-    und, deg = _und_deg(e)
-    w1 = und.select(F.col("src").alias("z"), F.col("dst").alias("a"))
-    w2 = und.select(F.col("src").alias("z"), F.col("dst").alias("b"))
-    wedges = w1.join(w2, "z").filter(F.col("a") < F.col("b"))
+    Scale: the harness's wedge join on the hub-capped
+    strength-thresholded edge set (sum of deg^2 bounded by the caps);
+    candidate scoring is one groupBy on the pair key; the anti-join
+    removes existing edges before the bounded top-k."""
+    e = _shared_edges(spark, sf_dir)
+    und = _both_orientations(e)
     term = F.round(F.lit(1.0) / F.col("d"), 12).cast("decimal(28,12)")
     cand = (
-        wedges.join(deg, F.col("node") == F.col("z"))
+        _wedges(und)
+        .join(_degrees(und), F.col("node") == F.col("z"))
         .groupBy("a", "b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_common"),
@@ -482,7 +426,7 @@ def graph_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_assortativity_degree",
     oracle=f"""
-    WITH {EDGES_CTES},{_UND_DEG_CTES},
+    WITH {EDGES_CTES},{UND_CTE},{DEG_CTE},
     pairs AS (
       SELECT d1.d AS du, d2.d AS dv
       FROM und
@@ -527,11 +471,9 @@ def graph_assortativity_degree(
     Scale: degrees from one groupBy over the adjacency, two hash
     joins to attach endpoint degrees, one constant-size moment
     aggregate. Nothing wider than the edge list ever shuffles."""
-    from disco_spark.session import lazy_persist
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    e = lazy_persist(coorder_edges(li))
-    und, deg = _und_deg(e)
+    e = coorder_edges(load_tables(spark, sf_dir)["lineitem"])
+    und = _both_orientations(e)
+    deg = _degrees(und)
     d1 = deg.select(F.col("node").alias("_n1"), F.col("d").alias("du"))
     d2 = deg.select(F.col("node").alias("_n2"), F.col("d").alias("dv"))
     pairs = und.join(d1, F.col("_n1") == F.col("src")).join(
@@ -571,31 +513,24 @@ def graph_assortativity_degree(
 KCORE_K = 2
 KCORE_ROUNDS = 3
 
-
-def _kcore_cte_chain() -> str:
-    parts = [
-        """
-    und0 AS (
-      SELECT u AS src, v AS dst FROM edges
-      UNION ALL SELECT v, u FROM edges
+_KCORE_ROUND = f"""
+    deg{{r}} AS (SELECT src, COUNT(*) AS d FROM und{{r}} GROUP BY 1),
+    keep{{r}} AS (SELECT src AS node FROM deg{{r}} WHERE d >= {KCORE_K}),
+    und{{r1}} AS (
+      SELECT e.src, e.dst FROM und{{r}} e
+      JOIN keep{{r}} a ON a.node = e.src
+      JOIN keep{{r}} b ON b.node = e.dst
     )"""
-    ]
-    for r in range(KCORE_ROUNDS):
-        parts.append(f"""
-    deg{r} AS (SELECT src, COUNT(*) AS d FROM und{r} GROUP BY 1),
-    keep{r} AS (SELECT src AS node FROM deg{r} WHERE d >= {KCORE_K}),
-    und{r + 1} AS (
-      SELECT e.src, e.dst FROM und{r} e
-      JOIN keep{r} a ON a.node = e.src
-      JOIN keep{r} b ON b.node = e.dst
-    )""")
-    return ",".join(parts)
 
 
 @query(
     "graph_kcore_membership",
     oracle=f"""
-    WITH {EDGES_CTES},{_kcore_cte_chain()}
+    WITH {EDGES_CTES},{unrolled_ctes(
+        UND_CTE + ", und0 AS (SELECT src, dst FROM und)",
+        _KCORE_ROUND,
+        KCORE_ROUNDS,
+    )}
     SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
     FROM und{KCORE_ROUNDS} GROUP BY 1 ORDER BY node
     """,
@@ -609,21 +544,13 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded rounds keep the oracle replayable; convergence on this
     graph is pytest-asserted, and a larger deployment raises
     KCORE_ROUNDS or re-runs until a round removes nothing)."""
-    from disco_spark.session import lazy_persist
-
     li = load_tables(spark, sf_dir)["lineitem"]
-    # in-row orientation doubling: the old two-arm unionAll executed
-    # the pair-generation subtree twice (measured A/B: median 3.90 ->
-    # 3.22 s, cold rep 9.2 -> 3.8 s at sf0.1)
     und = _both_orientations(coorder_edges(li))
     for _ in range(KCORE_ROUNDS):
+        # each round's adjacency feeds its degree count and its own
+        # peel; the cache keeps round r from re-running rounds < r
         und = lazy_persist(und)
-        keep = (
-            und.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= KCORE_K)
-            .select(F.col("src").alias("node"))
-        )
+        keep = _degrees(und).filter(F.col("d") >= KCORE_K)
         ka = keep.select(F.col("node").alias("_ka"))
         kb = keep.select(F.col("node").alias("_kb"))
         und = (
@@ -632,8 +559,8 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst")
         )
     return (
-        und.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+        _degrees(und)
+        .select("node", F.col("d").alias("core_degree"))
         .orderBy("node")
     )
 
@@ -649,11 +576,8 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_local_bridges",
     oracle=f"""
-    WITH {EDGES_CTES},{_UND_DEG_CTES},
-    closed AS (
-      SELECT DISTINCT w1.dst AS a, w2.dst AS b
-      FROM und w1 JOIN und w2 ON w1.src = w2.src AND w1.dst < w2.dst
-    ),
+    WITH {EDGES_CTES},{UND_CTE},{DEG_CTE},{WEDGE_CTE},
+    closed AS (SELECT DISTINCT a, b FROM wedge),
     bridges AS (
       SELECT e.u, e.v FROM edges e
       LEFT JOIN closed c ON c.a = e.u AND c.b = e.v
@@ -670,25 +594,16 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edges with zero common neighbors (local bridges, span > 2),
     with both endpoint degrees: the exact set of co-order links whose
     loss locally disconnects their endpoints. Pure set algebra on the
-    shared harness — wedge-closed pairs (the triangle kernel's
-    middle-vertex join) anti-joined against the edge list.
+    shared harness — wedge-closed pairs anti-joined against the edge
+    list.
 
     Plan: one wedge join bounded by the hub-capped degree profile,
     one anti join, two degree lookups. Same scalability posture as
     graph_triangle_count."""
-    from disco_spark.session import lazy_persist
-
-    li = load_tables(spark, sf_dir)["lineitem"]
-    e = lazy_persist(coorder_edges(li))
-    und, deg = _und_deg(e)
-    w1 = und.select(F.col("src").alias("z"), F.col("dst").alias("a"))
-    w2 = und.select(F.col("src").alias("z"), F.col("dst").alias("b"))
-    closed = (
-        w1.join(w2, "z")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    e = coorder_edges(load_tables(spark, sf_dir)["lineitem"])
+    und = _both_orientations(e)
+    deg = _degrees(und)
+    closed = _wedges(und).select("a", "b").distinct()
     bridges = e.join(
         closed,
         (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),

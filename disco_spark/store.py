@@ -28,8 +28,9 @@ from typing import Callable
 ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "benchdata"
 )
-# a blob no tag names (a crashed writer's) is reclaimed once it is this
-# old; a live writer's blob is younger than any write takes
+# a blob no tag names (a crashed writer's, or one a publish dropped) is
+# reclaimed once it is this old: a live writer's blob is younger than
+# any write takes, and a dropped one outlives reads planned on its tag
 STALE_S = 3600
 TAG = "manifest.json"
 LOCK = ".lock"
@@ -97,7 +98,7 @@ def put(path: str, group: str, write: Callable[[str], None]) -> str:
     directly needs ``mode("overwrite")``. If ``write`` raises, the blob
     is removed."""
     parent = os.path.join(path, group)
-    while True:  # a concurrent publish removes a group dir it emptied
+    while True:  # a concurrent publish reclaims a stale group dir
         os.makedirs(parent, exist_ok=True)
         with contextlib.suppress(FileNotFoundError):
             d = tempfile.mkdtemp(prefix="blob-", dir=parent)
@@ -116,9 +117,10 @@ def publish(path: str, update: Callable[[dict], dict]) -> dict:
 
     Under a lock on the store, so each concurrent writer updates the tag
     the previous one published: write the new tag to a temp file and
-    ``os.replace`` it in. Then remove the blobs only the old tag named
-    (and group directories left empty), and blobs no tag names once
-    they are older than ``STALE_S``."""
+    ``os.replace`` it in. The blobs only the old tag named are not
+    removed, since a reader may have planned on the old tag: their age
+    clock restarts (with their group directories'), and they go with
+    every other blob no tag names once older than ``STALE_S``."""
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, LOCK), "a") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
@@ -134,8 +136,10 @@ def publish(path: str, update: Callable[[dict], dict]) -> dict:
             raise
         keep = _names(new["blobs"])
         for name in _names(old.get("blobs", {})) - keep:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-            _prune(path, os.path.dirname(name))
+            while name:  # _reclaim ages the top entry it does not keep
+                with contextlib.suppress(FileNotFoundError):
+                    os.utime(os.path.join(path, name))
+                name = os.path.dirname(name)
         _reclaim(path, keep)
     return new
 
@@ -153,7 +157,8 @@ def _prune(path: str, rel: str) -> None:
 def _reclaim(path: str, keep: set[str], rel: str = "") -> None:
     """Remove each entry under ``path/rel`` that neither is, holds nor
     lies inside a name in ``keep`` once it is older than ``STALE_S``: a
-    crashed writer's blob or temp tag, or an older store layout."""
+    blob a publish dropped, a crashed writer's blob or temp tag, or an
+    older store layout."""
     for entry in os.scandir(os.path.join(path, rel)):
         name = os.path.join(rel, entry.name)
         if name in keep or name in (TAG, LOCK):

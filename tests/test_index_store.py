@@ -13,6 +13,7 @@ from disco_spark.similarity.index_store import ensure_index
 from disco_spark.testing import compare_query
 
 from tests.conftest import SF_SMOKE
+from tests.test_store import _backdate
 
 registry.load_all()
 
@@ -86,7 +87,12 @@ def test_rebuild_drops_stale_delta(spark, tmp_path):
     codebooks (code-review finding: rebuild orphaned codes_delta)."""
     import os
 
-    from disco_spark.similarity.index_store import ann_index_add, ann_index_save
+    from disco_spark import store
+    from disco_spark.similarity.index_store import (
+        ann_index_add,
+        ann_index_load_all_codes,
+        ann_index_save,
+    )
 
     e = load_tables(spark, SF_SMOKE)["embeddings"]
     path = str(tmp_path / "idx")
@@ -94,6 +100,12 @@ def test_rebuild_drops_stale_delta(spark, tmp_path):
     ann_index_add(e.filter("vec_id % 2 = 1"), path)
     assert os.path.isdir(os.path.join(path, "codes_delta"))
     ann_index_save(e.filter("vec_id % 2 = 0"), path, subset="even")
+    assert "codes_delta" not in store.blobs(path)
+    assert _ids(ann_index_load_all_codes(spark, path)) == _ids(
+        e.filter("vec_id % 2 = 0")
+    )
+    _backdate(path)
+    store.publish(path, lambda t: t)
     assert not os.path.isdir(os.path.join(path, "codes_delta"))
 
 
@@ -240,12 +252,14 @@ def test_priority_rejects_duplicates_and_unknown():
 def test_compact_preserves_serve_and_drops_layers(spark, tmp_path):
     """Compaction must be invisible to search: top-k from the layered
     store (base + delta - tombstones) equals top-k from the folded base,
-    and the layer directories are gone afterwards."""
+    and the tag names no layer afterwards; their directories go once
+    reclaimed."""
     import os
 
     import numpy as np
     from pyspark.sql import functions as F
 
+    from disco_spark import store
     from disco_spark.similarity.index_store import (
         ann_index_add,
         ann_index_compact,
@@ -282,6 +296,9 @@ def test_compact_preserves_serve_and_drops_layers(spark, tmp_path):
     ann_index_compact(spark, path)
     _, folded_codes, _ = ann_index_load(spark, path)
     assert serve(folded_codes) == layered
+    assert not {"codes_delta", "tombstones"} & set(store.blobs(path))
+    _backdate(path)
+    store.publish(path, lambda t: t)
     assert not os.path.isdir(os.path.join(path, "codes_delta"))
     assert not os.path.isdir(os.path.join(path, "tombstones"))
     # deleted ids are physically gone from the folded base

@@ -1,8 +1,9 @@
 """Repository hygiene: no tracked script reaches for the retired
 headline harness (bench.py) or its rehearsal tooling, every script left
 in tools/ still imports, the classic MapReduce layer has no executor of
-its own, and only disco_spark/store.py moves files into place or writes
-a manifest. Runs no Spark."""
+its own, only disco_spark/store.py moves files into place or writes a
+manifest, and the graph modules orient edges in one place. Runs no
+Spark."""
 
 from __future__ import annotations
 
@@ -131,3 +132,46 @@ def test_store_write_guard_sees_what_it_forbids():
         "open(os.path.join(p, 'manifest.json'))\nopen(x, 'w')\n"
     )
     assert _store_writes(ast.parse(src)) == [1, 2, 3]
+
+
+GRAPH_MODULES = ("triangles.py", "khop.py", "communities.py", "pagerank.py")
+# an edge (u, v) turned around: in Spark, column v renamed to the source
+# side; in oracle SQL, a UNION ALL arm selecting v before u
+SPARK_REVERSE = re.compile(r'F\.col\("v"\)\.alias\("(?:u|src)"\)')
+SQL_REVERSE = re.compile(
+    r"UNION\s+ALL\s+SELECT\s+v(?:\s+AS\s+\w+)?\s*,\s*u\b", re.IGNORECASE
+)
+
+
+def _orientations(src: str) -> tuple[int, int, int]:
+    """(Spark reversals, oracle reversals, unionByName calls) in ``src``."""
+    return (
+        len(SPARK_REVERSE.findall(src)),
+        len(SQL_REVERSE.findall(src)),
+        src.count("unionByName"),
+    )
+
+
+def test_graph_edges_are_oriented_in_one_place():
+    """The graph modules orient co-order edges in one Spark function
+    (triangles._both_orientations) and one oracle CTE
+    (triangles.UND_CTE); every other query composes those two."""
+    sim = os.path.join(ROOT, "disco_spark", "similarity")
+    found = {}
+    for f in GRAPH_MODULES:
+        with open(os.path.join(sim, f), encoding="utf-8") as fh:
+            found[f] = _orientations(fh.read())
+    want = {f: (0, 0, 0) for f in GRAPH_MODULES}
+    want["triangles.py"] = (1, 1, 0)
+    assert found == want
+
+
+def test_orientation_guard_sees_what_it_forbids():
+    src = (
+        'edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))\n'
+        'F.struct(F.col("v").alias("src"), F.col("u").alias("dst"))\n'
+        "SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges\n"
+        "SELECT u AS src, v AS dst FROM edges\n  UNION ALL SELECT v, u FROM edges\n"
+        "SELECT a AS node FROM tris UNION ALL SELECT b FROM tris\n"
+    )
+    assert _orientations(src) == (2, 2, 1)

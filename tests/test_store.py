@@ -1,6 +1,6 @@
 """The shared persisted-store protocol (disco_spark/store.py): immutable
 blobs behind one tag, one tag check (``ensure``) and one publish.
-Plain-Python write functions, no Spark."""
+Plain-Python write functions; only the reader test starts Spark."""
 
 from __future__ import annotations
 
@@ -95,7 +95,10 @@ def test_concurrent_cold_builds_serve_one_complete_store(tmp_path):
     assert tag == WANT
     assert [(role, rel) for role, rel, _ in files] == [("data", p) for p in PARTS]
     assert len({text for _, _, text in files}) == 1
-    # the builder that published first had its blob dropped by the second
+    # the builder that published first had its blob dropped by the
+    # second; it is reclaimed once older than STALE_S
+    _backdate(path)
+    store.publish(path, lambda t: t)
     got = _contents(path)
     assert len([f for f in got if f.endswith("part-0")]) == 1
     assert os.listdir(tmp_path / "kind") == ["sf"]
@@ -122,7 +125,7 @@ def _fail_at(step: str, monkeypatch) -> bool:
     target = {
         "tag_write": (store.json, "dump"),
         "replace": (store.os, "replace"),
-        "drop": (store.shutil, "rmtree"),
+        "drop": (store.os, "utime"),
     }.get(step)
     if target is not None:
         monkeypatch.setattr(*target, boom)
@@ -135,10 +138,11 @@ def test_fault_at_each_step_serves_old_or_new_generation(
     tmp_path, monkeypatch, op, step
 ):
     """A build or a delta publish that raises at any step (blob write,
-    temp tag write, ``os.replace``, dropped-blob removal) leaves the
-    store serving exactly the old generation or exactly the new one:
-    the tag parses, every blob it names is whole, no temp tag is left,
-    and ``ensure`` serves it without a rebuild. A retry then lands."""
+    temp tag write, ``os.replace``, restarting a dropped blob's age
+    clock) leaves the store serving exactly the old generation or
+    exactly the new one: the tag parses, every blob it names is whole,
+    no temp tag is left, and ``ensure`` serves it without a rebuild. A
+    retry then lands."""
     path = str(tmp_path / "sf")
     store.build(path, WANT, _writer("old"))
     _add(path, "1", "d-old")
@@ -195,16 +199,49 @@ def test_concurrent_publishes_all_land(tmp_path):
     assert {text for _, _, text in files} == {"base"} | {f"d{i}" for i in range(16)}
 
 
+def _backdate(path: str) -> None:
+    """Age every entry under ``path`` past ``STALE_S``."""
+    old = time.time() - store.STALE_S - 60
+    for d, dirs, files in os.walk(path):
+        for name in dirs + files:
+            os.utime(os.path.join(d, name), (old, old))
+
+
 def test_rebuild_drops_batches_and_empty_groups(tmp_path):
-    """A build's tag names only its own blobs; what the old tag named is
-    removed, and so are the group directories that leaves empty."""
+    """A build's tag names only its own blobs, and the store serves
+    without the rest. What the old tag named stays for readers planned
+    on it until it is older than ``STALE_S``; then the next publish
+    removes it, and the group directories that leaves empty."""
     path = str(tmp_path / "sf")
     store.build(path, WANT, _writer("old"))
     _add(path, "1", "d1")
     store.build(path, WANT, _writer("new"))
+    assert list(store.blobs(path)) == ["data"]
+    assert {text for _, _, text in _served(path)[1]} == {"new"}
+    assert store.ensure(path, WANT, _writer("x")) is False
+    store.publish(path, lambda t: t)
+    assert sorted(os.listdir(path)) == [store.LOCK, "build", "delta", store.TAG]
+    _backdate(path)
+    store.publish(path, lambda t: t)
     assert sorted(os.listdir(path)) == [store.LOCK, "build", store.TAG]
     assert len(os.listdir(os.path.join(path, "build"))) == 1
     assert {text for _, _, text in _served(path)[1]} == {"new"}
+
+
+def test_reader_planned_on_old_tag_outlives_rebuild(spark, tmp_path):
+    """A DataFrame planned on one tag still reads its blobs after a
+    rebuild publishes a tag that drops them."""
+
+    def write(n: int):
+        return lambda d: spark.range(n).write.parquet(os.path.join(d, "data"))
+
+    path = str(tmp_path / "sf")
+    store.build(path, WANT, write(3))
+    old = store.read(spark, path, store.blobs(path)["data"])
+    store.build(path, WANT2, write(5))
+    assert old.count() == 3
+    assert sorted(r.id for r in old.collect()) == [0, 1, 2]
+    assert store.read(spark, path, store.blobs(path)["data"]).count() == 5
 
 
 def test_stale_scratch_is_reclaimed_young_kept(tmp_path):
