@@ -37,29 +37,14 @@ from pyspark.sql import functions as F
 
 from disco_spark.registry import query
 from disco_spark.session import fan_out, lazy_persist, load_tables
-from disco_spark.textops.analysis import with_toks
-
-_TOKS_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
-
-
-def _toks() -> Column:
-    # single parsed expression: construction is driver-side fixed cost
-    # on every invocation (~2.6 ms per py4j call — the r15 construction
-    # tax); same Catalyst tree as the F.filter/F.split composition
-    return F.expr("filter(split(text, '\\\\s+'), x -> x != '')")
-
-
-def _shingles_sql(k: int, toks: str = "toks") -> str:
-    """SQL text of the k-token shingle transform over a `toks` array
-    column — the ONE shared shingle expression (shingle_df,
-    minhash_from_toks, shingle_sets), parsed in a single py4j call.
-    element_at is 1-based, exactly like the Column-API version it
-    replaces."""
-    cat = ", ".join(f"element_at({toks}, i + {j + 1})" for j in range(k))
-    return (
-        f"transform(sequence(0, size({toks}) - {k}), "
-        f"i -> concat_ws(' ', {cat}))"
-    )
+from disco_spark.textops.analysis import (
+    _TOKS_SQL,
+    _ngrams_sql,
+    _normalized_sql,
+    ngrams_expr,
+    normalized,
+    with_toks,
+)
 
 
 def _mh_sql(src: str, i: int) -> str:
@@ -73,8 +58,8 @@ def _mh_sql(src: str, i: int) -> str:
 # --------------------------------------------------------------------------
 @query(
     "dedup_exact",
-    oracle="""
-    SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash,
+    oracle=f"""
+    SELECT md5({_normalized_sql("text")}) AS content_hash,
            COUNT(*) AS n_docs,
            MIN(doc_id) AS rep_doc_id
     FROM documents
@@ -86,12 +71,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return (
         t["documents"]
-        .select(
-            F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias(
-                "content_hash"
-            ),
-            "doc_id",
-        )
+        .select(F.md5(normalized(F.col("text"))).alias("content_hash"), "doc_id")
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_doc_id"))
     )
@@ -138,9 +118,8 @@ def shingle_df(
     per shingle position (no CSE inside higher-order functions; 19x
     slower measured). If the input already carries a `toks` column it is
     reused — composition queries tokenize ONCE and share the scan."""
-    sh = _shingles_sql(k)
-    docs = _spread_docs(docs)
-    base = docs if "toks" in docs.columns else docs.withColumn("toks", _toks())
+    sh = ngrams_expr(k)
+    base = with_toks(_spread_docs(docs))
     if distinct:
         # per-doc dedup is a ROW-LOCAL property: array_distinct before
         # the explode yields exactly the rows the old global
@@ -155,14 +134,12 @@ def shingle_df(
     )
 
 
-_SHINGLES_SQL = """
+_SHINGLES_SQL = f"""
     shingles AS (
-      SELECT DISTINCT doc_id, concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i
-            FROM (SELECT doc_id, {toks} AS toks FROM documents)
-            WHERE len(toks) >= 3)
+      SELECT DISTINCT doc_id, unnest({_ngrams_sql(SHINGLE_K)}) AS shingle
+      FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents)
     )
-""".format(toks=_TOKS_SQL)
+"""
 
 
 # --------------------------------------------------------------------------
@@ -200,11 +177,10 @@ def minhash_from_toks(
     rebuild the array per hash (same hazard shingle_df documents).
     Same doc set as the shingle path: docs with fewer than k tokens
     have no shingles and no signature."""
-    docs = _spread_docs(docs)
-    base = docs if "toks" in docs.columns else docs.withColumn("toks", _toks())
     return (
-        base.where(f"size(toks) >= {k}")
-        .selectExpr("doc_id", f"{_shingles_sql(k)} AS _sh")
+        with_toks(_spread_docs(docs))
+        .where(f"size(toks) >= {k}")
+        .selectExpr("doc_id", f"{ngrams_expr(k)} AS _sh")
         .selectExpr(
             "doc_id",
             *[f"{_mh_sql('_sh', i)} AS mh{i}" for i in range(n_hashes)],
@@ -238,11 +214,10 @@ def shingle_sets(
     measured hazard); minhash over the distinct set equals minhash
     over the multiset (min ignores repeats), and the doc set matches
     shingle_df's (< k tokens ⇒ no shingles ⇒ no row)."""
-    docs = _spread_docs(docs)
-    base = docs if "toks" in docs.columns else docs.withColumn("toks", _toks())
     return (
-        base.where(f"size(toks) >= {k}")
-        .selectExpr("doc_id", f"array_distinct({_shingles_sql(k)}) AS sh_set")
+        with_toks(_spread_docs(docs))
+        .where(f"size(toks) >= {k}")
+        .selectExpr("doc_id", f"array_distinct({ngrams_expr(k)}) AS sh_set")
         .selectExpr(
             "doc_id",
             "sh_set",
@@ -1380,8 +1355,7 @@ SPAN_MIN_CHARS = 20
     "dedup_paragraph",
     oracle=f"""
     WITH spans AS (
-      SELECT doc_id,
-             trim(regexp_replace(lower(s), '\\s+', ' ', 'g')) AS span
+      SELECT doc_id, {_normalized_sql("s")} AS span
       FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '[.!?]+')) AS s
             FROM documents)
     ),
@@ -1408,10 +1382,7 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = t["documents"].select(
         "doc_id",
         F.explode(F.split(F.col("text"), r"[.!?]+")).alias("s"),
-    ).select(
-        "doc_id",
-        F.trim(F.regexp_replace(F.lower(F.col("s")), r"\s+", " ")).alias("span"),
-    )
+    ).select("doc_id", normalized(F.col("s")).alias("span"))
     return (
         spans.filter(F.length("span") >= SPAN_MIN_CHARS)
         .select("doc_id", F.md5("span").alias("span_hash"))
@@ -1428,8 +1399,7 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_paragraph_clean",
     oracle=f"""
     WITH spans AS (
-      SELECT doc_id, i AS pos,
-             trim(regexp_replace(lower(arr[i]), '\\s+', ' ', 'g')) AS span
+      SELECT doc_id, i AS pos, {_normalized_sql("arr[i]")} AS span
       FROM (SELECT doc_id, arr, unnest(generate_series(1, len(arr))) AS i
             FROM (SELECT doc_id, regexp_split_to_array(text, '[.!?]+') AS arr
                   FROM documents))
@@ -1474,10 +1444,7 @@ def dedup_paragraph_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen, where the exact join removes bloom false positives)."""
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
-    norm = F.transform(
-        F.split(F.col("text"), r"[.!?]+"),
-        lambda s: F.trim(F.regexp_replace(F.lower(s), r"\s+", " ")),
-    )
+    norm = F.transform(F.split(F.col("text"), r"[.!?]+"), normalized)
     # null text: the oracle's unnest drops such docs entirely; without
     # this filter Spark would emit them with size(NULL) = -1 span counts
     base = lazy_persist(

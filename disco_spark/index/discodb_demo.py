@@ -11,12 +11,11 @@ from pyspark.sql import functions as F
 from disco_spark.index.discodb import InvertedIndex
 from disco_spark.registry import query
 from disco_spark.session import load_tables
+from disco_spark.textops.analysis import _TOKS_SQL, with_toks
 
-_TOKS_CTE = """
+_TOKS_CTE = f"""
     WITH toks AS (
-      SELECT DISTINCT tok AS key, doc_id AS value
-      FROM (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS tok, doc_id FROM documents)
-      WHERE tok <> ''
+      SELECT DISTINCT unnest({_TOKS_SQL}) AS key, doc_id AS value FROM documents
     )
 """
 
@@ -99,8 +98,7 @@ _META_HOPS = 4
     WITH RECURSIVE pairs AS (
       SELECT DISTINCT toks[i] AS key, toks[i+1] AS value
       FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM (SELECT list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
-                  FROM documents))
+            FROM (SELECT {_TOKS_SQL} AS toks FROM documents))
     ),
     hits AS (SELECT DISTINCT value FROM pairs WHERE key = 'data'),
     reach(v, d) AS (
@@ -121,8 +119,7 @@ def discodb_metaquery_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-bounded recursive CTE. Cycles are safe on both sides (per-hop
     distinct / recursive-UNION dedup)."""
     t = load_tables(spark, sf_dir)
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != F.lit(""))
-    d = t["documents"].select(toks.alias("toks"))
+    d = with_toks(t["documents"]).select("toks")
     succ = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 1),
         lambda i: F.struct(
@@ -161,10 +158,9 @@ def discodb_unique_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "discodb_multiset_wordcount",
-    oracle="""
+    oracle=f"""
     SELECT tok AS key, COUNT(*) AS cnt
-    FROM (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS tok FROM documents)
-    WHERE tok <> ''
+    FROM (SELECT unnest({_TOKS_SQL}) AS tok FROM documents)
     GROUP BY tok
     ORDER BY cnt DESC, key ASC
     LIMIT 20

@@ -21,6 +21,7 @@ from disco_spark.functions.library import kvgroup, sum_combiner, sum_reduce
 from disco_spark.operators.classic import DiscoJob
 from disco_spark.registry import query
 from disco_spark.session import lazy_persist, load_tables
+from disco_spark.textops.analysis import _TOKS_SQL
 
 
 def _wc_map(entry, params):
@@ -30,10 +31,9 @@ def _wc_map(entry, params):
 
 @query(
     "classic_wordcount",
-    oracle="""
+    oracle=f"""
     SELECT tok AS key, COUNT(*) AS value
-    FROM (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS tok FROM documents)
-    WHERE tok <> ''
+    FROM (SELECT unnest({_TOKS_SQL}) AS tok FROM documents)
     GROUP BY tok
     """,
 )
@@ -238,10 +238,9 @@ def _filter_common_reduce(iter, out, params):
 
 @query(
     "classic_chain_common_words",
-    oracle="""
+    oracle=f"""
     SELECT tok AS key, COUNT(*) AS value
-    FROM (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS tok FROM documents)
-    WHERE tok <> ''
+    FROM (SELECT unnest({_TOKS_SQL}) AS tok FROM documents)
     GROUP BY tok
     HAVING COUNT(*) >= 100
     """,

@@ -30,10 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import lazy_persist, load_tables
-from disco_spark.textops.analysis import with_toks
-
-_TOKS_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
+from disco_spark.session import load_tables
+from disco_spark.textops.analysis import _TOKS_SQL, with_toks
 
 CM_DEPTH = 4  # hash rows
 CM_WIDTH = 2048  # counters per row
@@ -140,11 +138,7 @@ def sketch_countmin_heavy_hitters(
     shared with DuckDB, so every counter — not just the estimates —
     replays exactly."""
     t = load_tables(spark, sf_dir)
-    # the token explode feeds both the sketch and the audit's exact
-    # side; lazy_persist computes it once (released on next query entry)
-    tokens = lazy_persist(
-        with_toks(t["documents"]).select(F.explode("toks").alias("tok"))
-    )
+    tokens = with_toks(t["documents"]).select(F.explode("toks").alias("tok"))
     sketch = cm_sketch(tokens)
     exact = (
         tokens.groupBy("tok")

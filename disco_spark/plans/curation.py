@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from disco_spark.dedup.cc import LSH_CLUSTER_ORACLE
 from disco_spark.registry import ORACLES, query
 from disco_spark.sampling import _bucket_sql, train_val_test_split
-from disco_spark.session import lazy_persist, load_tables
+from disco_spark.session import load_tables
 from disco_spark.textops.analysis import _TOKS_SQL
 
 QUALITY_MIN = 0.5
@@ -64,8 +64,8 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """quality-filter -> keep cluster canonicals -> split -> account.
 
     Plan shape (the one that scales): everything derives from ONE
-    persisted tokenized scan of documents (tokenization is the dominant
-    per-row cost; quality, shingling, and token counting each needed it).
+    tokenized projection of documents (quality, shingling and token
+    counting all read its `toks` column).
     Quality is a column on that projection, not a join. "Keep cluster
     canonicals" is a left-anti join against only the NON-canonical
     members (comp != node — a set the size of the duplicates, tiny
@@ -77,7 +77,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from disco_spark.dedup.dedup import lsh_jaccard_pairs
     from disco_spark.textops.analysis import quality_column, with_toks
 
-    base = lazy_persist(with_toks(t["documents"]))
+    base = with_toks(t["documents"])
     # LSH-prefiltered near-dup pairs (bands propose, exact Jaccard
     # verifies) — the curation pass never pays the full inverted-shingle
     # pair join; see dedup_lsh_jaccard for the scale rationale

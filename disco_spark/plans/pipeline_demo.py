@@ -20,11 +20,11 @@ from disco_spark.plans.pipeline import (
 )
 from disco_spark.registry import query
 from disco_spark.session import load_tables
+from disco_spark.textops.analysis import _TOKS_SQL
 
-_WC_ORACLE = """
+_WC_ORACLE = f"""
     SELECT tok AS key, COUNT(*) AS value
-    FROM (SELECT unnest(regexp_split_to_array(text, '\\s+')) AS tok FROM documents)
-    WHERE tok <> ''
+    FROM (SELECT unnest({_TOKS_SQL}) AS tok FROM documents)
     GROUP BY tok
 """
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from disco_spark.registry import query
 from disco_spark.session import load_tables
+from disco_spark.textops.analysis import _TOKS_SQL, with_toks
 
 BUCKETS = 10_000
 
@@ -306,7 +307,6 @@ def split_leakage_audit(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         band_candidates,
         minhash_from_toks,
     )
-    from disco_spark.textops.analysis import with_toks
 
     t = load_tables(spark, sf_dir)
     pairs = band_candidates(
@@ -364,7 +364,6 @@ def split_cluster_aware(spark: "SparkSession", sf_dir: str) -> "DataFrame":
         band_candidates,
         minhash_from_toks,
     )
-    from disco_spark.textops.analysis import with_toks
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
@@ -491,14 +490,11 @@ def split_kfold_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 TOKEN_BUDGET_PER_SOURCE = 500
 
-_TOKS_LEN_SQL = "len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))"
-
-
 @query(
     "sample_token_budget_per_source",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, source, {_TOKS_LEN_SQL} AS n_toks FROM documents
+      SELECT doc_id, source, len({_TOKS_SQL}) AS n_toks FROM documents
     ),
     ranked AS (
       SELECT doc_id, source, n_toks,
@@ -547,12 +543,10 @@ def sample_token_budget_per_source(
     from disco_spark.operators.relational2 import global_prefix_sum
 
     t = load_tables(spark, sf_dir)
-    d = t["documents"].select(
+    d = with_toks(t["documents"]).select(
         "doc_id",
         "source",
-        F.size(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != F.lit(""))
-        ).alias("n_toks"),
+        F.size("toks").alias("n_toks"),
         hash_bucket(F.col("doc_id")).alias("_bkt"),
     )
     pref, _total = global_prefix_sum(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from disco_spark.registry import query
 from disco_spark.session import load_tables
+from disco_spark.textops.analysis import _normalized_sql, normalized
 
 _TUMBLING_ORACLE = """
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
@@ -237,9 +238,7 @@ def _incremental_dedup_transform(stream: DataFrame) -> DataFrame:
     passes it, so state size is bounded by the dedup horizon instead of
     growing with the corpus (the property plain dropDuplicates lacks)."""
     hashed = stream.select(
-        F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias(
-            "content_hash"
-        ),
+        F.md5(normalized(F.col("text"))).alias("content_hash"),
         F.timestamp_seconds(F.pmod(F.col("doc_id"), F.lit(600)) + F.lit(1_000_000)).alias(
             "ingest_ts"
         ),
@@ -253,8 +252,8 @@ def _incremental_dedup_transform(stream: DataFrame) -> DataFrame:
 
 @query(
     "dedup_incremental_watermark",
-    oracle="""
-    SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_hash
+    oracle=f"""
+    SELECT DISTINCT md5({_normalized_sql("text")}) AS content_hash
     FROM documents
     """,
 )

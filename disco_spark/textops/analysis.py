@@ -7,6 +7,21 @@ single scan with no shuffle.
 The only reference analog is the wordcount/grep family
 (README.md:17-30, examples/util/grep.py) — covered in classic_demo;
 these operators extend the same one-pass-scan shape.
+
+This module also holds the text primitives every text operator in the
+package composes, each defined once in Spark and once as DuckDB oracle
+SQL:
+
+- whitespace tokens: `with_toks` (a `toks` column) / `_TOKS_SQL`;
+- normalized text (lower-cased, whitespace runs collapsed to one
+  space, trimmed): `normalized(col)` / `_normalized_sql(expr)`;
+- token n-grams (k-token windows of `toks` joined by one space):
+  `ngrams_expr(k)` / `_ngrams_sql(k)`;
+- quality features (stopword ratio, alphabetic ratio, length prior;
+  a ratio over an empty document is NULL): `quality_features()` /
+  `_QUALITY_SQL`;
+- BPE pretokens (GPT-2 pre-tokenizer pieces, whitespace-only pieces
+  dropped): `bpe_pretokens()` / `_PRETOKENS_SQL`.
 """
 
 from __future__ import annotations
@@ -20,17 +35,15 @@ from disco_spark.session import load_tables
 # shared tokenization: non-empty runs after splitting on whitespace —
 # identical semantics in Spark (split + filter) and DuckDB
 # (regexp_split_to_array + list_filter), verified in tests.
-def _toks(col: str = "text") -> Column:
+def _toks() -> Column:
     # one parsed SQL expression instead of per-operator py4j round trips:
-    # Column construction is driver-side fixed cost paid on EVERY query
-    # invocation, measured at ~2.6 ms per py4j call on the bench host
-    # (OPTIMIZATION_r15.md "construction tax"). Same Catalyst expression
-    # as F.filter(F.split(col, r"\s+"), x -> x != ""), verified
-    # result-identical.
-    return F.expr(f"filter(split(`{col}`, '\\\\s+'), x -> x != '')")
+    # Column construction is a driver-side cost paid on every query
+    # invocation. Same Catalyst expression as the Column-API
+    # filter-of-split composition.
+    return F.expr("filter(split(`text`, '\\\\s+'), x -> x != '')")
 
 
-def with_toks(df: DataFrame, col: str = "text") -> DataFrame:
+def with_toks(df: DataFrame) -> DataFrame:
     """Project tokenization ONCE as a `toks` column. Expressions that
     reference tokens (especially inside higher-order-function lambdas,
     where Catalyst does no common-subexpression elimination) must use
@@ -41,10 +54,37 @@ def with_toks(df: DataFrame, col: str = "text") -> DataFrame:
     composition plans tokenize exactly once."""
     if "toks" in df.columns:
         return df
-    return df.withColumn("toks", _toks(col))
+    return df.withColumn("toks", _toks())
 
 
 _TOKS_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
+
+
+def normalized(text: Column) -> Column:
+    """`text` lower-cased, each whitespace run replaced by one space,
+    trimmed: the form exact and span dedup hash."""
+    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
+def _normalized_sql(expr: str) -> str:
+    return f"trim(regexp_replace(lower({expr}), '\\s+', ' ', 'g'))"
+
+
+def ngrams_expr(k: int) -> str:
+    """Spark SQL text of the k-token n-grams of the `toks` column, one
+    string per window with its tokens joined by one space. Parsed in a
+    single py4j call. Rows with fewer than k tokens must be filtered
+    out first: their window sequence runs backwards."""
+    cat = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(k))
+    return f"transform(sequence(0, size(toks) - {k}), i -> concat_ws(' ', {cat}))"
+
+
+def _ngrams_sql(k: int) -> str:
+    """DuckDB list of the k-token n-grams of `toks` (empty when the
+    document has fewer than k tokens)."""
+    cat = ", ".join(["toks[i]"] + [f"toks[i + {j}]" for j in range(1, k)])
+    return f"list_transform(generate_series(1, len(toks) - {k - 1}), i -> concat_ws(' ', {cat}))"
+
 
 # language-ID stopword profiles (tiny n-gram/stopword heuristic; order of
 # comparison = fixed precedence en > de > fr > es on ties)
@@ -64,6 +104,29 @@ def _hits(toks: Column, words: list[str]) -> Column:
 def _hits_sql(words: list[str]) -> str:
     lst = ", ".join(f"'{w}'" for w in words)
     return f"len(list_filter(toks, t -> list_contains([{lst}], t)))"
+
+
+def quality_features() -> tuple[Column, Column, Column]:
+    """(stopword ratio, alphabetic ratio, length prior) over the `toks`
+    and `text` columns: the cheap pre-filter features the quality score
+    and the logistic classifier share. A ratio over an empty document is
+    NULL, as in DuckDB, rather than an ANSI DIVIDE_BY_ZERO."""
+    text = F.col("text")
+    stop = F.try_divide(_hits(F.col("toks"), _PROFILES["en"]).cast("double"), F.size("toks"))
+    alpha = F.try_divide(
+        F.length(F.regexp_replace(text, "[^a-z ]", "")).cast("double"), F.length(text)
+    )
+    length = F.least(F.length(text).cast("double") / 500, F.lit(1.0))
+    return stop, alpha, length
+
+
+# the same three features as columns f_stop, f_alpha, f_len over `toks`
+# and `text`
+_QUALITY_SQL = f"""
+      CAST({_hits_sql(_PROFILES["en"])} AS DOUBLE) / len(toks) AS f_stop,
+      CAST(length(regexp_replace(text, '[^a-z ]', '', 'g')) AS DOUBLE)
+        / length(text) AS f_alpha,
+      LEAST(CAST(length(text) AS DOUBLE) / 500, 1.0) AS f_len"""
 
 
 @query(
@@ -90,8 +153,10 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count(F.col("text"), F.lit("[a-z0-9]+")).alias("n_words_re"),
         F.length("text").alias("n_chars"),
         F.round(
-            F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x)).cast("double")
-            / F.size(toks),
+            F.try_divide(
+                F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x)).cast("double"),
+                F.size(toks),
+            ),
             6,
         ).alias("avg_token_len"),
     )
@@ -100,15 +165,13 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_quality_score",
     oracle=f"""
-    WITH d AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents)
+    WITH d AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
+    f AS (SELECT doc_id, {_QUALITY_SQL} FROM d)
     SELECT doc_id,
-           ROUND(CAST({_hits_sql(_PROFILES["en"])} AS DOUBLE) / len(toks), 6) AS stopword_ratio,
-           ROUND(CAST(length(regexp_replace(text, '[^a-z ]', '', 'g')) AS DOUBLE)
-                 / length(text), 6) AS alpha_ratio,
-           ROUND(0.4 * (CAST({_hits_sql(_PROFILES["en"])} AS DOUBLE) / len(toks))
-               + 0.4 * (CAST(length(regexp_replace(text, '[^a-z ]', '', 'g')) AS DOUBLE) / length(text))
-               + 0.2 * LEAST(CAST(length(text) AS DOUBLE) / 500, 1.0), 6) AS quality
-    FROM d
+           ROUND(f_stop, 6) AS stopword_ratio,
+           ROUND(f_alpha, 6) AS alpha_ratio,
+           ROUND(0.4 * f_stop + 0.4 * f_alpha + 0.2 * f_len, 6) AS quality
+    FROM f
     """,
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,32 +185,19 @@ def quality_column() -> Column:
     """The composite quality score as a Column expression (requires
     `toks` and `text` in scope) — composition plans add it to their own
     projection instead of joining a separate quality DataFrame."""
-    toks = F.col("toks")
-    stop_ratio = _hits(toks, _PROFILES["en"]).cast("double") / F.size(toks)
-    alpha_ratio = (
-        F.length(F.regexp_replace(F.col("text"), "[^a-z ]", "")).cast("double")
-        / F.length("text")
-    )
-    length_prior = F.least(F.length("text").cast("double") / 500, F.lit(1.0))
-    return F.round(0.4 * stop_ratio + 0.4 * alpha_ratio + 0.2 * length_prior, 6)
+    stop, alpha, length = quality_features()
+    return F.round(0.4 * stop + 0.4 * alpha + 0.2 * length, 6)
 
 
 def quality_score_df(docs: DataFrame) -> DataFrame:
     """Quality columns over any documents DataFrame (tokenized or not) —
     the composable core of text_quality_score, shared by curation."""
-    toks = F.col("toks")
-    stop_ratio = _hits(toks, _PROFILES["en"]).cast("double") / F.size(toks)
-    alpha_ratio = (
-        F.length(F.regexp_replace(F.col("text"), "[^a-z ]", "")).cast("double")
-        / F.length("text")
-    )
-    length_prior = F.least(F.length("text").cast("double") / 500, F.lit(1.0))
-    base = docs if "toks" in docs.columns else with_toks(docs)
-    return base.select(
+    stop, alpha, _ = quality_features()
+    return with_toks(docs).select(
         "doc_id",
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(0.4 * stop_ratio + 0.4 * alpha_ratio + 0.2 * length_prior, 6).alias("quality"),
+        F.round(stop, 6).alias("stopword_ratio"),
+        F.round(alpha, 6).alias("alpha_ratio"),
+        quality_column().alias("quality"),
     )
 
 
@@ -187,12 +237,12 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
     sh AS (
-      SELECT doc_id, min(md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2]))) AS fp_shingle_min
-      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i FROM d)
+      SELECT doc_id, min(md5(g)) AS fp_shingle_min
+      FROM (SELECT doc_id, unnest({_ngrams_sql(3)}) AS g FROM d)
       GROUP BY doc_id
     )
     SELECT d.doc_id,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp_norm,
+           md5({_normalized_sql("text")}) AS fp_norm,
            sh.fp_shingle_min
     FROM d LEFT JOIN sh USING (doc_id)
     """,
@@ -202,26 +252,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     winnowing-style minimum over 3-token shingle hashes (the building
     block minhash dedup reuses)."""
     t = load_tables(spark, sf_dir)
-    toks = F.col("toks")
     shingle_min = F.when(
-        F.size(toks) >= 3,
-        F.array_min(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.md5(
-                    F.concat_ws(
-                        " ",
-                        F.element_at(toks, i + 1),
-                        F.element_at(toks, i + 2),
-                        F.element_at(toks, i + 3),
-                    )
-                ),
-            )
-        ),
+        F.size("toks") >= 3, F.array_min(F.transform(F.expr(ngrams_expr(3)), F.md5))
     )
     return with_toks(t["documents"]).select(
         "doc_id",
-        F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias("fp_norm"),
+        F.md5(normalized(F.col("text"))).alias("fp_norm"),
         shingle_min.alias("fp_shingle_min"),
     )
 
@@ -231,9 +267,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
     g AS (
-      SELECT doc_id, toks,
-             list_transform(generate_series(1, len(toks) - 2),
-                            i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) AS grams
+      SELECT doc_id, toks, {_ngrams_sql(3)} AS grams
       FROM t WHERE len(toks) >= 3
     )
     SELECT doc_id,
@@ -252,18 +286,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     d = with_toks(t["documents"]).filter(F.size("toks") >= 3)
     # grams as a real column: HOF lambdas get no CSE (see with_toks note)
-    d = d.withColumn(
-        "grams",
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("toks"), i),
-                F.element_at(F.col("toks"), i + 1),
-                F.element_at(F.col("toks"), i + 2),
-            ),
-        ),
-    )
+    d = d.withColumn("grams", F.expr(ngrams_expr(3)))
     ratio = lambda col: F.round(  # noqa: E731
         1.0 - F.size(F.array_distinct(F.col(col))).cast("double") / F.size(F.col(col)), 6
     )
@@ -313,16 +336,28 @@ def corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # final word. Pre-token count is the standard cheap estimator for BPE
 # token count (every BPE token boundary is a pre-token boundary).
 BPE_PRETOKEN_RE = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
-_BPE_SQL = BPE_PRETOKEN_RE.replace("'", "''")  # SQL string-literal escaping
+
+
+def bpe_pretokens() -> Column:
+    """The BPE pretokens of `text`: its pre-tokenizer pieces, whitespace-
+    only pieces dropped."""
+    return F.filter(
+        F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RE), 0),
+        lambda x: ~x.rlike(r"^\s+$"),
+    )
+
+
+_PRETOKENS_SQL = (
+    "list_filter(regexp_extract_all(text, '{}'), t -> NOT regexp_matches(t, '^\\s+$'))"
+    .format(BPE_PRETOKEN_RE.replace("'", "''"))  # SQL string-literal escaping
+)
 
 
 @query(
     "text_bpe_pretokens",
     oracle=f"""
     WITH p AS (
-      SELECT doc_id, length(text) AS n_chars,
-             list_filter(regexp_extract_all(text, '{_BPE_SQL}'),
-                         t -> NOT regexp_matches(t, '^\\s+$')) AS pre
+      SELECT doc_id, length(text) AS n_chars, {_PRETOKENS_SQL} AS pre
       FROM documents
     )
     SELECT doc_id,
@@ -339,11 +374,9 @@ def text_bpe_pretokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretokens dropped. chars_per_token is the compression-ratio signal
     data pipelines use for cost estimates and quality filters."""
     t = load_tables(spark, sf_dir)
-    pre = F.filter(
-        F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RE), 0),
-        lambda x: ~x.rlike(r"^\s+$"),
+    d = t["documents"].select(
+        "doc_id", F.length("text").alias("n_chars"), bpe_pretokens().alias("pre")
     )
-    d = t["documents"].select("doc_id", F.length("text").alias("n_chars"), pre.alias("pre"))
     n = F.size("pre")
     return d.select(
         "doc_id",
@@ -441,14 +474,7 @@ _LOGIT_W = {"stop": 2.0, "alpha": 3.0, "len": 1.0, "bias": -2.5}
     "text_quality_logistic",
     oracle=f"""
     WITH d AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
-    f AS (
-      SELECT doc_id,
-             CAST({_hits_sql(_PROFILES["en"])} AS DOUBLE) / len(toks) AS f_stop,
-             CAST(length(regexp_replace(text, '[^a-z ]', '', 'g')) AS DOUBLE)
-               / length(text) AS f_alpha,
-             LEAST(CAST(length(text) AS DOUBLE) / 500, 1.0) AS f_len
-      FROM d WHERE len(toks) > 0
-    )
+    f AS (SELECT doc_id, {_QUALITY_SQL} FROM d WHERE len(toks) > 0)
     SELECT doc_id,
            ROUND(1.0 / (1.0 + EXP(-({_LOGIT_W["stop"]} * f_stop
                                     + {_LOGIT_W["alpha"]} * f_alpha
@@ -468,12 +494,7 @@ def text_quality_logistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is on the LOGIT so `keep` is float-rounding-proof)."""
     t = load_tables(spark, sf_dir)
     d = with_toks(t["documents"]).filter(F.size("toks") > 0)
-    f_stop = _hits(F.col("toks"), _PROFILES["en"]).cast("double") / F.size("toks")
-    f_alpha = (
-        F.length(F.regexp_replace(F.col("text"), "[^a-z ]", "")).cast("double")
-        / F.length("text")
-    )
-    f_len = F.least(F.length("text").cast("double") / 500, F.lit(1.0))
+    f_stop, f_alpha, f_len = quality_features()
     logit = (
         F.lit(_LOGIT_W["stop"]) * f_stop
         + F.lit(_LOGIT_W["alpha"]) * f_alpha
@@ -770,9 +791,6 @@ def text_js_divergence_sources(
     c = toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    from disco_spark.session import lazy_persist
-
-    c = lazy_persist(c)
     tot = c.groupBy("source").agg(F.sum("c").cast("bigint").alias("tot"))
     probs = c.join(tot, "source").select(
         "source", "w", (F.col("c").cast("double") / F.col("tot")).alias("p")
@@ -937,9 +955,7 @@ def quality_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH p AS (
       SELECT lang,
              length(text) AS n_chars,
-             len(list_filter(regexp_extract_all(text, '{_BPE_SQL}'),
-                             t -> NOT regexp_matches(t, '^\\s+$')))
-               AS n_pre,
+             len({_PRETOKENS_SQL}) AS n_pre,
              len({_TOKS_SQL}) AS n_words
       FROM documents
     )
@@ -968,14 +984,10 @@ def text_tokenizer_fertility_by_lang(
     per lang. Integer sums are exact, so both engines' ratios divide
     identical numbers."""
     t = load_tables(spark, sf_dir)
-    pre = F.filter(
-        F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RE), 0),
-        lambda x: ~x.rlike(r"^\s+$"),
-    )
     d = with_toks(t["documents"]).select(
         "lang",
         F.length("text").alias("n_chars"),
-        F.size(pre).alias("n_pre"),
+        F.size(bpe_pretokens()).alias("n_pre"),
         F.size("toks").alias("n_words"),
     )
     return d.groupBy("lang").agg(

@@ -29,10 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from disco_spark.dedup.dedup import _TOKS_SQL
 from disco_spark.registry import query
 from disco_spark.session import load_tables
-from disco_spark.textops.analysis import with_toks
+from disco_spark.textops.analysis import _TOKS_SQL, with_toks
 
 N_BUCKETS = 10
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from disco_spark.registry import query
 from disco_spark.sampling import TEST_HI, VAL_HI, _bucket_sql, hash_bucket
 from disco_spark.session import load_tables
-from disco_spark.textops.analysis import _TOKS_SQL, with_toks
+from disco_spark.textops.analysis import _TOKS_SQL, _ngrams_sql, ngrams_expr, with_toks
 
 TOP_TERMS_PER_DOC = 3
 VOCAB_SIZE = 500
@@ -189,12 +189,7 @@ _BIGRAM_TF_SQL = f"""
     btoks AS (
       SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
     ),
-    bg AS (
-      SELECT doc_id, concat_ws(' ', toks[i], toks[i+1]) AS bigram
-      FROM (SELECT doc_id, toks,
-                   unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM btoks WHERE len(toks) >= 2)
-    ),
+    bg AS (SELECT doc_id, unnest({_ngrams_sql(2)}) AS bigram FROM btoks),
     btf AS (SELECT doc_id, bigram, COUNT(*) AS tf FROM bg GROUP BY 1, 2)"""
 
 
@@ -249,17 +244,10 @@ def dedup_tfidf_cosine_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere in the plan; candidate volume is sum_t df_t^2 over pruned
     terms, the rare-term-blocking bound."""
     t = load_tables(spark, sf_dir)
-    toks = F.col("toks")
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2)
-        ),
-    )
     tf = (
         with_toks(t["documents"])
-        .filter(F.size(toks) >= 2)
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
+        .filter(F.size("toks") >= 2)
+        .selectExpr("doc_id", f"explode({ngrams_expr(2)}) AS bigram")
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -278,9 +266,6 @@ def dedup_tfidf_cosine_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_docs))
         .select("doc_id", "bigram", (F.col("tf") * idf6).alias("w"))
     )
-    from disco_spark.session import lazy_persist
-
-    w = lazy_persist(w)
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("w").cast("decimal(38,0)") * F.col("w")).alias("n2")
     )

@@ -40,7 +40,7 @@ from disco_spark.dedup.dedup import _SHINGLES_SQL, shingle_df
 from disco_spark.registry import query
 from disco_spark.sampling import TEST_HI, VAL_HI, _bucket_sql, hash_bucket
 from disco_spark.session import lazy_persist, load_tables
-from disco_spark.textops.analysis import _TOKS_SQL, with_toks
+from disco_spark.textops.analysis import _TOKS_SQL, _ngrams_sql, ngrams_expr, with_toks
 
 TOP_K = 20
 # shared split boundaries (sampling.py is the single definition site):
@@ -53,11 +53,7 @@ _TRAIN_LO = VAL_HI
     "vocab_top_bigrams",
     oracle=f"""
     WITH toks AS (SELECT {_TOKS_SQL} AS toks FROM documents),
-    bigrams AS (
-      SELECT concat_ws(' ', toks[i], toks[i+1]) AS bigram
-      FROM (SELECT toks, unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM toks WHERE len(toks) >= 2)
-    )
+    bigrams AS (SELECT unnest({_ngrams_sql(2)}) AS bigram FROM toks)
     SELECT bigram, COUNT(*) AS n FROM bigrams
     GROUP BY bigram ORDER BY n DESC, bigram LIMIT {TOP_K}
     """,
@@ -66,19 +62,10 @@ def vocab_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{TOP_K} most frequent token bigrams corpus-wide (total order:
     count desc, then bigram — deterministic across engines)."""
     t = load_tables(spark, sf_dir)
-    toks = F.col("toks")
-    # toks is a projected column (never the raw split expression) — no
-    # CSE inside higher-order lambdas, see analysis.with_toks.
-    bigrams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2)
-        ),
-    )
     return (
         with_toks(t["documents"])
-        .filter(F.size(toks) >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
+        .filter(F.size("toks") >= 2)
+        .selectExpr(f"explode({ngrams_expr(2)}) AS bigram")
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "bigram")
@@ -365,12 +352,8 @@ def contamination_train_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "streaming_contamination_screen",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {{toks}} AS toks FROM documents),
-    occ AS (
-      SELECT doc_id, concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-      FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i
-            FROM toks WHERE len(toks) >= 3)
-    ),
+    WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+    occ AS (SELECT doc_id, unnest({_ngrams_sql(3)}) AS shingle FROM toks),
     labeled AS (
       SELECT doc_id, shingle, {_bucket_sql("doc_id")} AS b FROM occ
     ),
@@ -379,7 +362,7 @@ def contamination_train_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT t.doc_id, COUNT(*) AS n_test_hits
     FROM train_occ t JOIN test_sh USING (shingle)
     GROUP BY t.doc_id
-    """.format(toks=_TOKS_SQL),
+    """,
 )
 def streaming_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Screen each INCOMING document drop for benchmark contamination as
@@ -479,7 +462,7 @@ KL_VOCAB = 500
     # DECIMAL(28,15).
     oracle=f"""
     WITH tok AS (
-      SELECT source, unnest({{toks}}) AS term FROM documents
+      SELECT source, unnest({_TOKS_SQL}) AS term FROM documents
     ),
     vocab AS (
       SELECT term, cnt FROM (
@@ -517,7 +500,7 @@ KL_VOCAB = 500
     SELECT source,
            ROUND(CAST(SUM(kl_term) AS DOUBLE), 6) AS kl_divergence
     FROM terms GROUP BY source
-    """.replace("{toks}", _TOKS_SQL),
+    """,
 )
 def text_kl_unigram_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-distribution drift per source: KL(source || corpus) over
@@ -528,8 +511,6 @@ def text_kl_unigram_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The vocab is a bounded exact TakeOrdered broadcast onto the token
     scan; the (source x vocab) grid is |sources| * 500 cells; KL terms
     fold as DECIMAL(28,15) so the statistic is shuffle-order-free."""
-    from disco_spark.textops.analysis import with_toks
-
     t = load_tables(spark, sf_dir)
     tok = with_toks(t["documents"]).select(
         "source", F.explode("toks").alias("term")
@@ -631,7 +612,6 @@ def vocab_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_w"))
     )
-    uni = lazy_persist(uni)
     u = uni.agg(F.sum("n_w").cast("bigint").alias("u_tot"))
     pairs = F.transform(
         F.sequence(F.lit(0), F.size(toks) - 2),
@@ -768,7 +748,6 @@ def vocab_keyness_test_vs_train(
         F.sum("is_test").cast("bigint").alias("a"),
         F.sum(F.lit(1) - F.col("is_test")).cast("bigint").alias("b"),
     )
-    c = lazy_persist(c)
     n = c.agg(
         F.sum("a").cast("bigint").alias("n1"),
         F.sum("b").cast("bigint").alias("n2"),

@@ -6,8 +6,6 @@ drop an exchange in either."""
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 
 from disco_spark.session import load_tables
@@ -20,17 +18,7 @@ from disco_spark.similarity.index_store import (
 from disco_spark.similarity.pq import ivfpq_search
 
 from tests.conftest import SF_SMOKE
-
-
-def _exchanges(df) -> tuple[int, int]:
-    """(keyed shuffle Exchange nodes, BroadcastExchange nodes) in the
-    executed plan. Round-robin exchanges are left out: their count
-    follows the host's core count, not the plan's shape."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return (
-        len(re.findall(r"\bExchange (?!RoundRobinPartitioning)", plan)),
-        len(re.findall(r"\bBroadcastExchange\b", plan)),
-    )
+from tests.plan_pin import exchanges
 
 
 def test_ivfpq_serve_exchanges(spark, tmp_path):
@@ -47,11 +35,11 @@ def test_ivfpq_serve_exchanges(spark, tmp_path):
     # shortlist window; the rerank reuses the shortlist's partitioning.
     # Broadcasts: the centroids under each probe, the probe rows and the
     # raw vectors of the rerank.
-    assert _exchanges(df) == (3, 4)
+    assert exchanges(df) == (3, 4)
 
 
 def test_knn_graph_exchanges(spark):
     e = load_tables(spark, SF_SMOKE)["embeddings"]
     # centroid agg (two), probe window, top-k window; broadcast
     # centroids and members
-    assert _exchanges(knn_graph(e)) == (4, 2)
+    assert exchanges(knn_graph(e)) == (4, 2)

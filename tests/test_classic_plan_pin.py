@@ -14,16 +14,14 @@ from disco_spark.session import load_tables
 from perfbench import jobs
 
 from tests.conftest import SF_SMOKE
+from tests.plan_pin import KEYED_EXCHANGE, executed_plan
 
 
 def _shape(df) -> tuple[int, int]:
-    """(keyed shuffle Exchange nodes, Python nodes) in the executed plan.
-    Round-robin exchanges are left out: the map input's fan-out adds
-    them only when the host has more cores than the input has splits,
-    so their count follows the host."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    """(keyed shuffle Exchange nodes, Python nodes) in the executed plan."""
+    plan = executed_plan(df)
     return (
-        len(re.findall(r"\bExchange (?!RoundRobinPartitioning)", plan)),
+        len(KEYED_EXCHANGE.findall(plan)),
         len(re.findall(r"\b(?:MapInPandas|ArrowEvalPython)\b", plan)),
     )
 

@@ -2,8 +2,8 @@
 headline harness (bench.py) or its rehearsal tooling, every script left
 in tools/ still imports, the classic MapReduce layer has no executor of
 its own, only disco_spark/store.py moves files into place or writes a
-manifest, and the graph modules orient edges in one place. Runs no
-Spark."""
+manifest, the graph modules orient edges in one place, and each text
+primitive is written once per engine. Runs no Spark."""
 
 from __future__ import annotations
 
@@ -175,3 +175,66 @@ def test_orientation_guard_sees_what_it_forbids():
         "SELECT a AS node FROM tris UNION ALL SELECT b FROM tris\n"
     )
     assert _orientations(src) == (2, 2, 1)
+
+
+# Each shared text primitive is written once in Spark and once in oracle
+# SQL, in textops/analysis.py; every other module composes those. The
+# patterns match source with whitespace runs collapsed to one space.
+TEXT_PRIMITIVES = {
+    "whitespace split (Spark)": re.compile(r"\bsplit\([^()]*(?:\([^()]*\))?[^()]*\\+s\+"),
+    "whitespace split (SQL)": re.compile(r"regexp_split_to_array\( ?text ?, ?'\\+s\+'"),
+    "_TOKS_SQL definition": re.compile(r"\b_TOKS_SQL ?= ?\""),
+    "normalizer (Spark)": re.compile(r"F\.regexp_replace\( ?F\.lower\("),
+    "normalizer (SQL)": re.compile(r"\bregexp_replace\( ?lower\("),
+    "inline n-grams (Spark)": re.compile(r"concat_ws\( ?[\"'] [\"'] ?, ?(?:F\.)?element_at\("),
+    "inline n-grams (SQL)": re.compile(r"concat_ws\( ?' ' ?, ?toks\[i\]"),
+    "alphabetic ratio (Spark)": re.compile(r'"\[\^a-z \]"'),
+    "alphabetic ratio (SQL)": re.compile(r"'\[\^a-z \]'"),
+    "BPE pretokens (Spark)": re.compile(r'rlike\( ?r"\^\\s\+\$"\)'),
+    "BPE pretokens (SQL)": re.compile(r"regexp_matches\( ?t ?, ?'\^\\+s\+\$'\)"),
+}
+
+
+def _text_copies(src: str) -> dict[str, int]:
+    """How often each text-primitive pattern occurs in ``src``."""
+    flat = re.sub(r"\s+", " ", src)
+    return {name: len(pat.findall(flat)) for name, pat in TEXT_PRIMITIVES.items()}
+
+
+def test_text_primitives_are_written_once_per_engine():
+    pkg = os.path.join(ROOT, "disco_spark")
+    found = {name: {} for name in TEXT_PRIMITIVES}
+    for f in _tracked("disco_spark/*.py"):
+        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+            for name, n in _text_copies(fh.read()).items():
+                if n:
+                    found[name][os.path.relpath(os.path.join(ROOT, f), pkg)] = n
+    once = {"textops/analysis.py": 1}
+    want = {name: once for name in TEXT_PRIMITIVES}
+    # InvertedIndex.from_tokens keeps its own split: the index build
+    # path reads a caller-named text column
+    want["whitespace split (Spark)"] = {**once, "index/discodb.py": 1}
+    want["inline n-grams (Spark)"] = want["inline n-grams (SQL)"] = {}
+    assert found == want
+
+
+def test_text_primitive_guard_sees_what_it_forbids():
+    src = (
+        'F.filter(F.split(F.col("text"), r"\\s+"), lambda x: x != F.lit(""))\n'
+        'F.expr("filter(split(text, \'\\\\\\\\s+\'), x -> x != \'\')")\n'
+        'F.explode(F.split(F.col("text"), r"[.!?]+"))\n'
+        "unnest(regexp_split_to_array(text, '\\\\s+')) AS tok\n"
+        "_TOKS_SQL = \"list_filter(...)\"\n"
+        'F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\\s+", " ")))\n'
+        "md5(trim(regexp_replace(lower(text), '\\\\s+', ' ', 'g')))\n"
+        'F.concat_ws(\n    " ",\n    F.element_at(toks, i + 1),\n    F.element_at(toks, i + 2))\n'
+        "concat_ws(' ', toks[i], toks[i+1]) AS bigram\n"
+        "concat_ws(' ', toks[1], toks[2]) AS prefix\n"
+        'F.length(F.regexp_replace(F.col("text"), "[^a-z ]", ""))\n'
+        "length(regexp_replace(text, '[^a-z ]', '', 'g'))\n"
+        'lambda x: ~x.rlike(r"^\\s+$")\n'
+        "t -> NOT regexp_matches(t, '^\\\\s+$')\n"
+    )
+    assert _text_copies(src) == dict.fromkeys(TEXT_PRIMITIVES, 1) | {
+        "whitespace split (Spark)": 2
+    }
